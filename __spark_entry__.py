@@ -1104,7 +1104,10 @@ def q_incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-shot pipeline row (near_dup_clusters); the truth is a property
     of the corpus, not of the execution strategy. Docs shorter than the
     shingle width are excluded exactly as the pipeline's normalize stage
-    excludes them (the oracle's `ok` CTE)."""
+    excludes them (the oracle's `ok` CTE). The temporary state dir is
+    deleted only on a `local[...]` master; on a cluster it is left in
+    place, because the result's localCheckpoint may be recomputed from
+    it."""
     import tempfile
 
     from genome_deduplication_spark.operators.incremental import dedup_increment
@@ -1131,9 +1134,13 @@ def q_incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize before deleting the state dir (the lazy plan reads the
     # state parquet): fixes the per-run /tmp litter (VERDICT r5 #6)
     out = out.localCheckpoint(eager=True)
-    import shutil
+    if spark.sparkContext.master.startswith("local"):
+        # a localCheckpoint is not reliable storage: on a cluster a lost
+        # executor recomputes its blocks from the state parquet, so the
+        # dir is deleted only when the executors run in this process
+        import shutil
 
-    shutil.rmtree(state, ignore_errors=True)
+        shutil.rmtree(state, ignore_errors=True)
     return out
 
 

@@ -9,7 +9,8 @@ Algorithm: alternating large-star / small-star (Kiveris et al., "Connected
 Components in MapReduce and Beyond", SoCC 2014) expressed as DataFrame
 joins; converges in O(log^2 n) rounds on adversarial chains, ~3-5 rounds on
 real dup clusters. Each round is two shuffles; lineage is cut with
-localCheckpoint every round so the plan does not grow (SURVEY.md §4 item 2).
+localCheckpoint every round so the plan does not grow (SURVEY.md §4 item 2),
+and the convergence check is observed on that same checkpoint job.
 
 IDs are mapped to a 128-bit BINARY(16) key (unhex'd md5) for cheap
 fixed-width shuffles without birthday collisions at 10^12 ids; the final
@@ -21,7 +22,7 @@ orderable node type (int64 or struct).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -61,6 +62,25 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
+def _checkpoint(edges: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
+    """Eager localCheckpoint of an edge set plus its (count, hash-sum)
+    fingerprint, observed on the checkpoint job itself (no second job).
+    pmod keeps each summand < 1e9 so the sum stays in int64 under ANSI
+    mode up to ~9e9 edges; xxhash64 hashes struct columns natively, so
+    this works for int64, BINARY(16) and struct node ids."""
+    obs = Observation()
+    cut = edges.observe(
+        obs,
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(
+            F.sum(F.pmod(F.xxhash64("src", "dst"), F.lit(1_000_000_007))),
+            F.lit(0),
+        ).alias("h"),
+    ).localCheckpoint(eager=True)
+    fp = obs.get
+    return cut, (int(fp["n"]), int(fp["h"]))
+
+
 def connected_components(
     edges: DataFrame, max_iter: int = 20
 ) -> DataFrame:
@@ -74,21 +94,6 @@ def connected_components(
         .where(F.col("src") != F.col("dst"))
         .distinct()
     )
-    def _fingerprint(df: DataFrame) -> tuple[int, int]:
-        # one cheap job instead of two exceptAll passes: (count, hash-sum)
-        # pmod keeps each summand < 1e9 so the sum stays in int64 under ANSI
-        # mode up to ~9e9 edges
-        # xxhash64 hashes struct columns natively, so this works for both
-        # int64 and struct<hi,lo> node ids
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.sum(F.pmod(F.xxhash64("src", "dst"), F.lit(1_000_000_007))),
-                F.lit(0),
-            ).alias("h"),
-        ).collect()[0]
-        return int(row["n"]), int(row["h"])
-
     # Per-round materialization is EAGER. The lazy-checkpoint +
     # fingerprint-materializes design (rounds 1-3) turned out not to
     # persist under AQE: the fingerprint's adaptive plan computes the
@@ -96,9 +101,10 @@ def connected_components(
     # the full lineage back to the last real materialization (event-log
     # profile, BENCH.md round 4: CC rounds 2-3 cost 18.6s/12.4s on a 160k
     # corpus whose live edge set was ~5k rows; eager rounds cost ~0.2s).
-    # Eager localCheckpoint is one extra tiny job per round but makes each
-    # round's input genuinely persisted, which is what the O(log n)-rounds
-    # cost model assumes.
+    # The convergence fingerprint rides on the checkpoint job itself
+    # (_checkpoint), so a round is one job and each round's input is
+    # genuinely persisted, which is what the O(log n)-rounds cost model
+    # assumes.
     # Round-6 additions to the eager-localCheckpoint loop (the loop body
     # itself is unchanged — persist()-based variants were measured 8-20x
     # slower here; plan-level caches were not reliably reused across the
@@ -112,11 +118,9 @@ def connected_components(
     #    fixed point of small∘large — every pure pair/star graph, i.e.
     #    typical near-dup groups — converges after ONE round instead of
     #    needing a second full round to notice (fp(round1) == fp(cur0)).
-    cur = cur.localCheckpoint(eager=True)
-    prev_fp = _fingerprint(cur)
+    cur, prev_fp = _checkpoint(cur)
     for _ in range(max_iter):
-        cur = _small_star(_large_star(cur)).localCheckpoint(eager=True)
-        fp = _fingerprint(cur)
+        cur, fp = _checkpoint(_small_star(_large_star(cur)))
         if fp == prev_fp:
             break
         prev_fp = fp

@@ -122,9 +122,10 @@ def stratified_sample_exact(
     are ranked with a partitioned window. Exactness is verified
     (per-stratum selected counts, one bounded collect) and the threshold
     escalates x4 on deficiency — astronomically rare with uniform keys,
-    and guaranteed to terminate because min(1.0, ...) eventually admits
-    every [0, 1) key. Rows with NULL in any stratum column are excluded
-    (documented; an equality join drops them).
+    and bounded: once min(1.0, ...) admits every [0, 1) key of every
+    stratum, a still-deficient pass raises instead of escalating. Rows
+    with NULL in any stratum column are excluded (documented; an
+    equality join drops them).
     """
     u = (order_col if order_col is not None else keyed_uniform(seed, F.col(key_col)))
     dfu = df.withColumn("_u", u)
@@ -136,32 +137,39 @@ def stratified_sample_exact(
     spark = df.sparkSession
     if not counts:  # empty input / all-NULL strata: empty result, same schema
         return dfu.withColumn("_rk", F.lit(1)).where(F.lit(False)).drop("_u")
+    types = {f.name: f.dataType for f in df.schema.fields}
     factor = 8.0
     while True:
+        thresholds = {
+            s: min(1.0, factor * n_per / cnt) for s, cnt in counts.items()
+        }
         # Threshold lookup. For bounded strata counts the thresholds are
         # embedded as a literal MAP expression — zero extra jobs, no
         # createDataFrame round-trip, no join (the driver-side
         # createDataFrame + broadcast-join pair cost two plan subtrees and
         # a broadcast exchange per attempt; the map lookup is a row-local
-        # projection). Very-high-cardinality strata fall back to the
+        # projection). Map keys are structs of literals cast back to the
+        # strata columns' own types and probed with the same struct of
+        # columns, so bool/float/date strata match exactly (a Python
+        # str(v) key differs from Spark's cast-to-string: "True" vs
+        # "true"). Very-high-cardinality strata fall back to the
         # broadcast join (a giant literal map would bloat the plan).
         if len(counts) <= 4096:
-            sep = "\x00"  # never occurs in real stratum values
             entries = []
-            for s, cnt in counts.items():
-                entries.append(F.lit(sep.join(str(v) for v in s)))
-                entries.append(F.lit(min(1.0, factor * n_per / cnt)))
+            for s, t in thresholds.items():
+                lits = [
+                    F.lit(v).cast(types[c]).alias(c) for c, v in zip(strata_cols, s)
+                ]
+                entries += [F.struct(*lits), F.lit(t)]
             thr_map = F.create_map(*entries)
-            key = F.concat_ws(
-                sep, *[F.col(c).cast("string") for c in strata_cols]
-            )
+            key = F.struct(*[F.col(c) for c in strata_cols])
             nn = F.lit(True)
             for c in strata_cols:  # join semantics: NULL strata excluded
                 nn = nn & F.col(c).isNotNull()
             sel = dfu.where(nn & (F.col("_u") <= thr_map[key]))
         else:
             thr = spark.createDataFrame(
-                [(*s, min(1.0, factor * n_per / cnt)) for s, cnt in counts.items()],
+                [(*s, t) for s, t in thresholds.items()],
                 [*strata_cols, "_thr"],
             )
             sel = dfu.join(F.broadcast(thr), strata_cols).where(
@@ -179,4 +187,11 @@ def stratified_sample_exact(
         }
         if all(got.get(s, 0) >= min(n_per, c) for s, c in counts.items()):
             return picked.drop("_u", "_thr")
+        if all(t >= 1.0 for t in thresholds.values()):
+            # every stratum was fully admitted and still came up short:
+            # escalating further cannot help, so stop instead of looping
+            raise RuntimeError(
+                "stratified_sample_exact: a full-admission pass missed "
+                "strata rows; order_col must lie in [0, 1)"
+            )
         factor *= 4

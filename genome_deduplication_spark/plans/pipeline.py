@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -47,6 +48,21 @@ from genome_deduplication_spark.operators.suffix_array import (
 )
 from genome_deduplication_spark.operators.verify import verify_pairs
 from genome_deduplication_spark.sources.checkpoint import RunContext
+
+
+def _concurrently(spark, *calls):
+    """Run independent ``(fn, *args)`` materializations on a thread pool.
+    Each call carries the caller's Spark local properties (job group,
+    description) and job tags into its thread, so its jobs stay
+    attributed to the caller; a plain pool thread would start with none."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=len(calls)) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(fn), *args)
+            for fn, *args in calls
+        ]
+        return [f.result() for f in futures]
 
 
 def dedup_pipeline(
@@ -80,7 +96,9 @@ def dedup_pipeline(
         finally:
             sc.setJobDescription(prev)
 
-    def stage(name: str, build, reused: bool = True):
+    def stage(name: str, build, reused: bool = True, observe=None):
+        # observe: named aggregate columns a recorded run attaches to the
+        # stage's own write (RunContext.write_stage)
         if ctx is None:
             # No durable checkpoint requested: multi-consumer stages are
             # EAGERLY localCheckpointed. Lazy marking looked cheaper (no
@@ -92,26 +110,26 @@ def dedup_pipeline(
             # eager 79/105/43 s vs lazy 146/229/61 s — eager wins every
             # adjacent pair (BENCH.md round 4). Single-consumer stages
             # (reused=False) stay unmaterialized so Catalyst fuses them.
-            df = build()
-            if reused:
-                return described(
-                    name, lambda: df.localCheckpoint(eager=True)
-                )
-            return df
+            def _cut():
+                df = build()
+                return df.localCheckpoint(eager=True) if reused else df
+
+            return described(name, _cut)
         if ctx.is_complete(name):
             resumed.add(name)
-        return described(name, lambda: ctx.stage(name, build))
+        return described(name, lambda: ctx.stage(name, build, observe))
 
-    def metrics(name: str, guard_stage: str | None = None, **kv):
-        # kv values are thunks — only evaluated (each is a Spark job) when a
-        # run context is recording lineage. guard_stage makes the block
-        # exactly-once across resumes: a stage reused from its checkpoint
-        # already wrote its metrics in the run that built it, so re-running
-        # the (Spark-job) thunks would both waste jobs and append duplicate
-        # rows (record_metrics also replaces per-stage, as defense in depth).
-        if ctx is None or (guard_stage is not None and guard_stage in resumed):
+    def metrics(name: str, guard_stage: str, values):
+        # values(rows, observed) -> the metrics row, from guard_stage's
+        # manifest: rows from its parquet footers, observed from the
+        # aggregates attached to its write — no Spark job. guard_stage
+        # keeps the block exactly-once across resumes: a stage reused from
+        # its checkpoint already wrote its metrics in the run that built it
+        # (record_metrics also replaces per-stage, as defense in depth).
+        if ctx is None or guard_stage in resumed:
             return
-        ctx.record_metrics(name, {k: v() for k, v in kv.items()})
+        m = ctx.manifest(guard_stage)
+        ctx.record_metrics(name, values(m["rows"], m["observed"]))
 
     # -- 1 normalize ----------------------------------------------------------
     # the reference's parse+clean entry (code/dedup2.py:461-468): when the
@@ -136,15 +154,22 @@ def dedup_pipeline(
             F.col("text").isNull() | (F.length("text") < cfg.shingle_k),
         )
 
-    normalized = stage("normalize", _normalize)
+    normalized = stage(
+        "normalize",
+        _normalize,
+        observe={"ambiguous": F.count_if(F.col("is_ambiguous"))},
+    )
     docs = normalized.where(~F.col("is_ambiguous")).drop("is_ambiguous")
     ambiguous = normalized.where(F.col("is_ambiguous"))
+    # normalize is a 1:1 projection of pages, so its rows are docs_in
     metrics(
         "normalize",
-        guard_stage="normalize",
-        docs_in=pages.count,
-        docs_ok=docs.count,
-        docs_ambiguous=ambiguous.count,
+        "normalize",
+        lambda n, o: {
+            "docs_in": n,
+            "docs_ok": n - o["ambiguous"],
+            "docs_ambiguous": o["ambiguous"],
+        },
     )
 
     # -- 2 signatures ----------------------------------------------------------
@@ -171,7 +196,7 @@ def dedup_pipeline(
         )
 
     signatures = stage("signatures", _signatures)
-    metrics("signatures", guard_stage="signatures", signatures_out=signatures.count)
+    metrics("signatures", "signatures", lambda n, o: {"signatures_out": n})
 
     # -- 3 candidates ----------------------------------------------------------
     # exact-duplicate short-circuit: identical content hash is a sure edge —
@@ -253,15 +278,11 @@ def dedup_pipeline(
     # first job's execution). Restricted to ctx=None runs: RunContext's
     # manifest bookkeeping is not audited for concurrent writers.
     if ctx is None:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as _pool:
-            _f_exact = _pool.submit(
-                stage, "exact_edges", _exact_edges, exact_edges_reused
-            )
-            _f_lsh = _pool.submit(stage, "lsh_pairs", _lsh_pairs, False)
-            exact_edges = _f_exact.result()
-            lsh_pairs = _f_lsh.result()
+        exact_edges, lsh_pairs = _concurrently(
+            spark,
+            (stage, "exact_edges", _exact_edges, exact_edges_reused),
+            (stage, "lsh_pairs", _lsh_pairs, False),
+        )
     else:
         exact_edges = stage("exact_edges", _exact_edges, exact_edges_reused)
         lsh_pairs = stage("lsh_pairs", _lsh_pairs, reused=False)
@@ -271,8 +292,8 @@ def dedup_pipeline(
         ctx.record_metrics(
             "candidates",
             {
-                "exact_edges": exact_edges.count(),
-                "lsh_candidate_pairs": lsh_pairs.count(),
+                "exact_edges": ctx.manifest("exact_edges")["rows"],
+                "lsh_candidate_pairs": ctx.manifest("lsh_pairs")["rows"],
                 "lsh_buckets_total": trunc["buckets_total"],
                 "lsh_buckets_dropped": trunc["buckets_dropped"] or 0,
                 "lsh_buckets_capped": trunc["buckets_capped"] or 0,
@@ -307,25 +328,24 @@ def dedup_pipeline(
         # machinery back-fills executors while the verify stage's jobs
         # run, and the substring stage below consumes the materialized
         # candidate set instead of re-deriving it inside its lazy plan.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as _pool:
-            _f_ver = _pool.submit(stage, "verified", _verified, True)
-            _f_cand = _pool.submit(
+        verified, substr_cand = _concurrently(
+            spark,
+            (stage, "verified", _verified, True),
+            (
                 described,
                 "substr_cand",
                 lambda: _substr_cand().localCheckpoint(eager=True),
-            )
-            verified = _f_ver.result()
-            substr_cand = _f_cand.result()
+            ),
+        )
     else:
-        verified = stage("verified", _verified)
+        verified = stage(
+            "verified", _verified, observe={"dup": F.count_if(F.col("is_dup"))}
+        )
     dup_edges = verified.where("is_dup").select("id_a", "id_b")
     metrics(
         "verify",
-        guard_stage="verified",
-        pairs_in=verified.count,
-        pairs_dup=dup_edges.count,
+        "verified",
+        lambda n, o: {"pairs_in": n, "pairs_dup": o["dup"]},
     )
 
     # -- 5 substring pass ---------------------------------------------------------
@@ -340,13 +360,17 @@ def dedup_pipeline(
                 todo, docs, cfg.min_common_substring, id_col="url"
             )
 
-        substr = stage("substring", _substr, reused=False)
+        substr = stage(
+            "substring",
+            _substr,
+            reused=False,
+            observe={"dup": F.count_if(F.col("is_substring_dup"))},
+        )
         substr_edges = substr.where("is_substring_dup").select("id_a", "id_b")
         metrics(
             "substring",
-            guard_stage="substring",
-            pairs_checked=substr.count,
-            pairs_substring_dup=substr_edges.count,
+            "substring",
+            lambda n, o: {"pairs_checked": n, "pairs_substring_dup": o["dup"]},
         )
     else:
         substr = None
@@ -373,12 +397,17 @@ def dedup_pipeline(
             "cluster_size",
         )
 
-    clusters = stage("clusters", _clusters)
+    # every canonical is a member of its own cluster, so the rows with
+    # url == cluster_id count the distinct clusters
+    clusters = stage(
+        "clusters",
+        _clusters,
+        observe={"canonical": F.count_if(F.col("url") == F.col("cluster_id"))},
+    )
     metrics(
         "clusters",
-        guard_stage="clusters",
-        docs_clustered=clusters.count,
-        n_clusters=clusters.select("cluster_id").distinct().count,
+        "clusters",
+        lambda n, o: {"docs_clustered": n, "n_clusters": o["canonical"]},
     )
 
     return {

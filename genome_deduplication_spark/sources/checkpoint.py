@@ -18,10 +18,28 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+
+_PART_FILE = re.compile(r"part-(\d+)-.*\.parquet$")
+
+
+def _part_file_rows(path: str) -> dict[int, int]:
+    """part number -> row count of a parquet output directory, from the
+    files' footers (driver-side, no Spark job)."""
+    import pyarrow.parquet as pq
+
+    rows: dict[int, int] = {}
+    for name in os.listdir(path):
+        m = _PART_FILE.match(name)
+        if m:
+            pid = int(m.group(1))
+            n = pq.read_metadata(os.path.join(path, name)).num_rows
+            rows[pid] = rows.get(pid, 0) + n
+    return rows
 
 
 @dataclass
@@ -60,42 +78,48 @@ class RunContext:
     def is_complete(self, stage: str) -> bool:
         return os.path.exists(self._manifest_path(stage))
 
-    def write_stage(self, stage: str, df: DataFrame) -> DataFrame:
+    def write_stage(
+        self, stage: str, df: DataFrame, observe: dict[str, Column] | None = None
+    ) -> DataFrame:
         """Materialize a stage: parquet write + completion manifest, then
         return the re-read DataFrame (cuts lineage like an Iceberg snapshot).
 
-        Per-partition lineage: one aggregation job over the written files
-        records (partition_id, rows) for every partition — the analogue of
-        the reference's per-file accounting that downstream scripts re-read
-        (code/dedup2.py:534-539). Replaces (not adds to) the plain count
-        job: total rows = the histogram's sum."""
-        from pyspark.sql import functions as F
+        ``observe`` maps names to aggregate columns. They are attached with
+        ``DataFrame.observe`` directly above the write, so their values
+        arrive with the write job itself and land in the manifest under
+        ``observed``.
 
+        Per-partition lineage: (partition_id, rows) for every written part
+        file, read from the parquet footers on the driver — the analogue of
+        the reference's per-file accounting that downstream scripts re-read
+        (code/dedup2.py:534-539). partition_id is the part number in the
+        file name. No Spark job: the manifest's rows is the footers' sum."""
         path = self._data_path(stage)
+        obs = None
+        if observe:
+            obs = Observation()
+            df = df.observe(obs, *[c.alias(k) for k, c in observe.items()])
         df.write.mode("overwrite").parquet(path)
-        out = self.spark.read.parquet(path)
-        per_part = (
-            out.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .collect()
-        )
+        per_part = _part_file_rows(path)
         self._replace_stage_counters(
             stage,
             (
                 {
                     "stage": stage,
                     "kind": "partition_rows",
-                    "partition_id": int(r["partition_id"]),
-                    "rows": int(r["rows"]),
+                    "partition_id": pid,
+                    "rows": rows,
                 }
-                for r in per_part
+                for pid, rows in sorted(per_part.items())
             ),
         )
+        out = self.read_stage(stage)
         manifest = {
             "stage": stage,
             "path": path,
-            "rows": int(sum(r["rows"] for r in per_part)),
+            "rows": sum(per_part.values()),
             "n_partitions": len(per_part),
+            "observed": obs.get if obs is not None else {},
             "schema": out.schema.json(),
             "completed_at_unix": time.time(),
         }
@@ -108,11 +132,18 @@ class RunContext:
     def read_stage(self, stage: str) -> DataFrame:
         return self.spark.read.parquet(self._data_path(stage))
 
-    def stage(self, name: str, build) -> DataFrame:
+    def manifest(self, stage: str) -> dict:
+        """A completed stage's manifest: rows, observed values, schema."""
+        with open(self._manifest_path(stage)) as f:
+            return json.load(f)
+
+    def stage(
+        self, name: str, build, observe: dict[str, Column] | None = None
+    ) -> DataFrame:
         """Run ``build()`` unless the stage is already complete (resume)."""
         if self.is_complete(name):
             return self.read_stage(name)
-        return self.write_stage(name, build())
+        return self.write_stage(name, build(), observe)
 
     # -- lineage metrics -----------------------------------------------------
 
