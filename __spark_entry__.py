@@ -385,7 +385,7 @@ def q_token_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing-style document fingerprint [rolling-hash fingerprinting]:
     min anchor shingle (hash % 32 == 0) per doc — the candidate index of the
-    exact-substring pass (operators/suffix_array.anchor_candidate_pairs)."""
+    exact-substring pass (operators/suffix_array.pairs_from_anchor_rows)."""
     docs = _read(spark, sf_dir, "documents")
     sh = docs.select(
         "doc_id",

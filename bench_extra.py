@@ -144,6 +144,7 @@ def _skew_stress(spark, n_docs: int = 40000, hot_mod: int = 10):
     from pyspark.sql import functions as F
 
     from genome_deduplication_spark.config import DedupConfig
+    from genome_deduplication_spark.functions.hashing import hash128
     from genome_deduplication_spark.operators.lsh import candidate_pairs
 
     cfg = DedupConfig()
@@ -155,10 +156,11 @@ def _skew_stress(spark, n_docs: int = 40000, hot_mod: int = 10):
         .otherwise(F.pmod(F.xxhash64(F.col("id"), j), F.lit(2**31 - 1)))
         .cast("int"),
     )
+    # keyed like the pipeline's docs: doc_key = hash128(url)
     sigs = (
         spark.range(n_docs)
         .select(
-            F.concat(F.lit("u"), F.col("id")).alias("url"),
+            hash128(F.concat(F.lit("u"), F.col("id"))).alias("doc_key"),
             vals.alias("minhash"),
         )
         .repartition(spark.sparkContext.defaultParallelism)
@@ -166,7 +168,7 @@ def _skew_stress(spark, n_docs: int = 40000, hot_mod: int = 10):
     )
     spark.sparkContext.setJobDescription("skew-stress: candidate_pairs")
     t0 = _t.time()
-    pairs, stats = candidate_pairs(sigs, cfg, with_stats=True)
+    pairs, stats = candidate_pairs(sigs, cfg, id_col="doc_key", with_stats=True)
     n_pairs = pairs.count()
     wall = round(_t.time() - t0, 3)
     spark.sparkContext.setJobDescription(None)

@@ -65,7 +65,8 @@ class DedupConfig:
 
     def anchor_width(self) -> int:
         """Width (bytes) of exact-substring anchor windows — wide enough to
-        be discriminative on low-entropy text (see suffix_array docstring)."""
+        be discriminative on low-entropy text (see
+        suffix_array.pairs_from_anchor_rows)."""
         return max(self.shingle_k, min(48, self.min_common_substring // 2))
 
     def anchor_modulus(self) -> int:

@@ -120,7 +120,7 @@ def make_doc_signature_udf(cfg: DedupConfig):
     * distinct shingle set (np.unique);
     * 128-perm MinHash + 64-bit SimHash over the distinct set;
     * anchor hashes for the exact-substring index: anchor_k-byte windows
-      whose hash % m == 0 (see operators/suffix_array.anchor_candidate_pairs
+      whose hash % m == 0 (see operators/suffix_array.pairs_from_anchor_rows
       for the selectivity math).
 
     Differentially tested against the pure-Python twins

@@ -12,12 +12,12 @@ real dup clusters. Each round is two shuffles; lineage is cut with
 localCheckpoint every round so the plan does not grow (SURVEY.md §4 item 2),
 and the convergence check is observed on that same checkpoint job.
 
-IDs are mapped to a 128-bit BINARY(16) key (unhex'd md5) for cheap
-fixed-width shuffles without birthday collisions at 10^12 ids; the final
-cluster id is the *minimum original key* (warc_ts, url struct ordering is
-applied by the caller through min-election, here minimum hashed id) —
-callers re-attach string ids by join. All operators below work on any
-orderable node type (int64 or struct).
+Nodes are whatever fixed-width orderable key the caller's edges carry: the
+pipeline's and the incremental state's ``doc_key`` (BINARY(16), hash128 of
+the url — no birthday collisions at 10^12 ids), the tier report's int64
+doc ids. The component label is the minimum node key; callers that want a
+different canonical member (the pipeline's min(warc_ts, url)) elect it by
+grouping on that label.
 """
 
 from __future__ import annotations
@@ -84,8 +84,8 @@ def _checkpoint(edges: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
 def connected_components(
     edges: DataFrame, max_iter: int = 20
 ) -> DataFrame:
-    """(src, dst) int64 edge list -> (node, component) with component =
-    min node id of the component. Nodes appearing only as singletons are the
+    """(src, dst) edge list -> (node, component) with component = min node
+    key of the component. Nodes appearing only as singletons are the
     caller's concern (left join + coalesce to self)."""
     cur = (
         edges.select(
@@ -131,35 +131,3 @@ def connected_components(
                         F.col("component").alias("component")).distinct()
     return comp.union(roots).groupBy("node").agg(F.min("component").alias("component"))
 
-
-def components_for_string_ids(edges: DataFrame, all_ids: DataFrame,
-                              id_col: str = "url") -> DataFrame:
-    """String-id edge list (id_a, id_b) + universe of ids -> (id, cluster_key)
-    where cluster_key is the lexicographically/structurally minimal member id
-    ... represented by the min xxhash-mapped node, then re-joined to strings.
-
-    To make the cluster id deterministic and meaningful we map back to the
-    minimum *string* id within each component (min over the original key).
-    """
-    ids = all_ids.select(F.col(id_col).alias("id")).distinct()
-    # 128-bit node key: a 64-bit map expects ~tens of thousands of birthday
-    # collisions at 10^12 ids — each one silently merging unrelated
-    # clusters. Representation matters: BINARY(16) (unhex'd md5) keeps the
-    # fast hash-aggregate/codegen path; struct<hi,lo> keys fell off it
-    # (measured ~18% CC slowdown) and hex strings doubled the width.
-    node_map = ids.select("id", F.unhex(F.md5("id")).alias("node"))
-    e = (
-        edges.join(node_map.withColumnRenamed("id", "id_a")
-                   .withColumnRenamed("node", "src"), "id_a")
-        .join(node_map.withColumnRenamed("id", "id_b")
-              .withColumnRenamed("node", "dst"), "id_b")
-        .select("src", "dst")
-    )
-    comp = connected_components(e)
-    labeled = node_map.join(comp, "node", "left").select(
-        "id", F.coalesce("component", "node").alias("component")
-    )
-    canon = labeled.groupBy("component").agg(F.min("id").alias("cluster_key"))
-    return labeled.join(canon, "component").select(
-        F.col("id").alias(id_col), "cluster_key"
-    )

@@ -23,6 +23,10 @@ A then B == clusters of a one-shot run over A ∪ B. Why it holds:
     components as the full-group star (every star connects all members
     to a group minimum).
 
+Documents are keyed by ``doc_key`` = hash128(url), the same BINARY(16)
+key the one-shot pipeline uses (plans/pipeline.py): LSH, verify and CC run
+on it, and each cluster is labeled with its min(url) at the end.
+
 State layout (``state_dir``): APPEND-ONLY version deltas —
 ``v{i}/signatures`` + ``v{i}/edges`` hold only what batch *i* added (its
 signatures; the near/exact edges it discovered), and the live state is
@@ -52,16 +56,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DedupConfig
+from ..functions.hashing import hash128
 from ..functions.signatures import make_doc_signature_udf
 from ..functions.text import normalize_text
-from .connected_components import components_for_string_ids
+from .connected_components import connected_components
 from .exact_dedup import content_key
 from .lsh import band_buckets, candidate_pairs
 from .verify import verify_pairs
 
 __all__ = ["dedup_increment"]
-
-_SIG_COLS = ["url", "content_hash", "minhash", "simhash"]
 
 
 def _manifest_path(state_dir: str) -> str:
@@ -94,11 +97,13 @@ def _batch_signatures(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
     norm = normalize_text(F.col("text"))
     return (
         docs.select(
+            hash128(F.col("url")).alias("doc_key"),
             "url",
             content_key(norm).alias("content_hash"),
             sig_udf(norm).alias("sig"),
         )
         .select(
+            "doc_key",
             "url",
             "content_hash",
             F.col("sig.minhash").alias("minhash"),
@@ -140,22 +145,25 @@ def dedup_increment(docs: DataFrame, cfg: DedupConfig, state_dir: str) -> dict:
         n_prior = man["n_docs"]
 
     # near-dup edges: only buckets the new batch touches
-    touched = band_buckets(new_sigs, cfg).select("band_id", "band_hash")
-    cand = candidate_pairs(all_sigs, cfg, restrict_to=touched)
+    touched = band_buckets(new_sigs, cfg, id_col="doc_key").select(
+        "band_id", "band_hash"
+    )
+    cand = candidate_pairs(all_sigs, cfg, id_col="doc_key", restrict_to=touched)
     near = (
-        verify_pairs(cand, all_sigs, cfg)
+        verify_pairs(cand, all_sigs, cfg, id_col="doc_key")
         .where(F.col("is_dup"))
         .select("id_a", "id_b")
     )
 
-    # exact edges: hash groups containing >= 1 new doc, star around min url
+    # exact edges: hash groups containing >= 1 new doc, star around the
+    # group's min key
     new_hashes = new_sigs.select("content_hash").distinct()
     grp = all_sigs.join(new_hashes, "content_hash", "leftsemi")
-    mins = grp.groupBy("content_hash").agg(F.min("url").alias("id_a"))
+    mins = grp.groupBy("content_hash").agg(F.min("doc_key").alias("id_a"))
     exact = (
         grp.join(mins, "content_hash")
-        .where(F.col("url") != F.col("id_a"))
-        .select("id_a", F.col("url").alias("id_b"))
+        .where(F.col("doc_key") != F.col("id_a"))
+        .select("id_a", F.col("doc_key").alias("id_b"))
     )
 
     # this batch's edge DELTA is what gets persisted; CC runs on the
@@ -167,9 +175,14 @@ def dedup_increment(docs: DataFrame, cfg: DedupConfig, state_dir: str) -> dict:
         edges = edges.unionByName(prior_edges)
     edges = edges.distinct().localCheckpoint(eager=True)
 
-    clusters = components_for_string_ids(
-        edges, all_sigs.select("url"), id_col="url"
+    comp = connected_components(
+        edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     )
+    labeled = all_sigs.join(
+        comp, all_sigs["doc_key"] == comp["node"], "left"
+    ).select("url", F.coalesce("component", "doc_key").alias("_k"))
+    canon = labeled.groupBy("_k").agg(F.min("url").alias("cluster_key"))
+    clusters = labeled.join(canon, "_k").select("url", "cluster_key")
 
     vdir = os.path.join(state_dir, f"v{version}")
     new_sigs.write.mode("overwrite").parquet(os.path.join(vdir, "signatures"))

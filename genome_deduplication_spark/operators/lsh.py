@@ -31,7 +31,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from genome_deduplication_spark.config import DedupConfig
 
@@ -67,11 +66,13 @@ def candidate_pairs(signatures: DataFrame, cfg: DedupConfig,
                     restrict_to: DataFrame | None = None):
     """Distinct candidate (id_a < id_b) pairs from shared band buckets.
 
-    Precondition: one signature row per id. With duplicate ids the
-    compact-key join-back multiplies rows and the returned pair set is no
-    longer distinct (ADVICE r5 #4 — documented rather than paying a
-    .distinct() shuffle on the idmap; every in-repo caller passes
-    one-row-per-url frames).
+    Ids are used as given: they order the bucket members, so they pick
+    each bucket's star centre and the members that survive the cap, and
+    every row of the band explode, the member sort and the cross-band
+    distinct carries one. Pass a fixed-width key — the pipeline's
+    ``doc_key`` (hash128 of the url, BINARY(16)) or an int64 id — not a
+    url string. Precondition: one signature row per id (a repeated id
+    repeats a bucket member and emits a self-pair).
 
     Emits a *star* within each (capped) bucket: every member pairs with the
     bucket's minimum member, plus the full clique for buckets up to a small
@@ -95,33 +96,7 @@ def candidate_pairs(signatures: DataFrame, cfg: DedupConfig,
     read the persisted counts instead of re-scanning the signatures (the
     truncation_stats full-pass path).
     """
-    # Compact-key hot path: every row of the band explode (x cfg.bands row
-    # multiplication), the bucket window sort, the capped member arrays and
-    # the cross-band distinct carry the document id. For string ids (urls,
-    # ~40-80B) that id dominates the shuffled bytes — and this VM (like any
-    # saturated host) pays for shuffle/sort bytes with a hard aggregate
-    # memory-bandwidth cap (BENCH.md round 5: ~13-22 GB/s TOTAL regardless
-    # of worker count, so per-task bandwidth falls ~3x from 2 to 8 tasks).
-    # So the machinery below runs on hash128(id) BINARY(16) keys (collision
-    # odds ~1e-12 at 10^12 docs, functions/hashing.py) and the final SMALL
-    # pair set joins back to real ids. Non-string ids (already compact)
-    # pass through unchanged.
-    compact = isinstance(signatures.schema[id_col].dataType, T.StringType)
-    if compact:
-        from genome_deduplication_spark.functions.hashing import hash128
-
-        key_col = "_lsh_key"
-        base = signatures.select(
-            hash128(F.col(id_col)).alias(key_col), F.col(sig_col)
-        )
-        idmap = signatures.select(
-            hash128(F.col(id_col)).alias(key_col), F.col(id_col)
-        )
-    else:
-        key_col = id_col
-        base = signatures
-
-    buckets = band_buckets(base, cfg, key_col, sig_col)
+    buckets = band_buckets(signatures, cfg, id_col, sig_col)
     if restrict_to is not None:
         # incremental mode (operators/incremental.py): only buckets touched
         # by the new batch regenerate pairs — a leftsemi keeps each touched
@@ -153,13 +128,13 @@ def candidate_pairs(signatures: DataFrame, cfg: DedupConfig,
     # window over the already-bucket-keyed rows), so no reducer row ever
     # holds more than max_bucket_size ids — the old slice-after-collect
     # materialized up to DROP_CAP ids (500x the cap) per hot bucket first.
-    w = W.partitionBy("band_id", "band_hash").orderBy(key_col)
+    w = W.partitionBy("band_id", "band_hash").orderBy(id_col)
     members = (
         buckets.join(ok, ["band_id", "band_hash"])
         .withColumn("_r", F.row_number().over(w))
         .where(F.col("_r") <= cfg.max_bucket_size)
         .groupBy("band_id", "band_hash")
-        .agg(F.sort_array(F.collect_list(key_col)).alias("m"))
+        .agg(F.sort_array(F.collect_list(id_col)).alias("m"))
         .where(F.size("m") >= 2)
     )
     sz = F.size("m")
@@ -183,28 +158,8 @@ def candidate_pairs(signatures: DataFrame, cfg: DedupConfig,
     pairs = (
         members.select(F.explode(pair_arr).alias("p"))
         .select(F.col("p.id_a"), F.col("p.id_b"))
-        .distinct()  # cross-band dedup on 16B keys, before any join-back
+        .distinct()  # cross-band dedup
     )
-    if compact:
-        # translate the (small) pair set back to real ids. The map side is
-        # one row per input doc — broadcastable at bench scale, a plain
-        # shuffle join of pair-cardinality rows at cluster scale. Pair
-        # orientation is re-normalized in id space: the star/cap election
-        # above ordered by key, which is not the id order.
-        map_a = idmap.select(
-            F.col(key_col).alias("id_a"), F.col(id_col).alias("_ia")
-        )
-        map_b = idmap.select(
-            F.col(key_col).alias("id_b"), F.col(id_col).alias("_ib")
-        )
-        pairs = (
-            pairs.join(map_a, "id_a")
-            .join(map_b, "id_b")
-            .select(
-                F.least("_ia", "_ib").alias("id_a"),
-                F.greatest("_ia", "_ib").alias("id_b"),
-            )
-        )
     return (pairs, stats) if with_stats else pairs
 
 

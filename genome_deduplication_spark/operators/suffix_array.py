@@ -144,58 +144,6 @@ def longest_self_repeat_len(a: str) -> int:
     return int(lcp.max()) if len(lcp) else 0
 
 
-def anchor_candidate_pairs(
-    docs: DataFrame,
-    min_len: int,
-    shingle_k: int,
-    max_bucket_size: int = 200,
-    min_shared_anchors: int = 2,
-    anchor_k: int | None = None,
-    id_col: str = "url",
-    text_col: str = "text",
-) -> DataFrame:
-    """Candidate pairs for the exact-substring pass via anchor shingles.
-
-    The reference catches shared substrings because *every* k-mer enters one
-    global set (code/dedup2.py:142) — any overlap of length >= k collides.
-    At web scale indexing every shingle is the full inverted index; instead
-    we index only *anchor* shingles (hash % m == 0, winnowing-style
-    fingerprinting). A shared substring of length >= min_len contains
-    (min_len - anchor_k + 1) consecutive anchor-width shingles, so with
-    m = window / 4 the expected number of shared anchors is ~4 and the miss
-    probability (1 - 1/m)^window ~ e^-4 < 2%. Deterministic — no rand().
-
-    ``anchor_k`` is intentionally much wider than the similarity shingle
-    (default ~min_len/2, capped at 48): a 9-char shingle is not
-    discriminative on low-entropy text (common phrases collide corpus-wide,
-    exploding the candidate set), while a 48-char exact match between
-    non-duplicated documents is vanishingly rare. This mirrors the
-    reference's choice of k=32 over a 4-letter alphabet — the anchor must
-    carry enough entropy to make chance collisions negligible
-    (code/dedup2.py:576, k default discussion).
-    """
-    from genome_deduplication_spark.functions.shingles import char_shingles64
-
-    if anchor_k is None:
-        anchor_k = max(shingle_k, min(48, min_len // 2))
-    window = max(min_len - anchor_k + 1, 1)
-    m = max(window // 4, 1)
-    # xxhash64 (not the portable md5 hash): anchors never need cross-engine
-    # reproduction, and xxhash is ~an order of magnitude cheaper per window
-    anchors = docs.select(
-        F.col(id_col),
-        F.explode(
-            F.filter(
-                char_shingles64(F.col(text_col), anchor_k),
-                lambda h: F.pmod(h, F.lit(m)) == 0,
-            )
-        ).alias("anchor"),
-    )
-    return pairs_from_anchor_rows(
-        anchors, max_bucket_size, min_shared_anchors, id_col=id_col
-    )
-
-
 def pairs_from_anchor_rows(
     anchors: DataFrame,
     max_bucket_size: int,
@@ -203,6 +151,16 @@ def pairs_from_anchor_rows(
     id_col: str = "url",
 ) -> DataFrame:
     """(id, anchor) rows -> candidate (id_a < id_b) pairs.
+
+    The reference catches shared substrings because *every* k-mer enters
+    one global set (code/dedup2.py:142). Indexing every shingle is the full
+    inverted index at web scale, so the signature kernel
+    (functions/signatures.py) emits only *anchor* windows, winnowing-style:
+    DedupConfig.anchor_width()-byte windows whose hash % anchor_modulus()
+    == 0. A shared substring of min_common_substring bytes holds ~4 anchors
+    in expectation (miss odds (1 - 1/m)^window ~ e^-4 < 2%), and the wide
+    window keeps chance collisions on low-entropy text negligible — the
+    reference's k=32 over a 4-letter alphabet (code/dedup2.py:576).
 
     Boilerplate prune: an anchor present in more than `max_bucket_size`
     documents is template text (headers/footers/navigation), not a quoted
@@ -219,40 +177,23 @@ def pairs_from_anchor_rows(
     # local[8], amplified by this host's flat aggregate memory-bandwidth
     # cap (BENCH.md round 5). Now: count-first drop of template anchors
     # (map-side combinable, so mega-anchors never reach a reducer), ONE
-    # exchange of the kept rows keyed by compact hash128 ids, capped
-    # member arrays, and pairs emitted by array transforms (the lsh.py
-    # clique pattern — cap 50 bounds a row to 1225 pair structs). The
-    # small surviving pair set joins back to real ids at the end.
-    compact = isinstance(anchors.schema[id_col].dataType, T.StringType)
-    if compact:
-        from genome_deduplication_spark.functions.hashing import hash128
-
-        key_col = "_sa_key"
-        keyed = anchors.select(
-            "anchor", hash128(F.col(id_col)).alias(key_col)
-        )
-        # distinct (group-by-only => buffer-free HashAggregate; md5
-        # collisions make key<->id effectively bijective)
-        idmap = anchors.select(
-            hash128(F.col(id_col)).alias(key_col), F.col(id_col)
-        ).distinct()
-    else:
-        key_col = id_col
-        keyed = anchors
-
+    # exchange of the kept rows, capped member arrays, and pairs emitted
+    # by array transforms (the lsh.py clique pattern — cap 50 bounds a row
+    # to 1225 pair structs). Every row carries its id, so pass a
+    # fixed-width key (the pipeline's doc_key), not a url string.
     # df >= 2: an anchor seen in one document cannot witness a shared
     # substring — pruning singletons here (the overwhelming majority of
     # anchors) keeps them out of the member join + collect_list entirely
     small = (
-        keyed.groupBy("anchor")
+        anchors.groupBy("anchor")
         .agg(F.count(F.lit(1)).alias("df"))
         .where((F.col("df") >= 2) & (F.col("df") <= max_bucket_size))
         .select("anchor")
     )
     members = (
-        keyed.join(small, "anchor")
+        anchors.join(small, "anchor")
         .groupBy("anchor")
-        .agg(F.sort_array(F.collect_list(key_col)).alias("m"))
+        .agg(F.sort_array(F.collect_list(id_col)).alias("m"))
         .where(F.size("m") >= 2)
     )
     clique = F.flatten(
@@ -267,7 +208,7 @@ def pairs_from_anchor_rows(
     # require >= min_shared_anchors distinct shared anchors: a true shared
     # substring of min_len yields ~4 expected anchors; a single chance anchor
     # collision (one common phrase) is pruned before any suffix-array work
-    pairs = (
+    return (
         members.select(F.explode(clique).alias("p"))
         .select(F.col("p.id_a"), F.col("p.id_b"))
         # duplicate (id, anchor) input rows (allowed by the public
@@ -280,22 +221,6 @@ def pairs_from_anchor_rows(
         .where(F.col("n_shared_anchors") >= min_shared_anchors)
         .select("id_a", "id_b")
     )
-    if compact:
-        map_a = idmap.select(
-            F.col(key_col).alias("id_a"), F.col(id_col).alias("_ia")
-        )
-        map_b = idmap.select(
-            F.col(key_col).alias("id_b"), F.col(id_col).alias("_ib")
-        )
-        pairs = (
-            pairs.join(map_a, "id_a")
-            .join(map_b, "id_b")
-            .select(
-                F.least("_ia", "_ib").alias("id_a"),
-                F.greatest("_ia", "_ib").alias("id_b"),
-            )
-        )
-    return pairs
 
 
 def exact_substring_pairs(
@@ -307,7 +232,8 @@ def exact_substring_pairs(
 ) -> DataFrame:
     """Candidate (id_a, id_b) pairs -> those sharing a substring >= min_len.
 
-    Output: id_a, id_b, lcs_len, is_substring_dup.
+    Output: id_a, id_b (of the input pairs' id type), lcs_len,
+    is_substring_dup.
     """
     texts = pages.select(F.col(id_col), F.col(text_col))
     joined = (
@@ -319,8 +245,8 @@ def exact_substring_pairs(
 
     schema = T.StructType(
         [
-            T.StructField("id_a", T.StringType()),
-            T.StructField("id_b", T.StringType()),
+            T.StructField("id_a", pairs.schema["id_a"].dataType),
+            T.StructField("id_b", pairs.schema["id_b"].dataType),
             T.StructField("lcs_len", T.LongType()),
         ]
     )

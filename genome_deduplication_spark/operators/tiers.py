@@ -125,16 +125,11 @@ def tier_dedup_report(
     eligible = F.length("s") >= F.lit(cfg.shingle_k)  # NULL-safe: NULL -> filtered
     sig_udf = make_doc_signature_udf(cfg)
     # NUMERIC ids end to end (r6): the tier report's ids are int64, so
-    # the near stack runs on them directly — candidate_pairs skips its
-    # hash128 compact-key mapping + two join-backs (a bigint id IS the
-    # fixed-width shuffle key, with zero collision risk at any scale),
-    # and connected_components runs on int64 nodes, where the component
-    # label it returns (min node id) IS the numeric-min representative —
-    # eliminating the md5 node map (3 references), the min-string
-    # election (groupBy + join), AND the tier's own n_rep election
-    # (another groupBy + join) from the old components_for_string_ids
-    # path. Output values are identical: rep = min(doc_id) of the
-    # component either way.
+    # the near stack runs on them directly — a bigint id IS a fixed-width
+    # shuffle key, with zero collision risk at any scale — and
+    # connected_components runs on int64 nodes, where the component label
+    # it returns (min node id) IS the numeric-min representative, so no
+    # separate rep election (groupBy + join) is needed.
     sigs = (
         surv2.where(eligible)
         .select(

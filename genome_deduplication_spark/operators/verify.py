@@ -12,7 +12,9 @@ tests but are flagged for the exact-substring pass re-read text.
 Stochastic retain (reference: with prob `retain` a duplicate is let through
 anyway, code/dedup2.py:150-151) is reproduced partitioning-invariantly:
 drop an edge iff hash(seed, id_a, id_b) maps below retain_rate — derived
-from the pair key, never from F.rand().
+from the pair key, never from F.rand(). The pair key is whatever ids the
+caller passes: in the pipeline that is the (doc_key, doc_key) pair, so
+which edges a retain_rate drops follows the keys, not the urls.
 """
 
 from __future__ import annotations

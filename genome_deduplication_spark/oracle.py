@@ -18,6 +18,7 @@ Two oracles:
 
 from __future__ import annotations
 
+import hashlib
 from collections import defaultdict
 
 from genome_deduplication_spark.config import MERSENNE31, DedupConfig
@@ -120,7 +121,8 @@ def oracle_clusters_exact_jaccard(
 
 
 def minhash_lsh_pairs(docs: dict[str, str], cfg: DedupConfig) -> set[tuple[str, str]]:
-    """Sequential twin of the Spark MinHash/LSH/verify pair generation."""
+    """Sequential twin of the Spark MinHash/LSH/verify pair generation;
+    url pairs, each (lesser, greater)."""
     sigs: dict[str, list[int]] = {}
     simh: dict[str, int] = {}
     for u, t in docs.items():
@@ -134,23 +136,27 @@ def minhash_lsh_pairs(docs: dict[str, str], cfg: DedupConfig) -> set[tuple[str, 
         for b in range(cfg.bands):
             band = tuple(sig[b * cfg.rows_per_band : (b + 1) * cfg.rows_per_band])
             buckets[(b, band)].append(u)
-    # mirror operators/lsh.candidate_pairs exactly: sorted members capped at
+    # mirror operators/lsh.candidate_pairs exactly: members sorted by the
+    # pipeline's doc_key (md5 digest of the url) and capped at
     # max_bucket_size; full clique for small buckets, star around the
     # minimum member for larger ones (CC restores transitivity)
     from genome_deduplication_spark.operators.lsh import CLIQUE_BUDGET
+
+    def doc_key(u: str) -> bytes:
+        return hashlib.md5(u.encode("utf-8")).digest()
 
     cand: set[tuple[str, str]] = set()
     for members in buckets.values():
         if len(members) < 2:
             continue
-        ms = sorted(members)[: cfg.max_bucket_size]
+        ms = sorted(members, key=doc_key)[: cfg.max_bucket_size]
         if len(ms) <= CLIQUE_BUDGET:
             for i in range(len(ms)):
                 for j in range(i + 1, len(ms)):
-                    cand.add((ms[i], ms[j]))
+                    cand.add((min(ms[i], ms[j]), max(ms[i], ms[j])))
         else:
             for j in range(1, len(ms)):
-                cand.add((ms[0], ms[j]))
+                cand.add((min(ms[0], ms[j]), max(ms[0], ms[j])))
     out = set()
     for a, b in cand:
         sa, sb = sigs[a], sigs[b]

@@ -21,6 +21,13 @@ Column-pruning note for 100 TB: `html` is only touched in stage 1 and
 `text` only in stages 1-2 and the (small) stage-5 pair join — every other
 stage moves fixed-width signatures/edges. The stage-boundary parquet
 checkpoints make that pruning physical, not just logical.
+
+Document key: stage 1 hashes each url once into ``doc_key`` =
+hash128(url), a BINARY(16) key (functions/hashing.py). Stages 2-6 key
+every row, bucket member and edge on it, so url bytes stay out of the
+banded explode, the bucket sorts and the CC rounds. Edges are oriented
+(id_a < id_b) in key order everywhere. Only the clusters stage (and the
+returned ``dup_edges``) goes back to urls.
 """
 
 from __future__ import annotations
@@ -32,13 +39,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from genome_deduplication_spark.config import DedupConfig
+from genome_deduplication_spark.functions.hashing import hash128
 from genome_deduplication_spark.functions.signatures import make_doc_signature_udf
 from genome_deduplication_spark.functions.text import (
     extract_text_from_html,
     normalize_text,
 )
 from genome_deduplication_spark.operators.connected_components import (
-    components_for_string_ids,
+    connected_components,
 )
 from genome_deduplication_spark.operators.exact_dedup import content_key
 from genome_deduplication_spark.operators.lsh import candidate_pairs
@@ -63,6 +71,14 @@ def _concurrently(spark, *calls):
             for fn, *args in calls
         ]
         return [f.result() for f in futures]
+
+
+def _canonical_keys(signatures: DataFrame) -> DataFrame:
+    """(content_hash, doc_key) of each exact group's canonical member, the
+    first-occurrence-wins min(warc_ts, url)."""
+    return signatures.groupBy("content_hash").agg(
+        F.min(F.struct("warc_ts", "url", "doc_key")).alias("_c")
+    ).select("content_hash", F.col("_c.doc_key").alias("doc_key"))
 
 
 def dedup_pipeline(
@@ -144,6 +160,7 @@ def dedup_pipeline(
                 text_expr, extract_text_from_html(F.col("html"))
             )
         norm = pages.select(
+            hash128(F.col("url")).alias("doc_key"),
             "url",
             "warc_ts",
             text_expr.alias("text"),
@@ -181,11 +198,13 @@ def dedup_pipeline(
 
     def _signatures():
         return docs.select(
+            "doc_key",
             "url",
             "warc_ts",
             content_key(F.col("text")).alias("content_hash"),
             doc_signature_udf("text").alias("sig"),
         ).select(
+            "doc_key",
             "url",
             "warc_ts",
             "content_hash",
@@ -208,14 +227,15 @@ def dedup_pipeline(
         # list in one reducer row (multi-GB single row -> OOM). The hash
         # aggregation and the join both shuffle on content_hash, so AQE
         # reuses the partitioning; skewed hashes split via AQE skew handling.
-        canon = signatures.groupBy("content_hash").agg(
-            F.min(F.struct("warc_ts", "url")).alias("_c")
-        ).select("content_hash", F.col("_c.url").alias("id_a"))
+        canon = _canonical_keys(signatures).withColumnRenamed("doc_key", "_c")
         return (
-            signatures.select("content_hash", F.col("url").alias("id_b"))
+            signatures.select("content_hash", "doc_key")
             .join(canon, "content_hash")
-            .where(F.col("id_a") != F.col("id_b"))
-            .select("id_a", "id_b")
+            .where(F.col("doc_key") != F.col("_c"))
+            .select(
+                F.least("doc_key", "_c").alias("id_a"),
+                F.greatest("doc_key", "_c").alias("id_b"),
+            )
         )
 
     # exact_edges is multi-consumer only when the substring pass (known-
@@ -234,13 +254,9 @@ def dedup_pipeline(
         # burner of the 640k profile (PLANS.md round 5). Elect ids first,
         # then fetch minhash by semi-join — the rep-id side broadcasts at
         # bench scale and co-partitions at cluster scale.
-        rep_ids = (
-            signatures.groupBy("content_hash")
-            .agg(F.min(F.struct("warc_ts", "url")).alias("_c"))
-            .select(F.col("_c.url").alias("url"))
-        )
-        return signatures.join(rep_ids, "url", "leftsemi").select(
-            "url", "minhash"
+        rep_ids = _canonical_keys(signatures).select("doc_key")
+        return signatures.join(rep_ids, "doc_key", "leftsemi").select(
+            "doc_key", "minhash"
         )
 
     # truncation accounting (lsh.py's docstring promise: buckets the
@@ -253,17 +269,16 @@ def dedup_pipeline(
     trunc_holder: dict = {}
 
     def _lsh_pairs():
-        # reps feed four subtrees of the candidate plan (key projection,
-        # id map, and the counts/members sides of the bucket machinery) —
+        # reps feed the counts and members sides of the bucket machinery —
         # materialize once, eagerly (lazy marks are not persisted under
         # AQE, PLANS.md round 4). Before this, the reps election and the
         # band explode each ran twice (640k profile: two ~360-CPU-s
         # SortAggregate stages over the full signature table).
         reps = _reps().localCheckpoint(eager=True)
         if ctx is None:
-            return candidate_pairs(reps, cfg, id_col="url", sig_col="minhash")
+            return candidate_pairs(reps, cfg, id_col="doc_key")
         pairs, stats = candidate_pairs(
-            reps, cfg, id_col="url", sig_col="minhash", with_stats=True
+            reps, cfg, id_col="doc_key", with_stats=True
         )
         trunc_holder["stats"] = stats
         return pairs
@@ -303,7 +318,7 @@ def dedup_pipeline(
 
     # -- 4 verify ----------------------------------------------------------------
     def _verified():
-        return verify_pairs(lsh_pairs, signatures, cfg, id_col="url")
+        return verify_pairs(lsh_pairs, signatures, cfg, id_col="doc_key")
 
     def _substr_cand():
         # candidates = anchor-shingle collisions (winnowing index — how a
@@ -312,13 +327,13 @@ def dedup_pipeline(
         # no text re-hash here. Depends ONLY on the signatures checkpoint,
         # so it can materialize concurrently with the verify stage.
         anchor_rows = signatures.select(
-            "url", F.explode("anchors").alias("anchor")
+            "doc_key", F.explode("anchors").alias("anchor")
         )
         return pairs_from_anchor_rows(
             anchor_rows,
             max_bucket_size=cfg.anchor_df_cap,
             min_shared_anchors=cfg.min_shared_anchors,
-            id_col="url",
+            id_col="doc_key",
         )
 
     substr_cand = None
@@ -352,12 +367,13 @@ def dedup_pipeline(
     if enable_substring_pass:
         def _substr():
             # candidate pairs minus pairs already confirmed dups, run
-            # through the suffix-array LCS kernel
+            # through the suffix-array LCS kernel; every edge set is
+            # key-oriented (id_a < id_b), so the anti-join is exact
             cand = substr_cand if substr_cand is not None else _substr_cand()
             known = exact_edges.union(dup_edges)
             todo = cand.join(known, ["id_a", "id_b"], "left_anti")
             return exact_substring_pairs(
-                todo, docs, cfg.min_common_substring, id_col="url"
+                todo, docs, cfg.min_common_substring, id_col="doc_key"
             )
 
         substr = stage(
@@ -374,19 +390,29 @@ def dedup_pipeline(
         )
     else:
         substr = None
-        substr_edges = spark.createDataFrame([], "id_a string, id_b string")
+        substr_edges = spark.createDataFrame([], "id_a binary, id_b binary")
 
     # -- 6 components ----------------------------------------------------------
     all_edges = exact_edges.union(dup_edges).union(substr_edges)
 
     def _components():
-        return components_for_string_ids(all_edges, docs.select("url"), id_col="url")
+        # (node, component) for every key on an edge; docs on no edge are
+        # singletons, labeled by the clusters stage
+        return connected_components(
+            all_edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+        )
 
     components = stage("components", _components, reused=False)
 
     # -- 7 clusters: canonical = min(warc_ts, url) within each component ---------
     def _clusters():
-        labeled = components.join(docs.select("url", "warc_ts"), "url")
+        labeled = docs.join(
+            components, docs["doc_key"] == components["node"], "left"
+        ).select(
+            "url",
+            "warc_ts",
+            F.coalesce("component", "doc_key").alias("cluster_key"),
+        )
         canon = labeled.groupBy("cluster_key").agg(
             F.min(F.struct("warc_ts", "url")).alias("_c"),
             F.count(F.lit(1)).alias("cluster_size"),
@@ -410,6 +436,15 @@ def dedup_pipeline(
         lambda n, o: {"docs_clustered": n, "n_clusters": o["canonical"]},
     )
 
+    # the edges in url space, for callers that read them (lazy: only a
+    # caller that reads dup_edges pays for the two key->url joins)
+    url_of = docs.select("doc_key", "url")
+    url_edges = (
+        all_edges.join(url_of.toDF("id_a", "url_a"), "id_a")
+        .join(url_of.toDF("id_b", "url_b"), "id_b")
+        .select(F.col("url_a").alias("id_a"), F.col("url_b").alias("id_b"))
+    )
+
     return {
         "normalized": normalized,
         "signatures": signatures,
@@ -417,7 +452,7 @@ def dedup_pipeline(
         "lsh_pairs": lsh_pairs,
         "verified": verified,
         "substring": substr,
-        "dup_edges": all_edges,
+        "dup_edges": url_edges,
         "components": components,
         "clusters": clusters,
         "ambiguous": ambiguous,

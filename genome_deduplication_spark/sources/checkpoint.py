@@ -23,6 +23,7 @@ import time
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import types as T
 
 _PART_FILE = re.compile(r"part-(\d+)-.*\.parquet$")
 
@@ -40,6 +41,21 @@ def _part_file_rows(path: str) -> dict[int, int]:
             n = pq.read_metadata(os.path.join(path, name)).num_rows
             rows[pid] = rows.get(pid, 0) + n
     return rows
+
+
+def _nullable(t: T.DataType) -> T.DataType:
+    """``t`` as a parquet read reports it: Spark reads every field, array
+    element and map value back as nullable (Scala's asNullable)."""
+    if isinstance(t, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _nullable(f.dataType), True, f.metadata)
+             for f in t.fields]
+        )
+    if isinstance(t, T.ArrayType):
+        return T.ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, T.MapType):
+        return T.MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
 
 
 @dataclass
@@ -93,7 +109,11 @@ class RunContext:
         file, read from the parquet footers on the driver — the analogue of
         the reference's per-file accounting that downstream scripts re-read
         (code/dedup2.py:534-539). partition_id is the part number in the
-        file name. No Spark job: the manifest's rows is the footers' sum."""
+        file name. No Spark job: the manifest's rows is the footers' sum.
+
+        The re-read takes the written DataFrame's schema (as a parquet
+        read would report it, recorded in the manifest), so Spark runs no
+        schema-inference job over the part files."""
         path = self._data_path(stage)
         obs = None
         if observe:
@@ -113,14 +133,15 @@ class RunContext:
                 for pid, rows in sorted(per_part.items())
             ),
         )
-        out = self.read_stage(stage)
+        schema = _nullable(df.schema)
+        out = self.spark.read.schema(schema).parquet(path)
         manifest = {
             "stage": stage,
             "path": path,
             "rows": sum(per_part.values()),
             "n_partitions": len(per_part),
             "observed": obs.get if obs is not None else {},
-            "schema": out.schema.json(),
+            "schema": schema.json(),
             "completed_at_unix": time.time(),
         }
         tmp = self._manifest_path(stage) + ".tmp"
@@ -130,7 +151,9 @@ class RunContext:
         return out
 
     def read_stage(self, stage: str) -> DataFrame:
-        return self.spark.read.parquet(self._data_path(stage))
+        """A completed stage's table, read with its manifest's schema."""
+        schema = T.StructType.fromJson(json.loads(self.manifest(stage)["schema"]))
+        return self.spark.read.schema(schema).parquet(self._data_path(stage))
 
     def manifest(self, stage: str) -> dict:
         """A completed stage's manifest: rows, observed values, schema."""

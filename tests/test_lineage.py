@@ -29,11 +29,13 @@ from genome_deduplication_spark.sources.checkpoint import RunContext
 
 CFG = DedupConfig()
 
-# A run of _small_corpus() (32 docs, shuffle_partitions=8) measured 60-61
-# jobs recorded and 61-62 unrecorded, at local[4] and local[8]. With
-# count jobs and per-stage checkpoint histograms a recorded run took
-# 105-106.
-JOB_CEILING = 70
+# A run of _small_corpus() (32 docs, shuffle_partitions=8) measured 42-43
+# jobs recorded and 46-47 unrecorded, at local[4] and local[8]. With url
+# strings through the near-dup core (a hash128 map and join-backs in LSH,
+# anchor pairs and CC) and a schema-inference job on every stage re-read,
+# it took 60-61 recorded and 61-62 unrecorded; with count jobs and
+# per-stage checkpoint histograms a recorded run took 105-106.
+JOB_CEILING = 49
 
 _groups = itertools.count()
 
@@ -41,7 +43,8 @@ _groups = itertools.count()
 @contextlib.contextmanager
 def _job_group(spark):
     """Run the block under a fresh job group; yields a list that is filled
-    with (job id, description, stage names) of the group's jobs."""
+    with (job id, description, stage names, stage call sites) of the
+    group's jobs."""
     sc = spark.sparkContext
     group = f"lineage-{next(_groups)}"
     jobs: list[tuple[int, str, list[str]]] = []
@@ -61,6 +64,7 @@ def _job_group(spark):
                 jid,
                 desc.get() if desc.isDefined() else "",
                 [s.name for s in names if s is not None],
+                [store.lastStageAttempt(s).details() for s in info.stageIds],
             )
         )
 
@@ -70,12 +74,22 @@ def _count_or_checkpoint_collect(jobs):
     module (the per-partition histogram this design replaced)."""
     return [
         (jid, names)
-        for jid, _, names in jobs
+        for jid, _, names, _ in jobs
         if any(
             n.startswith("count at")
             or (n.startswith("collect at") and "checkpoint.py" in n)
             for n in names
         )
+    ]
+
+
+def _schema_inference(jobs):
+    """Jobs started by a parquet read without a given schema: Spark runs
+    one to infer the schema from the part files' footers."""
+    return [
+        jid
+        for jid, _, _, sites in jobs
+        if any("DataFrameReader.parquet" in site for site in sites)
     ]
 
 
@@ -126,14 +140,40 @@ def _recorded_metrics(run_dir, spark):
 
 
 def test_recorded_pipeline_job_budget(spark, tmp_path):
-    """A recorded run runs no count job and no checkpoint collect, and its
-    job total stays under the pinned ceiling."""
+    """A recorded run runs no count job, no checkpoint collect and no
+    schema inference on its stage reads, and its job total stays under the
+    pinned ceiling. The schema each manifest records is the one a plain
+    parquet read of the stage infers."""
     pages = pages_df(spark, _small_corpus()).localCheckpoint(eager=True)
+    run_dir = str(tmp_path / "run")
     with _job_group(spark) as jobs:
-        dedup_pipeline(pages, CFG, run_dir=str(tmp_path / "run"))
+        dedup_pipeline(pages, CFG, run_dir=run_dir)
     assert jobs, "no jobs recorded for the run's job group"
     assert not _count_or_checkpoint_collect(jobs), _count_or_checkpoint_collect(jobs)
+    assert not _schema_inference(jobs), _schema_inference(jobs)
     assert len(jobs) <= JOB_CEILING, len(jobs)
+    ctx = RunContext(spark, run_dir, CFG.to_json())
+    for name in ("normalize", "signatures", "verified", "components", "clusters"):
+        m = ctx.manifest(name)
+        assert m["schema"] == spark.read.parquet(m["path"]).schema.json(), name
+
+
+def test_core_stages_run_on_doc_key(spark, tmp_path, monkeypatch):
+    """The url is hashed once, at normalize: the plans of the lsh_pairs,
+    substring and components stages compute no md5 — they key on the
+    doc_key column, with no string-id translation layer of their own."""
+    plans = {}
+    write_stage = RunContext.write_stage
+
+    def spy(self, stage, df, observe=None):
+        plans[stage] = df._jdf.queryExecution().executedPlan().toString()
+        return write_stage(self, stage, df, observe)
+
+    monkeypatch.setattr(RunContext, "write_stage", spy)
+    dedup_pipeline(pages_df(spark, _small_corpus()), CFG, run_dir=str(tmp_path))
+    for name in ("lsh_pairs", "substring", "components"):
+        assert "md5(" not in plans[name], name
+    assert "md5(" in plans["normalize"]  # the guard sees a url hash
 
 
 def test_unrecorded_pipeline_pool_jobs_keep_caller_group(spark):
@@ -147,7 +187,7 @@ def test_unrecorded_pipeline_pool_jobs_keep_caller_group(spark):
         dedup_pipeline(pages, CFG, run_dir=None)
     ungrouped_new = set(sc.statusTracker().getJobIdsForGroup(None)) - ungrouped_before
     assert not ungrouped_new, f"jobs outside the caller's group: {ungrouped_new}"
-    labels = {desc for _, desc, _ in jobs}
+    labels = {desc for _, desc, _, _ in jobs}
     for name in ("exact_edges", "lsh_pairs", "verified", "substr_cand"):
         assert f"stage:{name}" in labels, (name, labels)
     assert not _count_or_checkpoint_collect(jobs)
@@ -263,7 +303,7 @@ def test_cc_one_job_per_round(spark, edges):
         comp = connected_components(df)
     assert len(jobs) == _py_rounds(edges) + 1, jobs
     assert all(
-        n.startswith("localCheckpoint at") for _, _, names in jobs for n in names
+        n.startswith("localCheckpoint at") for _, _, names, _ in jobs for n in names
     ), jobs
     want: dict[int, int] = {}
     for a, b in edges:  # union-find reference

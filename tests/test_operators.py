@@ -9,7 +9,6 @@ from genome_deduplication_spark.operators.condense import (
     merge_intervals,
 )
 from genome_deduplication_spark.operators.connected_components import (
-    components_for_string_ids,
     connected_components,
 )
 from genome_deduplication_spark.operators.split import (
@@ -78,37 +77,22 @@ def test_connected_components_chain_and_clique(spark):
     assert got == want
 
 
-def test_components_for_string_ids(spark):
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("x", "y")], "id_a string, id_b string"
-    )
-    ids = spark.createDataFrame(
-        [("a",), ("b",), ("c",), ("x",), ("y",), ("lone",)], "url string"
-    )
-    got = {
-        (r["url"], r["cluster_key"])
-        for r in components_for_string_ids(edges, ids).collect()
-    }
-    assert got == {
-        ("a", "a"), ("b", "a"), ("c", "a"),
-        ("x", "x"), ("y", "x"),
-        ("lone", "lone"),
-    }
-
-
-def _lsh_key_order(ids):
-    """The operator's internal election order for string ids: hash128
-    (md5) of the id — compact keys keep url bytes out of the banded
-    explode/sort/shuffle (operators/lsh.py round-5 rewrite)."""
+def _keys(names):
+    """Fixed-width BINARY(16) keys, made like the pipeline's doc_key (md5
+    of the url); Python bytes order like Spark binary (unsigned)."""
     import hashlib
 
-    return sorted(ids, key=lambda u: hashlib.md5(u.encode()).digest())
+    return [hashlib.md5(n.encode()).digest() for n in names]
+
+
+def _key_pairs(df):
+    return {(bytes(r["id_a"]), bytes(r["id_b"])) for r in df.collect()}
 
 
 def test_candidate_pairs_star_and_clique_policy(spark):
     """Small buckets emit full cliques; big buckets emit a star around the
-    bucket-minimum member in election-key (hash128) order (bounded edges;
-    CC restores transitivity). Output pairs are id-normalized id_a < id_b."""
+    bucket-minimum key (bounded edges; CC restores transitivity). Output
+    pairs are key-ordered id_a < id_b."""
     from genome_deduplication_spark.config import DedupConfig
     from genome_deduplication_spark.operators.lsh import (
         CLIQUE_BUDGET,
@@ -117,19 +101,18 @@ def test_candidate_pairs_star_and_clique_policy(spark):
 
     cfg = DedupConfig()
     # identical minhash -> members share every band bucket
-    sig = [7] * cfg.num_perm
-    small = [(f"s{i:02d}", sig) for i in range(4)]
-    big = [(f"b{i:03d}", [9] * cfg.num_perm) for i in range(CLIQUE_BUDGET + 5)]
-    df = spark.createDataFrame(small + big, "url string, minhash array<bigint>")
-    got = {(r["id_a"], r["id_b"]) for r in candidate_pairs(df, cfg).collect()}
-    want = set()
-    ms = sorted(u for u, _ in small)
-    for i in range(len(ms)):
-        for j in range(i + 1, len(ms)):
-            want.add((ms[i], ms[j]))  # clique: all pairs, order-free
-    mb = _lsh_key_order([u for u, _ in big])
-    for other in mb[1:]:  # star around the key-order minimum
-        want.add((min(mb[0], other), max(mb[0], other)))
+    small = sorted(_keys(f"s{i:02d}" for i in range(4)))
+    big = sorted(_keys(f"b{i:03d}" for i in range(CLIQUE_BUDGET + 5)))
+    rows = [(k, [7] * cfg.num_perm) for k in small]
+    rows += [(k, [9] * cfg.num_perm) for k in big]
+    df = spark.createDataFrame(rows, "doc_key binary, minhash array<bigint>")
+    got = _key_pairs(candidate_pairs(df, cfg, id_col="doc_key"))
+    want = {
+        (small[i], small[j])  # clique: all pairs
+        for i in range(len(small))
+        for j in range(i + 1, len(small))
+    }
+    want |= {(big[0], other) for other in big[1:]}  # star around the min key
     assert got == want
 
 
@@ -145,18 +128,19 @@ def test_candidate_pairs_cap_and_truncation_stats(spark):
     )
 
     cfg = DedupConfig(max_bucket_size=5)
-    docs = [(f"d{i:03d}", [3] * cfg.num_perm) for i in range(20)]
-    df = spark.createDataFrame(docs, "url string, minhash array<bigint>")
-    got = {(r["id_a"], r["id_b"]) for r in candidate_pairs(df, cfg).collect()}
-    # the 5 smallest members in election-key (hash128) order survive the cap
-    kept = _lsh_key_order([u for u, _ in docs])[:5]
+    keys = _keys(f"d{i:03d}" for i in range(20))
+    docs = [(k, [3] * cfg.num_perm) for k in keys]
+    df = spark.createDataFrame(docs, "doc_key binary, minhash array<bigint>")
+    got = _key_pairs(candidate_pairs(df, cfg, id_col="doc_key"))
+    # the 5 smallest keys survive the cap
+    kept = sorted(keys)[:5]
     want = {
-        (min(kept[i], kept[j]), max(kept[i], kept[j]))
+        (kept[i], kept[j])
         for i in range(5)
         for j in range(i + 1, 5)  # 5 <= CLIQUE_BUDGET -> full clique
     }
     assert got == want
-    stats = truncation_stats(df, cfg).collect()[0]
+    stats = truncation_stats(df, cfg, id_col="doc_key").collect()[0]
     assert stats["buckets_total"] == cfg.bands
     assert stats["buckets_capped"] == cfg.bands  # every band bucket size 20
     assert stats["buckets_dropped"] == 0

@@ -3,11 +3,19 @@ analogues, reference tests/checks.txt:1-9)."""
 
 from __future__ import annotations
 
+import datetime
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
 from genome_deduplication_spark.config import DedupConfig
-from genome_deduplication_spark.fixtures.pages import fx_mixed, fx_near, pages_df
+from genome_deduplication_spark.fixtures.pages import (
+    Corpus,
+    fx_mixed,
+    fx_near,
+    pages_df,
+)
 from genome_deduplication_spark.oracle import (
     exact_jaccard_pairs,
     minhash_lsh_pairs,
@@ -68,19 +76,57 @@ def test_no_false_merges_of_controls(spark, mixed_result):
             assert clusters[u] == u, u
 
 
-def test_spark_matches_sequential_minhash_oracle(spark):
-    """Differential test (py<->cpp diff analogue): the Spark LSH/verify pair
-    set must equal the sequential oracle running identical math."""
-    corpus = fx_near(seed=42, groups=10)
+def _assert_matches_oracle(spark, corpus):
     df = pages_df(spark, corpus)
     tables = dedup_pipeline(df, CFG, run_dir=None, enable_substring_pass=False)
+    # verified pairs are doc_key pairs: map them to sorted url pairs
+    url = {
+        bytes(r["doc_key"]): r["url"]
+        for r in tables["normalized"].select("doc_key", "url").collect()
+    }
     got = {
-        tuple(sorted((r["id_a"], r["id_b"])))
+        tuple(sorted((url[bytes(r["id_a"])], url[bytes(r["id_b"])])))
         for r in tables["verified"].where("is_dup").collect()
     }
     docs = {r["url"]: r["text"] for r in corpus.rows}
-    want = minhash_lsh_pairs(docs, CFG)
-    assert got == want
+    assert got == minhash_lsh_pairs(docs, CFG)
+
+
+def _one_edit_group(seed: int = 0, members: int = 60, n_words: int = 300):
+    """One near-dup group: a base doc plus copies that each replace one
+    word, every copy at its own position — no two texts are equal, so the
+    exact-group election leaves every member in the LSH buckets."""
+    rng = random.Random(seed)
+    base = [f"w{rng.randrange(10**6)}" for _ in range(n_words)]
+    edits = [None] + rng.sample(range(n_words), members - 1)
+    corpus = Corpus()
+    for i, pos in enumerate(edits):
+        words = list(base)
+        if pos is not None:
+            words[pos] = "edited"
+        corpus.rows.append(
+            {
+                "url": f"https://star.example/{i}",
+                "warc_ts": datetime.datetime(2024, 1, 1, 0, 0, i),
+                "html": None,
+                "text": " ".join(words),
+                "lang": "en",
+            }
+        )
+    return corpus
+
+
+def test_spark_matches_sequential_minhash_oracle(spark):
+    """Differential test (py<->cpp diff analogue): the Spark LSH/verify pair
+    set must equal the sequential oracle running identical math."""
+    _assert_matches_oracle(spark, fx_near(seed=42, groups=10))
+
+
+def test_spark_matches_sequential_minhash_oracle_star_buckets(spark):
+    """The same differential on one 60-member near-dup group: most of its
+    band buckets exceed the clique budget, so both sides must pick each
+    star centre in doc_key (md5 of the url) order, not url order."""
+    _assert_matches_oracle(spark, _one_edit_group())
 
 
 def test_recall_vs_exact_jaccard_oracle(spark, mixed_result):
