@@ -155,19 +155,38 @@ def _build_bench_corpus(spark, n_docs: int):
     return spark.read.parquet(cache).repartition(par, "url")
 
 
-def _host_probe(secs: float = 5.0) -> float:
-    """Single-core host-speed probe (iters/s) — delegates to the repo's
-    one canonical kernel (bench_scaling.probe_iters), shared with the
-    quiet_pairs launch gates, the campaign ticker, and the hardware
-    ceiling, so all their numbers stay mutually comparable. This VM
-    alternates between quiet (~25-32k iters/s) and degraded (~10-16k,
-    hypervisor steal) phases on 10-25 min timescales (BENCH.md round 5);
-    embedding the probe makes every bench JSON carry its own weather
-    context so cross-round comparisons can be normalized instead of
-    argued."""
-    from bench_scaling import probe_speed
+def _probe_iters(secs: float) -> int:
+    """One window of the host-speed kernel: the L2-resident blocked
+    uint64 multiply-mod loop the signature kernel runs, one thread.
+    Returns iterations completed in ``secs`` seconds."""
+    import numpy as np
 
-    return round(probe_speed(secs), 1)
+    x = np.arange(32768, dtype=np.uint64) * np.uint64(2654435761) % np.uint64(
+        2**31 - 1
+    )
+    prod = np.empty_like(x)
+    buf = np.empty_like(x)
+    tmp = np.empty_like(x)
+    n = 0
+    t0 = time.time()
+    while time.time() - t0 < secs:
+        np.multiply(x, np.uint64(1103515245), out=prod)
+        prod += np.uint64(12345)
+        np.bitwise_and(prod, np.uint64(2**31 - 1), out=buf)
+        np.right_shift(prod, np.uint64(31), out=tmp)
+        buf += tmp
+        n += 1
+    return n
+
+
+def _host_probe(secs: float = 5.0) -> float:
+    """Single-core host-speed probe (mean iters/s over one window). A
+    shared VM can alternate between quiet and degraded (hypervisor steal)
+    phases — ~25-32k vs ~10-16k iters/s on 10-25 min timescales in
+    BENCH.md round 5; embedding the probe makes every bench JSON carry
+    its own weather context so cross-round comparisons can be normalized
+    instead of argued."""
+    return round(_probe_iters(secs) / secs, 1)
 
 
 def main() -> None:

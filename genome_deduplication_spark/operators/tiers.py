@@ -9,13 +9,17 @@ connected components. Each tier sees only the previous tier's survivors
 removal tier — or ``kept`` — together with the id of the representative
 that shadows it. Reference analogue: the reference's fixed pass order
 with first-occurrence-wins deferred commit (code/dedup2.py:13-15,420-421),
-re-expressed as one declarative report instead of sequential file scans.
+re-expressed as one pass: each doc's identity-fold representatives are
+elected once, and one projection reads ``tier`` and ``kept_by`` off them
+and the near-dup component labels — no per-tier branches, no union.
 
 Scale shape (100 TB):
   - tiers 1-2 are hash-aggregates on uniform keys (canonical url /
-    normalized-text value) with a co-partitioned join-back — AQE reuses
-    the grouping exchange for the join, and a 10^8-recrawl URL collapses
-    to one group row (star join-back, never a collect_list);
+    normalized-text value) with a join-back — AQE reuses the grouping
+    exchange for the join, and a 10^8-recrawl URL or boilerplate text
+    collapses to one group row (star join-back, never a collect_list)
+    whose join-back AQE skew handling can split (a window election could
+    not split one key's partition);
   - tier 3 inherits lsh.py's count-guarded bucket caps and the O(log n)
     star CC — no all-pairs stage anywhere;
   - the output is one fixed-width row per input doc; normalized text is
@@ -66,6 +70,11 @@ def tier_dedup_report(
              exact-survivor (docs shorter than one shingle are ineligible
              and pass through, mirroring the pipeline's ambiguous split)
       kept   survived every tier
+
+    Each doc's representative per tier — ``url_rep``, ``exact_rep``
+    (NULL for empty/NULL text) and CC's ``component`` (NULL off every
+    near edge) — is the min id of its group; the first tier whose
+    representative is another doc names the tier.
     """
     # NULL/empty url -> a per-doc sentinel key ('\x00null:<id>'): it keeps
     # the row alive through the tier-1 equi-join (NULL keys are rejected by
@@ -91,32 +100,24 @@ def tier_dedup_report(
         "s",
     )
 
-    # -- tier 1: canonical-url identity fold --------------------------------
-    u_rep = base.groupBy("cu").agg(F.min("doc_id").alias("rep"))
-    t1 = base.join(u_rep, "cu").select("doc_id", "s", "rep")
-    url_removed = t1.where(F.col("doc_id") != F.col("rep")).select(
-        "doc_id", F.lit("url").alias("tier"), F.col("rep").alias("kept_by")
+    # -- identity folds: each doc's url and exact representatives ------------
+    u_rep = base.groupBy("cu").agg(F.min("doc_id").alias("url_rep"))
+    t1 = base.join(u_rep, "cu").select("doc_id", "s", "url_rep")
+    url_survivor = F.col("doc_id") == F.col("url_rep")
+    e_rep = (
+        t1.where(url_survivor & (F.length("s") > 0))  # NULL text -> filtered
+        .groupBy("s")
+        .agg(F.min("doc_id").alias("exact_rep"))
     )
-    surv1 = t1.where(F.col("doc_id") == F.col("rep")).select("doc_id", "s")
-
-    # -- tier 2: exact normalized-content fold among url-survivors ----------
-    valid = surv1.where(F.col("s").isNotNull() & (F.col("s") != ""))
-    e_rep = valid.groupBy("s").agg(F.min("doc_id").alias("rep"))
-    t2 = valid.join(e_rep, "s").select("doc_id", "s", "rep")
-    exact_removed = t2.where(F.col("doc_id") != F.col("rep")).select(
-        "doc_id", F.lit("exact").alias("tier"), F.col("rep").alias("kept_by")
+    # multi-consumer cut: reps feeds the signature path AND the labelling
+    # projection, which would each re-run normalize + both folds. Eager,
+    # not lazy — lazy localCheckpoint marks are silently not persisted
+    # under AQE (the round-4 recompute bug, plans/pipeline.py stage()).
+    reps = (
+        t1.join(e_rep, "s", "left")
+        .select("doc_id", "s", "url_rep", "exact_rep")
+        .localCheckpoint(eager=True)
     )
-    surv2 = t2.where(F.col("doc_id") == F.col("rep")).select(
-        "doc_id", "s"
-    ).unionByName(
-        surv1.where(F.col("s").isNull() | (F.col("s") == "")).select("doc_id", "s")
-    )
-    # multi-consumer cut: surv2 feeds the signature path AND the
-    # ineligible-kept branch; without materialization each consumer
-    # re-runs normalize + both identity-tier aggregates. Eager, not lazy —
-    # lazy localCheckpoint marks are silently not persisted under AQE
-    # (the round-4 recompute bug, plans/pipeline.py stage()).
-    surv2 = surv2.localCheckpoint(eager=True)
 
     # -- tier 3: near-dup among exact-survivors ------------------------------
     # same machinery as the flagship pipeline (signatures -> capped LSH
@@ -131,45 +132,38 @@ def tier_dedup_report(
     # it returns (min node id) IS the numeric-min representative, so no
     # separate rep election (groupBy + join) is needed.
     sigs = (
-        surv2.where(eligible)
-        .select(
-            F.col("doc_id").alias("url"),
-            sig_udf(F.col("s")).alias("sig"),
+        reps.where(
+            url_survivor
+            & (F.coalesce("exact_rep", "doc_id") == F.col("doc_id"))
+            & eligible
         )
+        .select("doc_id", sig_udf(F.col("s")).alias("sig"))
         .select(
-            "url",
+            "doc_id",
             F.col("sig.minhash").alias("minhash"),
             F.col("sig.simhash").alias("simhash"),
         )
-        # the Arrow signature kernel has ~5 downstream consumers (bucket
-        # counts, pairs, verify a/b, CC universe) — run it exactly once
+        # the Arrow signature kernel has ~4 downstream consumers (bucket
+        # counts, pairs, verify a/b) — run it exactly once
         .localCheckpoint(eager=True)
     )
-    pairs = candidate_pairs(sigs, cfg)
-    edges = dup_edges(verify_pairs(pairs, sigs, cfg))
+    pairs = candidate_pairs(sigs, cfg, id_col="doc_id")
+    edges = dup_edges(verify_pairs(pairs, sigs, cfg, id_col="doc_id"))
     comp = connected_components(
         edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     )
-    universe = sigs.select(F.col("url").alias("doc_id"))
-    t3 = universe.join(
-        comp, universe["doc_id"] == comp["node"], "left"
-    ).select(
-        "doc_id", F.coalesce("component", "doc_id").alias("rep")
-    )
-    near_removed = t3.where(F.col("doc_id") != F.col("rep")).select(
-        "doc_id", F.lit("near").alias("tier"), F.col("rep").alias("kept_by")
-    )
-    kept_ids = t3.where(F.col("doc_id") == F.col("rep")).select("doc_id").unionByName(
-        surv2.where(~F.coalesce(eligible, F.lit(False))).select("doc_id")
-    )
-    kept = kept_ids.select(
-        "doc_id",
-        F.lit("kept").alias("tier"),
-        F.lit(None).cast("long").alias("kept_by"),
-    )
 
-    return (
-        url_removed.unionByName(exact_removed)
-        .unionByName(near_removed)
-        .unionByName(kept)
+    # -- attribution: the first representative that is another doc wins ----
+    # (a NULL representative compares NULL, which `when` skips)
+    url, exact, near = (
+        F.col("doc_id") != F.col(c) for c in ("url_rep", "exact_rep", "component")
+    )
+    tier = F.when(url, "url").when(exact, "exact").when(near, "near")
+    kept_by = (
+        F.when(url, F.col("url_rep"))
+        .when(exact, F.col("exact_rep"))
+        .when(near, F.col("component"))
+    )
+    return reps.join(comp, F.col("doc_id") == F.col("node"), "left").select(
+        "doc_id", tier.otherwise("kept").alias("tier"), kept_by.alias("kept_by")
     )

@@ -10,10 +10,10 @@ Two oracles:
 * :func:`oracle_clusters_exact_jaccard` — ground truth: exact shingle-set
   Jaccard >= threshold pairs + union-find clusters. The Spark pipeline's
   dup-pair recall is measured against THIS (BASELINE.json: recall >= 0.99).
-* :func:`oracle_clusters_minhash` — same MinHash/LSH/verify math as the
+* :func:`minhash_lsh_pairs` — same MinHash/LSH/verify math as the
   Spark pipeline but sequential; used to localize any recall loss to either
-  the probabilistic scheme (oracle_minhash vs oracle_exact) or the Spark
-  implementation (spark vs oracle_minhash, which must match EXACTLY).
+  the probabilistic scheme (minhash twin vs exact oracle) or the Spark
+  implementation (spark vs minhash twin, which must match EXACTLY).
 """
 
 from __future__ import annotations
@@ -120,15 +120,22 @@ def oracle_clusters_exact_jaccard(
     return _clusters_from_edges(sorted(docs), edges)
 
 
-def minhash_lsh_pairs(docs: dict[str, str], cfg: DedupConfig) -> set[tuple[str, str]]:
+def minhash_lsh_pairs(docs: dict[str, str], cfg: DedupConfig,
+                      warc_ts: dict) -> set[tuple[str, str]]:
     """Sequential twin of the Spark MinHash/LSH/verify pair generation;
-    url pairs, each (lesser, greater)."""
+    url pairs, each (lesser, greater). Like the pipeline's ``_reps``, it
+    sends one doc per normalized text into LSH: the first-occurrence-wins
+    min(warc_ts, url) member, a NULL ``warc_ts`` first (Spark's order)."""
+    groups: dict[str, list[str]] = defaultdict(list)
+    for u, t in docs.items():
+        groups[normalize_py(t)].append(u)
     sigs: dict[str, list[int]] = {}
     simh: dict[str, int] = {}
-    for u, t in docs.items():
-        s = sorted(pipeline_shingles_py(normalize_py(t), cfg.shingle_k))
+    for text, members in groups.items():
+        s = sorted(pipeline_shingles_py(text, cfg.shingle_k))
         if not s:
             continue
+        u = min(members, key=lambda m: (warc_ts[m] is not None, warc_ts[m], m))
         sigs[u] = minhash_py(s, cfg)
         simh[u] = simhash_py(s, cfg.simhash_bits)
     buckets: dict[tuple[int, tuple[int, ...]], list[str]] = defaultdict(list)
@@ -165,11 +172,6 @@ def minhash_lsh_pairs(docs: dict[str, str], cfg: DedupConfig) -> set[tuple[str, 
         if est >= cfg.jaccard_threshold and ham <= cfg.simhash_max_hamming:
             out.add((a, b))
     return out
-
-
-def oracle_clusters_minhash(docs: dict[str, str], cfg: DedupConfig) -> dict[str, str]:
-    edges = minhash_lsh_pairs(docs, cfg)
-    return _clusters_from_edges(sorted(docs), edges)
 
 
 def pair_recall(got: set[tuple[str, str]], truth: set[tuple[str, str]]) -> float:

@@ -86,9 +86,9 @@ def build_training_corpus(
 
     # multi-consumer stage: flag_contaminated consumes `quality` twice
     # internally (n-gram explode + join-back) and the `clean` join below is
-    # a third consumer — without an eager cut the whole tier_dedup_report
-    # lineage (normalize, both identity-tier aggregates, LSH/verify/CC
-    # join-backs) replays up to 3x in the one output action. Eager, not
+    # a third consumer — without an eager cut the pages scan, the tier
+    # report's labelling join (representatives x CC labels) and the token
+    # counts replay up to 3x in the one output action. Eager, not
     # lazy: lazy localCheckpoint marks are silently not persisted under
     # AQE (the round-4 recompute bug).
     quality = quality.localCheckpoint(eager=True)

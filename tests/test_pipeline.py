@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from genome_deduplication_spark.config import DedupConfig
 from genome_deduplication_spark.fixtures.pages import (
+    _WORDS,
     Corpus,
     fx_mixed,
     fx_near,
@@ -89,7 +90,23 @@ def _assert_matches_oracle(spark, corpus):
         for r in tables["verified"].where("is_dup").collect()
     }
     docs = {r["url"]: r["text"] for r in corpus.rows}
-    assert got == minhash_lsh_pairs(docs, CFG)
+    warc_ts = {r["url"]: r["warc_ts"] for r in corpus.rows}
+    assert got == minhash_lsh_pairs(docs, CFG, warc_ts)
+
+
+def _group_corpus(texts: list[str]) -> Corpus:
+    corpus = Corpus()
+    for i, text in enumerate(texts):
+        corpus.rows.append(
+            {
+                "url": f"https://star.example/{i}",
+                "warc_ts": datetime.datetime(2024, 1, 1, 0, 0, i),
+                "html": None,
+                "text": text,
+                "lang": "en",
+            }
+        )
+    return corpus
 
 
 def _one_edit_group(seed: int = 0, members: int = 60, n_words: int = 300):
@@ -99,21 +116,28 @@ def _one_edit_group(seed: int = 0, members: int = 60, n_words: int = 300):
     rng = random.Random(seed)
     base = [f"w{rng.randrange(10**6)}" for _ in range(n_words)]
     edits = [None] + rng.sample(range(n_words), members - 1)
-    corpus = Corpus()
-    for i, pos in enumerate(edits):
+    texts = []
+    for pos in edits:
         words = list(base)
         if pos is not None:
             words[pos] = "edited"
-        corpus.rows.append(
-            {
-                "url": f"https://star.example/{i}",
-                "warc_ts": datetime.datetime(2024, 1, 1, 0, 0, i),
-                "html": None,
-                "text": " ".join(words),
-                "lang": "en",
-            }
-        )
-    return corpus
+        texts.append(" ".join(words))
+    return _group_corpus(texts)
+
+
+def _repeating_edit_group(seed: int = 0, members: int = 60, n_words: int = 300):
+    """One near-dup group over the fixture vocabulary whose one-word edits
+    can repeat (or restore the base word): with seed 0, 60 members hold 57
+    distinct texts, so the exact-group election drops 3 copies."""
+    rng = random.Random(seed)
+    base = [rng.choice(_WORDS) for _ in range(n_words)]
+    texts = [" ".join(base)]
+    for _ in range(members - 1):
+        words = list(base)
+        word = rng.choice(_WORDS)
+        words[rng.randrange(n_words)] = word
+        texts.append(" ".join(words))
+    return _group_corpus(texts)
 
 
 def test_spark_matches_sequential_minhash_oracle(spark):
@@ -127,6 +151,17 @@ def test_spark_matches_sequential_minhash_oracle_star_buckets(spark):
     band buckets exceed the clique budget, so both sides must pick each
     star centre in doc_key (md5 of the url) order, not url order."""
     _assert_matches_oracle(spark, _one_edit_group())
+
+
+def test_spark_matches_sequential_minhash_oracle_repeated_texts(spark):
+    """The same differential on a group that holds exact copies: the
+    pipeline sends one representative per normalized text into LSH, so
+    the twin must collapse each exact group the same way — dropping the
+    copies can shrink a band bucket under the clique budget, turning its
+    star into a clique on both sides."""
+    corpus = _repeating_edit_group()
+    assert len({r["text"] for r in corpus.rows}) == 57
+    _assert_matches_oracle(spark, corpus)
 
 
 def test_recall_vs_exact_jaccard_oracle(spark, mixed_result):

@@ -86,6 +86,34 @@ def test_redact_pii_counts_order_and_placeholders(spark):
     assert out[5]["redacted_text"] == "<EMAIL> from <IP> dial <PHONE>"
 
 
+def test_masked_word_spans_single_exchange(spark, sf_dir):
+    """Plan guard: q_masked_word_spans' three windows and its island
+    groupBy all key on doc_id first, so _read's explicit
+    hashpartitioning(doc_id) satisfies every one of them — the plan has
+    exactly that one shuffle Exchange, below all three windows."""
+    import os
+
+    import pytest
+
+    if not os.path.exists(f"{sf_dir}/documents.parquet"):
+        pytest.skip("driver testdata not present")
+    import __spark_entry__ as entrymod
+
+    plan = entrymod.q_masked_word_spans(spark, sf_dir)._jdf.queryExecution()
+    plan = plan.executedPlan().toString()
+    lines = [line.lstrip(" :|+-") for line in plan.splitlines()]
+    exchanges = [line for line in lines if "Exchange" in line]
+    assert len(exchanges) == 1, plan
+    assert exchanges[0].startswith("Exchange hashpartitioning(doc_id#"), plan
+    assert "REPARTITION_BY" in exchanges[0], plan
+    windows = [i for i, line in enumerate(lines) if line.startswith("Window ")]
+    assert len(windows) == 3, plan
+    below = lines.index(exchanges[0])
+    assert below > max(windows), plan
+    aggs = [i for i, line in enumerate(lines) if "HashAggregate" in line]
+    assert aggs and max(aggs) < below, plan
+
+
 def test_quality_queries_are_shuffle_free(spark):
     """Scale guard: per-doc quality metrics are row-local — the plans
     must contain no Exchange of any kind (a shuffle here would move the
