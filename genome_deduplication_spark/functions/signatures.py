@@ -36,16 +36,18 @@ def _splitmix64(x: np.ndarray) -> np.ndarray:
 
 def _mersenne_mod_inplace(x: np.ndarray, out: np.ndarray, tmp: np.ndarray) -> np.ndarray:
     """out = x mod (2**31-1) for x < 2**62 — two shift/add folds + one
-    conditional subtract; ~5x cheaper than integer division and bit-exact
-    equal to `%` (property-tested)."""
+    branch-free conditional subtract; ~5x cheaper than integer division
+    and bit-exact equal to `%` (property-tested)."""
     np.bitwise_and(x, _M31, out=out)
     np.right_shift(x, np.uint64(31), out=tmp)
     out += tmp
     np.bitwise_and(out, _M31, out=tmp)
     out >>= np.uint64(31)
-    tmp += out
-    np.copyto(out, tmp)
-    out[out >= _M31] -= _M31
+    tmp += out  # tmp <= p + 1
+    # tmp - p wraps to a huge uint64 when tmp < p, so the minimum is the
+    # reduced value either way (no boolean mask, no fancy index)
+    np.subtract(tmp, _M31, out=out)
+    np.minimum(out, tmp, out=out)
     return out
 
 

@@ -145,6 +145,13 @@ def test_mersenne_mod_equals_modulo():
 
     rng = random.Random(31)
     edge = [0, 1, P - 1, P, P + 1, 2 * P, (1 << 62) - 1, (1 << 61), 1 << 31]
+    # the folds leave values in [0, p]: probe the wrap-around subtract at
+    # neighbours of multiples of p across the range, up to the largest
+    # multiple below 2**62, and the all-ones 31-bit halves
+    top = ((1 << 62) - 1) // P
+    for k in (3, 1 << 20, 1 << 31, top - 1, top):
+        edge += [k * P - 1, k * P, k * P + 1]
+    edge += [(P << 31) | P, (P << 31) | (P - 1), ((P - 1) << 31) | P]
     rand = [rng.randrange(0, 1 << 62) for _ in range(10000)]
     x = np.array(edge + rand, dtype=np.uint64)
     out = np.empty_like(x)
@@ -152,6 +159,7 @@ def test_mersenne_mod_equals_modulo():
     got = _mersenne_mod_inplace(x.copy(), out, tmp)
     want = x % np.uint64(P)
     assert (got == want).all()
+    assert (got < P).all()
 
 
 def test_blocked_kernel_matches_python_across_block_boundaries():

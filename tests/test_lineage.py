@@ -1,7 +1,8 @@
 """Pipeline lineage at zero extra Spark jobs: a recorded run's stage counts
 come from the jobs that write the stages (observed aggregates + parquet
-footers), connected components runs one job per round, and the overlapped
-pool jobs of an unrecorded run keep the caller's job group."""
+footers), connected components runs one job per round (two jobs in all
+on the driver path), and the overlapped pool jobs of an unrecorded run
+keep the caller's job group."""
 
 from __future__ import annotations
 
@@ -29,13 +30,14 @@ from genome_deduplication_spark.sources.checkpoint import RunContext
 
 CFG = DedupConfig()
 
-# A run of _small_corpus() (32 docs, shuffle_partitions=8) measured 42-43
-# jobs recorded and 46-47 unrecorded, at local[4] and local[8]. With url
-# strings through the near-dup core (a hash128 map and join-backs in LSH,
-# anchor pairs and CC) and a schema-inference job on every stage re-read,
-# it took 60-61 recorded and 61-62 unrecorded; with count jobs and
-# per-stage checkpoint histograms a recorded run took 105-106.
-JOB_CEILING = 49
+# A run of _small_corpus() (32 docs, shuffle_partitions=8) measured 34-35
+# jobs recorded and 37 unrecorded, at local[4] and local[8]. With CC's
+# star loop on small graphs too it took 42-43 recorded and 46-47
+# unrecorded; with url strings through the near-dup core (a hash128 map
+# and join-backs in LSH, anchor pairs and CC) and a schema-inference job
+# on every stage re-read, 60-61 recorded and 61-62 unrecorded; with count
+# jobs and per-stage checkpoint histograms a recorded run took 105-106.
+JOB_CEILING = 39
 
 _groups = itertools.count()
 
@@ -156,6 +158,9 @@ def test_recorded_pipeline_job_budget(spark, tmp_path):
     for name in ("normalize", "signatures", "verified", "components", "clusters"):
         m = ctx.manifest(name)
         assert m["schema"] == spark.read.parquet(m["path"]).schema.json(), name
+    # CC's labels are written as one part file (the driver path's
+    # coalesce(1); AQE's coalescing on the loop side), as the loop did
+    assert ctx.manifest("components")["n_partitions"] == 1
 
 
 def test_core_stages_run_on_doc_key(spark, tmp_path, monkeypatch):
@@ -294,17 +299,13 @@ def _one_job_per_action(spark):
         pytest.param([(9, 1), (7, 3), (3, 9), (12, 4), (4, 7), (20, 21)], id="mixed"),
     ],
 )
-def test_cc_one_job_per_round(spark, edges):
-    """The initial cut plus one checkpoint job per round — the convergence
-    fingerprint is observed on that job, not collected by another; empty
-    input finishes instead of blocking on the observation."""
+def test_cc_one_job_per_round(spark, cc_sides, edges):
+    """Loop side: the initial cut plus one checkpoint job per round — the
+    convergence fingerprint is observed on that job, not collected by
+    another; empty input finishes instead of blocking on the observation.
+    Driver side: the cut and the one Arrow collect, nothing else (building
+    the result from an Arrow table runs no job)."""
     df = spark.createDataFrame(edges, "src long, dst long")
-    with _one_job_per_action(spark), _job_group(spark) as jobs:
-        comp = connected_components(df)
-    assert len(jobs) == _py_rounds(edges) + 1, jobs
-    assert all(
-        n.startswith("localCheckpoint at") for _, _, names, _ in jobs for n in names
-    ), jobs
     want: dict[int, int] = {}
     for a, b in edges:  # union-find reference
         ra, rb = want.get(a, a), want.get(b, b)
@@ -313,5 +314,13 @@ def test_cc_one_job_per_round(spark, edges):
             if v in (ra, rb):
                 want[k] = lo
         want[a] = want[b] = lo
-    got = {r["node"]: r["component"] for r in comp.collect()}
-    assert got == want
+    for side in cc_sides():
+        with _one_job_per_action(spark), _job_group(spark) as jobs:
+            comp = connected_components(df)
+        kinds = [{n.split(" at ")[0] for n in names} for _, _, names, _ in jobs]
+        if side == "loop":
+            assert kinds == [{"localCheckpoint"}] * (_py_rounds(edges) + 1), jobs
+        else:  # the cut's checkpoint, then the Arrow collect
+            assert kinds == [{"localCheckpoint"}, {"toArrow"}], jobs
+        got = {r["node"]: r["component"] for r in comp.collect()}
+        assert got == want, side

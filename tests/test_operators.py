@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import random
+
+import pytest
 from pyspark.sql import functions as F
 
 from genome_deduplication_spark.operators.condense import (
@@ -66,15 +69,88 @@ def test_merge_intervals(spark):
     assert got == {("a", 0, 15), ("a", 20, 35), ("b", 0, 1)}
 
 
-def test_connected_components_chain_and_clique(spark):
+def test_connected_components_chain_and_clique(spark, cc_sides):
     # chain 1-2-3-4-5, clique 10-11-12, singleton edge 20-21
     edges = [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (11, 12), (10, 12), (20, 21)]
     df = spark.createDataFrame(edges, "src bigint, dst bigint")
-    got = {(r["node"], r["component"]) for r in connected_components(df).collect()}
     want = {(n, 1) for n in (1, 2, 3, 4, 5)} | {(n, 10) for n in (10, 11, 12)} | {
         (20, 20), (21, 20)
     }
-    assert got == want
+    for side in cc_sides():
+        got = {(r["node"], r["component"]) for r in connected_components(df).collect()}
+        assert got == want, side
+
+
+def _cc_labels(df):
+    def key(v):
+        return bytes(v) if isinstance(v, bytearray) else v
+
+    return {key(r["node"]): key(r["component"])
+            for r in connected_components(df).collect()}
+
+
+def _random_graph_keys(kind, rng):
+    if kind == "int64":
+        return [rng.randrange(-(1 << 63), 1 << 63) for _ in range(300)]
+    if kind == "binary16":
+        # first byte on both sides of 0x80: Spark orders binary unsigned,
+        # so a signed-byte comparison would elect different roots
+        return [bytes([rng.choice((0x00, 0x7F, 0x80, 0xFF))])
+                + rng.randbytes(15) for _ in range(300)]
+    alphabet = "aZ~éüÿΩ日本語𝄞\u00a0"  # 1- to 4-byte UTF-8, BMP and astral
+    return ["".join(rng.choice(alphabet) for _ in range(rng.randint(1, 4)))
+            for _ in range(300)]
+
+
+@pytest.mark.parametrize(
+    "kind,spark_type",
+    [("int64", "bigint"), ("binary16", "binary"), ("string", "string")],
+)
+def test_connected_components_matches_union_find(spark, cc_sides, kind, spark_type):
+    """Driver path, star loop and the sequential oracle.UnionFind agree on
+    random graphs (self-loops, repeated and reversed edges included): the
+    same components and the same min-key label, under Spark's order for
+    signed int64, unsigned binary and UTF-8 strings."""
+    from genome_deduplication_spark.oracle import UnionFind
+
+    rng = random.Random(f"cc-{kind}")
+    keys = _random_graph_keys(kind, rng)
+    edges = [(rng.choice(keys), rng.choice(keys)) for _ in range(250)]
+    edges += [(b, a) for a, b in edges[:20]] + [(keys[0], keys[0])]
+    uf = UnionFind()
+    for a, b in edges:
+        uf.union(a, b)
+    want = {x: uf.find(x) for x in uf.parent
+            if any(x in e and e[0] != e[1] for e in edges)}
+    df = spark.createDataFrame(edges, f"src {spark_type}, dst {spark_type}")
+    for side in cc_sides():
+        assert _cc_labels(df) == want, side
+
+
+def test_connected_components_driver_plan_is_local(spark):
+    """Below the gate the labels come back as one Arrow-built partition: a
+    LocalTableScan, not a pickled PythonRDD (an ExistingRDD scan, which
+    would start a second pool of Python workers), and one partition so a
+    caller that writes the result keeps one part file."""
+    df = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "src long, dst long")
+    out = connected_components(df)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan, plan
+    assert "ExistingRDD" not in plan, plan
+    assert out.rdd.getNumPartitions() == 1
+
+
+def test_connected_components_unconverged_raises(spark, monkeypatch):
+    """The star loop must not return the labels of a round that is not a
+    fixed point: a 40-node chain needs more than one round."""
+    from genome_deduplication_spark.operators import connected_components as cc
+
+    monkeypatch.setattr(cc, "DRIVER_EDGES", -1)
+    df = spark.createDataFrame([(i, i + 1) for i in range(39)], "src long, dst long")
+    with pytest.raises(RuntimeError, match="no fixed point"):
+        connected_components(df, max_iter=1).collect()
+    got = {r["node"]: r["component"] for r in connected_components(df).collect()}
+    assert got == {i: 0 for i in range(40)}
 
 
 def _keys(names):
@@ -289,11 +365,12 @@ def test_overlap_pairs_join_key_includes_time_bucket(spark):
     assert any("bucket#" in ln for ln in join_lines), "\n".join(join_lines)
 
 
-def test_cc_rounds_actually_persist(spark):
+def test_cc_rounds_actually_persist(spark, cc_sides):
     """Regression guard for the round-4 caching bug: lazy
     localCheckpoint(eager=False) is silently NOT persisted under AQE, so
     CC rounds recomputed full lineage. The eager rounds must leave
-    persisted RDDs behind (storage level with memory or disk set)."""
+    persisted RDDs behind (storage level with memory or disk set); so
+    must the initial cut the driver path collects."""
     from pyspark.sql import functions as F
 
     edges = spark.createDataFrame(
@@ -305,15 +382,20 @@ def test_cc_rounds_actually_persist(spark):
     # persisted RDDs from earlier tests, and Spark's ContextCleaner may
     # unpersist any of those between the two reads (observed: the global
     # count DROPPED across a passing CC run). Only NEW ids are evidence.
-    before_ids = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
-    comp = connected_components(edges)
-    n = comp.count()
-    after_ids = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
-    assert n > 0
-    assert after_ids - before_ids, (
-        "connected_components rounds left no newly persisted RDDs — the "
-        "eager localCheckpoint contract is broken (see PLANS.md round 4)"
-    )
+    for side in cc_sides():
+        before_ids = set(
+            spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
+        )
+        comp = connected_components(edges)
+        n = comp.count()
+        after_ids = set(
+            spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
+        )
+        assert n > 0
+        assert after_ids - before_ids, (
+            f"connected_components ({side}) left no newly persisted RDDs — "
+            "the eager localCheckpoint contract is broken (see PLANS.md round 4)"
+        )
 
 
 def test_stratified_sample_exact_counts_and_rank_parity(spark):

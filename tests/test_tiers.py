@@ -166,13 +166,15 @@ def test_tier_plan_compiles_under_wholestage_codegen(spark):
             spark.conf.set("spark.sql.codegen.fallback", old)
 
 
-def test_tier_report_plans_each_fold_once(spark):
+def test_tier_report_plans_each_fold_once(spark, cc_sides):
     """Plan guard for the single-pass shape: both identity folds (the
     canonical-url aggregate keyed on ``cu`` and the exact-text aggregate
     keyed on ``s``) sit behind the one eager checkpoint of the per-doc
     representatives, so the returned frame's executed plan holds neither
     aggregate — a per-tier branch that replayed a fold would bring its
-    HashAggregate back into the plan."""
+    HashAggregate back into the plan. Checked on both sides of CC's
+    driver gate; only the star loop leaves aggregates (its labels) in
+    the plan, which shows the guard can see one."""
     import re
 
     rng = random.Random(5)
@@ -184,10 +186,12 @@ def test_tier_report_plans_each_fold_once(spark):
         (3, "https://p.example.com/c", _long_text(rng)),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, url string, text string")
-    out = tier_dedup_report(docs, CFG)
-    got = {r["doc_id"]: (r["tier"], r["kept_by"]) for r in out.collect()}
-    assert got == {0: ("kept", None), 1: ("url", 0), 2: ("exact", 0),
-                   3: ("kept", None)}
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "HashAggregate" in plan, plan  # CC's label aggregates stay
-    assert not re.search(r"HashAggregate\(keys=\[(cu|s)#", plan), plan
+    for side in cc_sides():
+        out = tier_dedup_report(docs, CFG)
+        got = {r["doc_id"]: (r["tier"], r["kept_by"]) for r in out.collect()}
+        assert got == {0: ("kept", None), 1: ("url", 0), 2: ("exact", 0),
+                       3: ("kept", None)}, side
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        if side == "loop":
+            assert "HashAggregate" in plan, plan  # CC's label aggregates
+        assert not re.search(r"HashAggregate\(keys=\[(cu|s)#", plan), (side, plan)
