@@ -55,37 +55,34 @@ def _h31_duck(expr: str) -> str:
     return f"({_h60_duck(expr)} % {MERSENNE31})"
 
 
-# redistribution keys for the driver testdata tables (first-class entity
-# keys — unique or near-uniform, so a hash repartition spreads evenly)
-_READ_KEYS = {
-    "documents": "doc_id",
-    "embeddings": "vec_id",
-    # the keys the heavy consumers aggregate/window on, so the exchange
-    # can satisfy a downstream required distribution instead of adding one
-    "lineitem": "l_suppkey",
-    "events": "user_id",
-}
+def _read(
+    spark: SparkSession, sf_dir: str, name: str, key: str | None = None
+) -> DataFrame:
+    """Read one driver testdata table; spread the scan only on ``key``.
 
+    The rule: spread only where a heavy per-row kernel sits above an
+    unsplittable scan. The testdata tables are single-file,
+    single-row-group parquet, so the scan is one task and every kernel
+    above it runs on one core unless the scan is hash-repartitioned;
+    under a cheap plan that repartition is pure cost. A call site passes
+    its table's key (deterministic, and same-key aggregates and windows
+    above reuse the exchange) when its query is more than 10% slower
+    without the spread, timed as bench.py times it at sf0.1, local[4].
+    BENCH.md ("Scan spread per query") has the per-query table and how
+    it was measured.
 
-def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    import os as _os
+    The spread fires only while the file is too small to give one split
+    per core (at real scale the scan already yields enough splits), with
+    one partition per ~64 KB of parquet, capped at the core count.
+    """
+    import os
 
     path = f"{sf_dir}/{name}.parquet"
     df = spark.read.parquet(path)
-    # The driver testdata tables are single-file, single-row-group parquet:
-    # a row group cannot be split, so the scan is ONE task and every
-    # scan-side computation (normalize/md5/Arrow kernels) serializes onto
-    # one core regardless of cluster size (measured: 3.9-6.2 s single-task
-    # jobs at local[32], event-log profile OPTIMIZATION_r06.md). This is
-    # the optimization guide's "input skew: one huge unsplittable file —
-    # repartition immediately after the read" case (§2.5). Scale-adaptive:
-    # only fires when the file is too small to split into >= one split per
-    # core (at real scale the scan already yields >= cores splits and no
-    # exchange is added); the key is the table's entity id, deterministic
-    # (guide §2.5 warns off rand-derived keys) and aligned with the
-    # partition count so same-key downstream aggregates reuse the exchange.
+    if key is None:
+        return df
     try:
-        n_bytes = _os.path.getsize(path)
+        n_bytes = os.path.getsize(path)
     except OSError:
         return df
     par = spark.sparkContext.defaultParallelism
@@ -96,21 +93,8 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         )
     except ValueError:  # suffixed forms like "128m": keep the default
         max_split = 128 * 1024 * 1024
-    key = _READ_KEYS.get(name)
-    if key is not None and n_bytes < par * max_split:
-        # partition count derived from INPUT SIZE (guide §1/§2: derive
-        # from data, don't pin to the core count): ~64 KB of compressed
-        # parquet per partition keeps per-task compute large enough to
-        # amortize task overhead on small tables while still engaging
-        # every core once tables carry real data; capped at the core
-        # count. SPARK_GRAFT_READ_PAR overrides for experiments.
-        import os as _os2
-
-        override = _os2.environ.get("SPARK_GRAFT_READ_PAR")
-        if override:
-            n = int(override)
-        else:
-            n = max(2, min(par, n_bytes // (64 * 1024)))
+    if n_bytes < par * max_split:
+        n = max(2, min(par, n_bytes // (64 * 1024)))
         df = df.repartition(n, F.col(key))
     return df
 
@@ -127,7 +111,7 @@ def _h31(col):
 def q_exact_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-duplicate clustering [D4, S3]: content-hash groupBy + min-id
     canonical election (first-occurrence-wins, reference code/dedup2.py:420)."""
-    docs = _read(spark, sf_dir, "documents")
+    docs = _read(spark, sf_dir, "documents", key="doc_id")
     keyed = docs.select(
         "doc_id", hash60(normalize_text(F.col("text"))).alias("content_hash")
     )
@@ -149,7 +133,7 @@ def q_char_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     hot-posting-list prune for all-pairs similarity: the self-join work is
     sum(df^2) over shingles, and one boilerplate shingle present in every
     doc makes that quadratic in corpus size."""
-    docs = _read(spark, sf_dir, "documents")
+    docs = _read(spark, sf_dir, "documents", key="doc_id")
     sh_all = docs.select(
         "doc_id",
         F.explode(char_shingles_poly(normalize_text(F.col("text")))).alias("h"),
@@ -199,7 +183,7 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signature (first 16 perms) via the shuffle-with-map-side-
     combine formulation [D1, P2, P4]: explode shingles, 16 min-aggregates of
     (a*h+b) mod p — arithmetic identical to the pandas-UDF kernel."""
-    docs = _read(spark, sf_dir, "documents")
+    docs = _read(spark, sf_dir, "documents", key="doc_id")
     a, b = CFG.minhash_coefficients()
     sh = docs.select(
         "doc_id",
@@ -219,7 +203,7 @@ def q_masked_word_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     [D2, A1]: positions of tokens seen earlier in the doc, merged into
     maximal [start, end) spans widened by 1 (reference condense_masked_regions
     semantics, code/dedup2.py:235-246)."""
-    docs = _read(spark, sf_dir, "documents")
+    docs = _read(spark, sf_dir, "documents", key="doc_id")
     toks = docs.select(
         "doc_id",
         F.posexplode(F.split(normalize_text(F.col("text")), " ")).alias("pos0", "tok"),
@@ -250,7 +234,7 @@ def q_masked_word_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_shingle_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shingle-frequency histogram [A3, S7]: the KMC k-mer count histogram
     analogue (reference kmer_counter_dedup_files.sh)."""
-    docs = _read(spark, sf_dir, "documents")
+    docs = _read(spark, sf_dir, "documents", key="doc_id")
     sh = docs.select(
         F.explode(char_shingles_poly(normalize_text(F.col("text")))).alias("h")
     )
@@ -334,7 +318,7 @@ def q_merged_ship_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval merge per supplier [R7, R8 pattern]: lineitem ship windows
     [shipdate, shipdate+7d) merged when overlapping (reference
     check_beds.sh:51-74 coverage-merge semantics)."""
-    li = _read(spark, sf_dir, "lineitem")
+    li = _read(spark, sf_dir, "lineitem", key="l_suppkey")
     iv = li.select(
         "l_suppkey",
         F.unix_timestamp("l_shipdate").alias("s"),
@@ -386,7 +370,7 @@ def q_doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing-style document fingerprint [rolling-hash fingerprinting]:
     min anchor shingle (hash % 32 == 0) per doc — the candidate index of the
     exact-substring pass (operators/suffix_array.pairs_from_anchor_rows)."""
-    docs = _read(spark, sf_dir, "documents")
+    docs = _read(spark, sf_dir, "documents", key="doc_id")
     sh = docs.select(
         "doc_id",
         F.explode(char_shingles_poly(normalize_text(F.col("text")))).alias("h"),
@@ -401,7 +385,7 @@ def q_doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_embedding_exact_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-duplicate vectors [dedup over embeddings]: group by the raw
     vector, min-id election."""
-    emb = _read(spark, sf_dir, "embeddings")
+    emb = _read(spark, sf_dir, "embeddings", key="vec_id")
     canon = emb.groupBy("embedding").agg(
         F.min("vec_id").alias("cluster_id"), F.count(F.lit(1)).alias("cluster_size")
     )
@@ -411,7 +395,7 @@ def q_embedding_exact_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_embedding_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-3 neighbors [similarity search] for query
     vectors vec_id < 100; JVM-side F.aggregate/zip_with dot products."""
-    emb = _read(spark, sf_dir, "embeddings")
+    emb = _read(spark, sf_dir, "embeddings", key="vec_id")
     vec = emb.select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
@@ -754,7 +738,7 @@ def q_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     differential testing lives in tests/test_pipeline.py."""
     from genome_deduplication_spark.plans.pipeline import dedup_pipeline
 
-    docs = _read(spark, sf_dir, "documents")
+    docs = _read(spark, sf_dir, "documents", key="doc_id")
     pages = docs.select(
         F.col("doc_id").cast("string").alias("url"),
         F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("warc_ts"),
@@ -890,7 +874,7 @@ def q_boilerplate_cleaned(spark: SparkSession, sf_dir: str) -> DataFrame:
         remove_boilerplate_phrases,
     )
 
-    docs = _read(spark, sf_dir, "documents")
+    docs = _read(spark, sf_dir, "documents", key="doc_id")
     return remove_boilerplate_phrases(docs, n=8, min_df=2)
 
 
@@ -1027,7 +1011,7 @@ def q_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     gap arithmetic (operators/sessions.sessionize)."""
     from genome_deduplication_spark.operators.sessions import sessionize
 
-    ev = _read(spark, sf_dir, "events")
+    ev = _read(spark, sf_dir, "events", key="user_id")
     s = sessionize(ev, gap_seconds=21600)
     return s.groupBy("user_id", "session_idx").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -1112,7 +1096,7 @@ def q_incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from genome_deduplication_spark.operators.incremental import dedup_increment
 
-    docs = _read(spark, sf_dir, "documents")
+    docs = _read(spark, sf_dir, "documents", key="doc_id")
     norm = normalize_text(F.col("text"))
     pages = docs.where(norm.isNotNull() & (F.length(norm) >= K)).select(
         F.col("doc_id").cast("string").alias("url"), F.col("text")

@@ -172,7 +172,6 @@ def _skew_stress(spark, n_docs: int = 40000, hot_mod: int = 10):
     n_pairs = pairs.count()
     wall = round(_t.time() - t0, 3)
     spark.sparkContext.setJobDescription(None)
-    st = stats.collect()[0].asDict()
     m_hot = n_docs // hot_mod
     return {
         "n_docs": n_docs,
@@ -181,7 +180,7 @@ def _skew_stress(spark, n_docs: int = 40000, hot_mod: int = 10):
         "max_bucket_size_cap": cfg.max_bucket_size,
         "wall_sec": wall,
         "n_candidate_pairs": n_pairs,
-        **{k: int(v or 0) for k, v in st.items()},
+        **stats,
     }
 
 

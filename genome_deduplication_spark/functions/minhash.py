@@ -7,8 +7,11 @@ a fixed-width signature whose per-position equality rate estimates Jaccard.
 Universal-hash family sig_j(S) = min over s in S of (a_j*s + b_j) mod p,
 p = 2**31-1, with (a_j, b_j) derived deterministically from the config seed
 (config.DedupConfig.minhash_coefficients). Every intermediate fits in int64,
-so the identical arithmetic runs in three places: the Arrow-batched numpy
-kernel here, the generated DuckDB oracle SQL, and the pure-Python oracle.
+so the identical arithmetic runs in four places: the cache-blocked numpy
+kernel (functions/signatures.minhash_simhash_blocked) inside the one-pass
+document UDF, the min-aggregate expressions of the ``minhash_signatures``
+entry query, the DuckDB oracle SQL, and :func:`minhash_py` here, the
+pure-Python twin every other form is tested against.
 
 The coefficient arrays ride into executors via closure capture — the
 pandas-UDF equivalent of broadcasting the permutation matrix
@@ -18,77 +21,22 @@ broadcast threshold.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from genome_deduplication_spark.config import MERSENNE31, DedupConfig
 
 
-def make_minhash_udf(cfg: DedupConfig):
-    """Arrow-batched MinHash kernel: array<long> shingles -> array<long> sig.
-
-    Vectorized per batch: all rows' shingles are flattened once, then each of
-    the ``num_perm`` hash functions is one numpy pass + ``minimum.reduceat``
-    over row boundaries — no per-row Python.
-    """
-    a_list, b_list = cfg.minhash_coefficients()
-    a = np.array(a_list, dtype=np.int64)
-    b = np.array(b_list, dtype=np.int64)
-    p = np.int64(MERSENNE31)
-    num_perm = cfg.num_perm
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def minhash_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for series in it:
-            lengths = np.array([0 if s is None else len(s) for s in series])
-            n_rows = len(series)
-            sigs = np.full((n_rows, num_perm), -1, dtype=np.int64)
-            nonempty = lengths > 0
-            if nonempty.any():
-                flat = np.concatenate(
-                    [np.asarray(s, dtype=np.int64) for s in series[nonempty]]
-                )
-                starts = np.concatenate(
-                    ([0], np.cumsum(lengths[nonempty])[:-1])
-                ).astype(np.int64)
-                rows_sig = np.empty((nonempty.sum(), num_perm), dtype=np.int64)
-                for j in range(num_perm):
-                    hj = (flat * a[j] + b[j]) % p
-                    rows_sig[:, j] = np.minimum.reduceat(hj, starts)
-                sigs[np.flatnonzero(nonempty)] = rows_sig
-            out = [None if lengths[i] == 0 else sigs[i].tolist() for i in range(n_rows)]
-            yield pd.Series(out)
-
-    return minhash_udf
-
-
-def minhash_jaccard_estimate(sig_a: Column, sig_b: Column) -> Column:
-    """Fraction of equal signature positions — the Jaccard estimator.
-
-    Expression form (zip_with + aggregate). NOTE: Spark's higher-order
-    functions are CodegenFallback — every element comparison is an
-    interpreted, boxed lambda call. Fine for small frames / SQL-parity
-    contexts; the verification hot path uses the Arrow-vectorized twin
-    below (measured: scoring ~1.3M candidate pairs through this
-    expression cost ~520 CPU-s at 640k docs, PLANS.md round 5)."""
-    eq = F.zip_with(sig_a, sig_b, lambda x, y: (x == y).cast("int"))
-    return F.aggregate(eq, F.lit(0), lambda acc, v: acc + v) / F.size(sig_a)
-
-
 # DataType instance, not a DDL string: the decorator runs at import time,
 # and parsing "double" would require an active SparkSession
 @F.pandas_udf(T.DoubleType())
 def minhash_jaccard_estimate_vec(sig_a: pd.Series, sig_b: pd.Series) -> pd.Series:
-    """Arrow-vectorized twin of :func:`minhash_jaccard_estimate` —
-    bit-identical output (k equal positions / num_perm is an exact
-    power-of-two division in both engines): one (batch, num_perm) numpy
-    equality per Arrow batch instead of 2*num_perm interpreted lambda
-    calls per pair."""
+    """Fraction of equal signature positions — the Jaccard estimator, one
+    (batch, num_perm) numpy equality per Arrow batch. k equal positions /
+    num_perm is an exact power-of-two division, so the value equals the
+    twins' ``sum(x == y) / num_perm``."""
     if len(sig_a) == 0:
         return pd.Series([], dtype="float64")
     a_np = sig_a.to_numpy()
@@ -110,28 +58,11 @@ def minhash_jaccard_estimate_vec(sig_a: pd.Series, sig_b: pd.Series) -> pd.Serie
         ma = np.vstack(a_np[valid])
         mb = np.vstack(b_np[valid])
         out[valid] = (ma == mb).mean(axis=1)
-    # true SQL NULL (not NaN) for the masked rows, matching the old
-    # zip_with/aggregate expression's per-row null
+    # true SQL NULL (not NaN) for the masked rows
     return pd.Series(
         [None if not v else float(x) for v, x in zip(valid, out)],
         dtype="object",
     )
-
-
-def minhash_agg_exprs_spark(cfg: DedupConfig, shingle_col: str) -> list[str]:
-    """Spark-SQL aggregate expressions computing the signature from exploded
-    (doc, shingle) rows — the shuffle-with-map-side-combine formulation used
-    by the oracle-checked query path."""
-    a, b = cfg.minhash_coefficients()
-    return [
-        f"min(({a[j]} * {shingle_col} + {b[j]}) % {MERSENNE31}) AS mh_{j}"
-        for j in range(cfg.num_perm)
-    ]
-
-
-def minhash_agg_exprs_duckdb(cfg: DedupConfig, shingle_col: str) -> list[str]:
-    """Identical arithmetic for the DuckDB oracle."""
-    return minhash_agg_exprs_spark(cfg, shingle_col)
 
 
 def minhash_py(shingles: list[int], cfg: DedupConfig) -> list[int]:

@@ -3,8 +3,9 @@
 Running MinHash and SimHash as separate pandas UDFs deserializes the (large)
 shingle column twice and boxes every output value into Python ints via
 tolist(); fused, the shingle batch crosses the Arrow boundary once and all
-outputs stay numpy until Arrow serialization. Same arithmetic as
-functions.minhash / functions.simhash (property-tested equal).
+outputs stay numpy until Arrow serialization. Same arithmetic as the
+pure-Python twins functions.minhash.minhash_py and
+functions.simhash.simhash_py (tests/test_kernels.py checks them equal).
 """
 
 from __future__ import annotations
@@ -135,7 +136,6 @@ def make_doc_signature_udf(cfg: DedupConfig):
     a_list, b_list = cfg.minhash_coefficients()
     a = np.array(a_list, dtype=np.int64)
     b = np.array(b_list, dtype=np.int64)
-    p = np.int64(MERSENNE31)
     num_perm = cfg.num_perm
     bits = cfg.simhash_bits
     k = cfg.shingle_k
@@ -206,59 +206,3 @@ def make_doc_signature_udf(cfg: DedupConfig):
             )
 
     return doc_signature_udf
-
-
-def make_signature_udf(cfg: DedupConfig):
-    """array<long> shingles -> struct(minhash array<long>, simhash long)."""
-    a_list, b_list = cfg.minhash_coefficients()
-    a = np.array(a_list, dtype=np.int64)
-    b = np.array(b_list, dtype=np.int64)
-    p = np.int64(MERSENNE31)
-    num_perm = cfg.num_perm
-    bits = cfg.simhash_bits
-
-    schema = T.StructType(
-        [
-            T.StructField("minhash", T.ArrayType(T.IntegerType())),
-            T.StructField("simhash", T.LongType()),
-        ]
-    )
-
-    @F.pandas_udf(schema)
-    def signature_udf(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        for series in it:
-            vals = series.to_numpy()
-            lengths = np.array(
-                [0 if s is None else len(s) for s in vals], dtype=np.int64
-            )
-            n_rows = len(vals)
-            mh_out: list = [None] * n_rows
-            sh_out = np.zeros(n_rows, dtype=np.int64)
-            nonempty = np.flatnonzero(lengths > 0)
-            if len(nonempty):
-                flat = np.concatenate([np.asarray(vals[i], dtype=np.int64)
-                                       for i in nonempty]).astype(np.uint64)
-                ne_lengths = lengths[nonempty]
-                starts = np.concatenate(([0], np.cumsum(ne_lengths)[:-1]))
-                sigs, sim = minhash_simhash_blocked(
-                    flat, starts, ne_lengths, a, b, num_perm, bits
-                )
-                for k, i in enumerate(nonempty):
-                    mh_out[i] = sigs[k]  # numpy array: no python-int boxing
-                sh_out[nonempty] = sim
-            yield pd.DataFrame(
-                {
-                    "minhash": mh_out,
-                    # object dtype: None + int64 must NOT become float64
-                    # (2**63-scale values silently lose low bits)
-                    "simhash": pd.Series(
-                        [
-                            None if lengths[i] == 0 else int(sh_out[i])
-                            for i in range(n_rows)
-                        ],
-                        dtype="object",
-                    ),
-                }
-            )
-
-    return signature_udf

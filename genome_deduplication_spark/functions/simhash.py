@@ -5,63 +5,16 @@ verification"): a 64-bit locality-sensitive fingerprint whose Hamming
 distance upper-bounds cosine-ish dissimilarity of the shingle multiset. Used
 to cheaply confirm LSH candidate pairs before any text is re-read.
 
-Kernel is Arrow-batched numpy: one ``add.reduceat`` pass per bit over the
-batch-flattened shingle array — no per-row Python.
+The engine computes it in the cache-blocked numpy kernel
+(functions/signatures.minhash_simhash_blocked: one ``add.reduceat`` pass
+per bit over the batch-flattened shingle array); :func:`simhash_py` is its
+pure-Python twin.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-
-def make_simhash_udf(bits: int = 64):
-    """array<long> shingle hashes -> long simhash (``bits`` low bits used).
-
-    Input hashes are re-diffused with a splitmix64 finalizer first so the
-    31-bit portable shingle hashes spread over all 64 bits.
-    """
-
-    mask = np.uint64((1 << 64) - 1)
-
-    def _splitmix64(x: np.ndarray) -> np.ndarray:
-        x = (x + np.uint64(0x9E3779B97F4A7C15)) & mask
-        x = ((x ^ (x >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)) & mask
-        x = ((x ^ (x >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)) & mask
-        return x ^ (x >> np.uint64(31))
-
-    @F.pandas_udf(T.LongType())
-    def simhash_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for series in it:
-            lengths = np.array([0 if s is None else len(s) for s in series])
-            n_rows = len(series)
-            out = np.zeros(n_rows, dtype=np.int64)
-            nonempty = lengths > 0
-            if nonempty.any():
-                flat = np.concatenate(
-                    [np.asarray(s, dtype=np.int64) for s in series[nonempty]]
-                ).astype(np.uint64)
-                flat = _splitmix64(flat)
-                starts = np.concatenate(([0], np.cumsum(lengths[nonempty])[:-1]))
-                counts = lengths[nonempty]
-                sig = np.zeros(len(counts), dtype=np.uint64)
-                for bit in range(bits):
-                    ones = np.add.reduceat(
-                        ((flat >> np.uint64(bit)) & np.uint64(1)).astype(np.int64),
-                        starts,
-                    )
-                    # majority vote: bit set iff ones*2 > count (tie -> 0)
-                    sig |= (ones * 2 > counts).astype(np.uint64) << np.uint64(bit)
-                out[np.flatnonzero(nonempty)] = sig.astype(np.int64)
-            res = [None if lengths[i] == 0 else int(out[i]) for i in range(n_rows)]
-            yield pd.Series(res, dtype="object")
-
-    return simhash_udf
 
 
 def hamming64(a: Column, b: Column) -> Column:

@@ -28,7 +28,7 @@ Scale design (north_star requirements):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -88,13 +88,17 @@ def candidate_pairs(signatures: DataFrame, cfg: DedupConfig,
     transforms. One wide shuffle + one co-partitioned join, vs. the naive
     window-sort + self-join + distinct (4 shuffles, one of them a full sort).
 
-    ``with_stats=True`` returns ``(pairs, stats)`` where stats is the
-    one-row truncation accounting of *this same* counts pass: the counts
-    aggregate is eagerly localCheckpointed at candidate_pairs() call time
-    (a Spark job runs here — lazy marks are silently not persisted under
-    AQE, see PLANS.md round 4), so both the pairs plan and the stats job
-    read the persisted counts instead of re-scanning the signatures (the
-    truncation_stats full-pass path).
+    ``with_stats=True`` returns ``(pairs, stats)``: the counts aggregate
+    is eagerly localCheckpointed at candidate_pairs() call time (a Spark
+    job runs here — lazy marks are silently not persisted under AQE, see
+    PLANS.md round 4), and ``stats`` is the truncation accounting observed
+    on that same job (a dict, no further job): buckets_total,
+    buckets_dropped (size > DROP_CAP: no pairs at all), buckets_capped
+    (max_bucket_size < size <= DROP_CAP: the star keeps the smallest
+    max_bucket_size members) and docs_in_dropped. The reference never
+    silently drops data (every region lands in an accounting file,
+    code/dedup2.py:480-493); the pipeline records these counts in
+    metrics.jsonl.
     """
     buckets = band_buckets(signatures, cfg, id_col, sig_col)
     if restrict_to is not None:
@@ -111,10 +115,14 @@ def candidate_pairs(signatures: DataFrame, cfg: DedupConfig,
         F.count(F.lit(1)).alias("_n")
     )
     if with_stats:
-        # eager: a lazy mark is not persisted under AQE (PLANS.md round 4),
-        # which would silently re-run the bucket aggregation for the stats
-        counts = counts.localCheckpoint(eager=True)
-        stats = _truncation_agg(counts, cfg)
+        # eager: the observed stats arrive with this job, and the pairs
+        # plan reads the persisted counts (a lazy mark is not persisted
+        # under AQE, PLANS.md round 4)
+        obs = Observation()
+        counts = counts.observe(obs, *_truncation_aggs(cfg)).localCheckpoint(
+            eager=True
+        )
+        stats = {k: int(v) for k, v in obs.get.items()}
     # _n >= 2: singleton buckets (97% of all buckets on web-scale corpora —
     # measured at bench sf0.1) cannot emit a pair; pruning them HERE means
     # the member join + window rank + collect_list see ~3% of the explode
@@ -163,43 +171,19 @@ def candidate_pairs(signatures: DataFrame, cfg: DedupConfig,
     return (pairs, stats) if with_stats else pairs
 
 
-def _truncation_agg(counts: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """One-row truncation accounting over a (band_id, band_hash, _n) counts
-    table: see truncation_stats."""
-    return counts.agg(
+def _truncation_aggs(cfg: DedupConfig) -> list:
+    """The truncation accounting over a (band_id, band_hash, _n) counts
+    table, as aggregate columns (see candidate_pairs' ``with_stats``)."""
+    dropped = F.col("_n") > DROP_CAP
+    capped = (F.col("_n") > cfg.max_bucket_size) & ~dropped
+    return [
         F.count(F.lit(1)).alias("buckets_total"),
-        F.sum(
-            F.when(F.col("_n") > DROP_CAP, 1).otherwise(0)
-        ).alias("buckets_dropped"),
-        F.sum(
-            F.when(
-                (F.col("_n") > cfg.max_bucket_size)
-                & (F.col("_n") <= DROP_CAP),
-                1,
-            ).otherwise(0)
-        ).alias("buckets_capped"),
-        F.sum(
-            F.when(F.col("_n") > DROP_CAP, F.col("_n")).otherwise(0)
-        ).alias("docs_in_dropped"),
-    )
-
-
-def truncation_stats(signatures: DataFrame, cfg: DedupConfig,
-                     id_col: str = "url", sig_col: str = "minhash") -> DataFrame:
-    """Lineage metric: how many buckets the candidate stage truncated.
-
-    One row: (buckets_total, buckets_dropped, buckets_capped, docs_in_dropped)
-    — dropped = bucket size > DROP_CAP (no pairs emitted at all), capped =
-    max_bucket_size < size <= DROP_CAP (star restricted to the smallest
-    max_bucket_size members). The reference never silently drops data (every
-    region lands in an accounting file, code/dedup2.py:480-493); this is the
-    Spark analogue: the pipeline records these counts in metrics.jsonl."""
-    counts = (
-        band_buckets(signatures, cfg, id_col, sig_col)
-        .groupBy("band_id", "band_hash")
-        .agg(F.count(F.lit(1)).alias("_n"))
-    )
-    return _truncation_agg(counts, cfg)
+        F.count(F.when(dropped, 1)).alias("buckets_dropped"),
+        F.count(F.when(capped, 1)).alias("buckets_capped"),
+        F.coalesce(F.sum(F.when(dropped, F.col("_n"))), F.lit(0)).alias(
+            "docs_in_dropped"
+        ),
+    ]
 
 
 def bucket_stats(signatures: DataFrame, cfg: DedupConfig,

@@ -261,11 +261,8 @@ def dedup_pipeline(
 
     # truncation accounting (lsh.py's docstring promise: buckets the
     # candidate stage dropped/capped are accounted, never silent — reference
-    # analogue code/dedup2.py:480-493) shares the bucket-counts pass with
-    # candidate generation: candidate_pairs() eagerly materializes the
-    # counts (one small job at call time), and both the pairs plan and the
-    # stats job read the persisted counts instead of re-scanning the
-    # signatures.
+    # analogue code/dedup2.py:480-493) is observed on the bucket-counts
+    # checkpoint candidate_pairs() runs anyway: no job of its own.
     trunc_holder: dict = {}
 
     def _lsh_pairs():
@@ -303,16 +300,12 @@ def dedup_pipeline(
         lsh_pairs = stage("lsh_pairs", _lsh_pairs, reused=False)
 
     if ctx is not None and "lsh_pairs" not in resumed:
-        trunc = trunc_holder["stats"].collect()[0].asDict()
         ctx.record_metrics(
             "candidates",
             {
                 "exact_edges": ctx.manifest("exact_edges")["rows"],
                 "lsh_candidate_pairs": ctx.manifest("lsh_pairs")["rows"],
-                "lsh_buckets_total": trunc["buckets_total"],
-                "lsh_buckets_dropped": trunc["buckets_dropped"] or 0,
-                "lsh_buckets_capped": trunc["buckets_capped"] or 0,
-                "lsh_docs_in_dropped": trunc["docs_in_dropped"] or 0,
+                **{f"lsh_{k}": v for k, v in trunc_holder["stats"].items()},
             },
         )
 

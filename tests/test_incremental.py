@@ -104,3 +104,35 @@ def test_state_versions_are_deltas(spark, corpus, tmp_path):
     urls_b = {r["url"] for r in b.select("url").collect()}
     assert {r["url"] for r in v1.select("url").collect()} == urls_b
     assert r2["n_docs"] == corpus.count()   # manifest-accumulated count
+
+
+@pytest.mark.parametrize(
+    "master, kept", [("local[4]", False), ("spark://cluster:7077", True)]
+)
+def test_incremental_query_deletes_state_dir_only_on_local_master(
+    spark, sf_dir, monkeypatch, tmp_path, master, kept
+):
+    """q_incremental_near_dup's result is an eager localCheckpoint, which
+    is not reliable storage: on a cluster a lost executor recomputes its
+    blocks from the state parquet. So the query deletes its state dir
+    when the executors run in this process, and keeps it otherwise."""
+    import os
+    import tempfile
+
+    import __spark_entry__ as entrymod
+
+    if not os.path.exists(f"{sf_dir}/documents.parquet"):
+        pytest.skip("driver testdata not present")
+    made = []
+
+    def mkdtemp(prefix=None):
+        made.append(str(tmp_path / f"{prefix}{len(made)}"))
+        os.makedirs(made[-1])
+        return made[-1]
+
+    monkeypatch.setattr(tempfile, "mkdtemp", mkdtemp)
+    monkeypatch.setattr(spark.sparkContext, "master", master)
+    out = entrymod.q_incremental_near_dup(spark, sf_dir)
+    assert len(made) == 1
+    assert os.path.isdir(made[0]) == kept
+    assert out.count() > 0

@@ -7,12 +7,9 @@ import random
 from pyspark.sql import functions as F
 
 from genome_deduplication_spark.config import DedupConfig, lsh_threshold_curve
-from genome_deduplication_spark.functions.minhash import (
-    make_minhash_udf,
-    minhash_py,
-)
+from genome_deduplication_spark.functions.minhash import minhash_py
 from genome_deduplication_spark.functions.shingles import char_shingles31
-from genome_deduplication_spark.functions.simhash import make_simhash_udf, simhash_py
+from genome_deduplication_spark.functions.simhash import simhash_py
 from genome_deduplication_spark.oracle import normalize_py, shingles31_py
 
 CFG = DedupConfig()
@@ -26,18 +23,33 @@ def test_shingles_spark_matches_python(spark):
         assert set(r["s"]) == shingles31_py(t, CFG.shingle_k), t
 
 
-def test_minhash_spark_matches_python(spark):
+def _blocked(sets):
+    """Run the engine's cache-blocked MinHash + SimHash kernel over
+    non-empty shingle sets; returns (sigs, sims) row-aligned with sets.
+    (Empty sets never reach it: the document UDF emits null signatures for
+    them, checked by test_doc_signature_udf_matches_python_twins.)"""
+    import numpy as np
+
+    from genome_deduplication_spark.functions.signatures import (
+        minhash_simhash_blocked,
+    )
+
+    a_list, b_list = CFG.minhash_coefficients()
+    lengths = np.array([len(s) for s in sets])
+    flat = np.concatenate([np.array(s, dtype=np.uint64) for s in sets])
+    starts = np.concatenate(([0], np.cumsum(lengths)[:-1]))
+    return minhash_simhash_blocked(
+        flat, starts, lengths, np.array(a_list, dtype=np.int64),
+        np.array(b_list, dtype=np.int64), CFG.num_perm, CFG.simhash_bits,
+    )
+
+
+def test_minhash_blocked_matches_python():
     rng = random.Random(7)
     sets = [sorted(rng.sample(range(1, 2**31 - 1), rng.randint(5, 200))) for _ in range(10)]
-    sets.append([])  # empty -> null signature
-    df = spark.createDataFrame([(s,) for s in sets], "shingles array<bigint>")
-    udf = make_minhash_udf(CFG)
-    rows = df.select(udf("shingles").alias("sig")).collect()
-    for s, r in zip(sets, rows):
-        if not s:
-            assert r["sig"] is None
-        else:
-            assert r["sig"] == minhash_py(s, CFG)
+    sigs, _ = _blocked(sets)
+    for s, sig in zip(sets, sigs):
+        assert sig.tolist() == minhash_py(s, CFG)
 
 
 def test_minhash_estimates_jaccard(spark):
@@ -54,37 +66,23 @@ def test_minhash_estimates_jaccard(spark):
     assert abs(est - true_j) < 0.12  # ~3 sigma at 128 perms
 
 
-def test_simhash_spark_matches_python(spark):
+def test_simhash_blocked_matches_python():
     rng = random.Random(13)
     sets = [sorted(rng.sample(range(1, 2**31 - 1), rng.randint(5, 100))) for _ in range(8)]
-    df = spark.createDataFrame([(s,) for s in sets], "shingles array<bigint>")
-    udf = make_simhash_udf(64)
-    rows = df.select(udf("shingles").alias("sig")).collect()
-    for s, r in zip(sets, rows):
-        assert r["sig"] == simhash_py(s, 64)
+    _, sims = _blocked(sets)
+    for s, sim in zip(sets, sims):
+        assert int(sim) == simhash_py(s, 64)
 
 
-def test_fused_signature_udf_matches_separate_kernels(spark):
-    import random as _r
-
-    from pyspark.sql import functions as F2
-
-    from genome_deduplication_spark.functions.signatures import make_signature_udf
-
-    rng = _r.Random(21)
+def test_blocked_kernel_matches_both_twins():
+    """MinHash and SimHash from the one blocked pass equal the two
+    pure-Python twins on the same rows."""
+    rng = random.Random(21)
     sets = [sorted(rng.sample(range(1, 2**31 - 1), rng.randint(5, 300))) for _ in range(12)]
-    sets.append([])
-    df = spark.createDataFrame([(s,) for s in sets], "shingles array<bigint>")
-    fused = make_signature_udf(CFG)
-    rows = df.select(fused("shingles").alias("sig")).select(
-        F2.col("sig.minhash").alias("mh"), F2.col("sig.simhash").alias("sh")
-    ).collect()
-    for s, r in zip(sets, rows):
-        if not s:
-            assert r["mh"] is None and r["sh"] is None
-        else:
-            assert r["mh"] == minhash_py(s, CFG)
-            assert r["sh"] == simhash_py(s, 64)
+    sigs, sims = _blocked(sets)
+    for s, sig, sim in zip(sets, sigs, sims):
+        assert sig.tolist() == minhash_py(s, CFG)
+        assert int(sim) == simhash_py(s, 64)
 
 
 def test_doc_signature_udf_matches_python_twins(spark):

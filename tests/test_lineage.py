@@ -30,14 +30,18 @@ from genome_deduplication_spark.sources.checkpoint import RunContext
 
 CFG = DedupConfig()
 
-# A run of _small_corpus() (32 docs, shuffle_partitions=8) measured 34-35
-# jobs recorded and 37 unrecorded, at local[4] and local[8]. With CC's
-# star loop on small graphs too it took 42-43 recorded and 46-47
-# unrecorded; with url strings through the near-dup core (a hash128 map
-# and join-backs in LSH, anchor pairs and CC) and a schema-inference job
-# on every stage re-read, 60-61 recorded and 61-62 unrecorded; with count
-# jobs and per-stage checkpoint histograms a recorded run took 105-106.
-JOB_CEILING = 39
+# A run of _small_corpus() (32 docs, shuffle_partitions=8) measured
+# 32-33 jobs recorded and 36-37 unrecorded, at local[4] and local[8].
+# With the LSH truncation counts collected by a job of their own (an
+# aggregate over the bucket counts: two jobs) instead of observed on the
+# counts checkpoint, a recorded run took 34-35; with CC's star loop on
+# small graphs too it took 42-43 recorded and 46-47 unrecorded; with url
+# strings through the near-dup core (a hash128 map and join-backs in LSH,
+# anchor pairs and CC) and a schema-inference job on every stage re-read,
+# 60-61 recorded and 61-62 unrecorded; with count jobs and per-stage
+# checkpoint histograms a recorded run took 105-106.
+JOB_CEILING = 34
+UNRECORDED_JOB_CEILING = 39
 
 _groups = itertools.count()
 
@@ -196,7 +200,7 @@ def test_unrecorded_pipeline_pool_jobs_keep_caller_group(spark):
     for name in ("exact_edges", "lsh_pairs", "verified", "substr_cand"):
         assert f"stage:{name}" in labels, (name, labels)
     assert not _count_or_checkpoint_collect(jobs)
-    assert len(jobs) <= JOB_CEILING, len(jobs)
+    assert len(jobs) <= UNRECORDED_JOB_CEILING, len(jobs)
 
 
 @pytest.mark.parametrize(

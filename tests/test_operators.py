@@ -192,22 +192,19 @@ def test_candidate_pairs_star_and_clique_policy(spark):
     assert got == want
 
 
-def test_candidate_pairs_cap_and_truncation_stats(spark):
+def test_candidate_pairs_cap_and_truncation_stats(spark, monkeypatch):
     """Buckets above max_bucket_size keep only the smallest members (the
     rank-filter happens BEFORE collect_list — no reducer row ever holds
-    more than max_bucket_size ids), and truncation_stats accounts for
-    every capped/dropped bucket (nothing is dropped silently)."""
+    more than max_bucket_size ids), and with_stats=True (the pipeline's
+    call) accounts for every capped/dropped bucket (nothing is dropped
+    silently) and returns the same pairs."""
     from genome_deduplication_spark.config import DedupConfig
-    from genome_deduplication_spark.operators.lsh import (
-        candidate_pairs,
-        truncation_stats,
-    )
+    from genome_deduplication_spark.operators.lsh import candidate_pairs
 
     cfg = DedupConfig(max_bucket_size=5)
     keys = _keys(f"d{i:03d}" for i in range(20))
     docs = [(k, [3] * cfg.num_perm) for k in keys]
     df = spark.createDataFrame(docs, "doc_key binary, minhash array<bigint>")
-    got = _key_pairs(candidate_pairs(df, cfg, id_col="doc_key"))
     # the 5 smallest keys survive the cap
     kept = sorted(keys)[:5]
     want = {
@@ -215,12 +212,38 @@ def test_candidate_pairs_cap_and_truncation_stats(spark):
         for i in range(5)
         for j in range(i + 1, 5)  # 5 <= CLIQUE_BUDGET -> full clique
     }
-    assert got == want
-    stats = truncation_stats(df, cfg, id_col="doc_key").collect()[0]
-    assert stats["buckets_total"] == cfg.bands
-    assert stats["buckets_capped"] == cfg.bands  # every band bucket size 20
-    assert stats["buckets_dropped"] == 0
-    assert stats["docs_in_dropped"] == 0
+    assert _key_pairs(candidate_pairs(df, cfg, id_col="doc_key")) == want
+    pairs, stats = candidate_pairs(df, cfg, id_col="doc_key", with_stats=True)
+    assert _key_pairs(pairs) == want
+    assert stats == {
+        "buckets_total": cfg.bands,
+        "buckets_dropped": 0,
+        "buckets_capped": cfg.bands,  # every band bucket has 20 members
+        "docs_in_dropped": 0,
+    }
+    # a bucket above DROP_CAP emits nothing and is counted as dropped;
+    # the capped one beside it still emits its clique
+    from genome_deduplication_spark.operators import lsh
+
+    monkeypatch.setattr(lsh, "DROP_CAP", 15)
+    hot = _keys(f"h{i:03d}" for i in range(12))
+    df2 = df.unionByName(
+        spark.createDataFrame(
+            [(k, [4] * cfg.num_perm) for k in hot],
+            "doc_key binary, minhash array<bigint>",
+        )
+    )
+    kept = sorted(hot)[:5]
+    pairs, stats = candidate_pairs(df2, cfg, id_col="doc_key", with_stats=True)
+    assert _key_pairs(pairs) == {
+        (kept[i], kept[j]) for i in range(5) for j in range(i + 1, 5)
+    }
+    assert stats == {
+        "buckets_total": 2 * cfg.bands,
+        "buckets_dropped": cfg.bands,  # the 20-member buckets
+        "buckets_capped": cfg.bands,  # the 12-member buckets
+        "docs_in_dropped": 20 * cfg.bands,
+    }
 
 
 def test_suffix_array_lcs():

@@ -10,8 +10,10 @@ plans must contain NO Exchange at all.
 """
 
 import random
+import re
 from collections import Counter
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -114,27 +116,73 @@ def test_masked_word_spans_single_exchange(spark, sf_dir):
     assert aggs and max(aggs) < below, plan
 
 
-def test_quality_queries_are_shuffle_free(spark):
+def test_quality_queries_are_shuffle_free(spark, sf_dir):
     """Scale guard: per-doc quality metrics are row-local — the plans
     must contain no Exchange of any kind (a shuffle here would move the
-    whole corpus for a per-row computation)."""
+    whole corpus for a per-row computation, and a scan spread under a
+    row-local plan is pure cost)."""
     import os
 
-    import pytest
-
-    sf = "/root/testdata/sf0.001"
-    if not os.path.exists(f"{sf}/documents.parquet"):
+    if not os.path.exists(f"{sf_dir}/documents.parquet"):
         pytest.skip("driver testdata not present")
     import __spark_entry__ as entrymod
 
     for q in (entrymod.q_repetition_metrics, entrymod.q_pii_redaction):
-        plan = q(spark, sf)._jdf.queryExecution().executedPlan().toString()
-        # the computation itself must stay row-local: no Exchange may be
-        # REQUIRED by an aggregate/join/window (ENSURE_REQUIREMENTS).
-        # The one allowed Exchange is _read's explicit small-file spread
-        # (REPARTITION_BY_COL), which redistributes the unsplittable
-        # single-row-group testdata file for scan parallelism and
-        # self-disables once files are big enough to split (r6).
-        for line in plan.splitlines():
-            if "Exchange" in line and "ReusedExchange" not in line:
-                assert "REPARTITION_BY" in line, (q.__name__, plan)
+        plan = q(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, (q.__name__, plan)
+
+
+# _read spreads a scan only when its caller passes a key: the cheap
+# queries read plainly, the heavy-kernel ones keep exactly one spread,
+# hashed on their table's key (BENCH.md, "Scan spread per query").
+_SPREAD = {
+    "value_percentiles": None,
+    "event_props_rollup": None,
+    "click_attribution": None,
+    "decontamination": None,
+    "token_quality": None,
+    "exact_dup_clusters": "doc_id",
+    "char_jaccard_pairs": "doc_id",
+    "embedding_cosine_topk": "vec_id",
+    "merged_ship_intervals": "l_suppkey",
+    "minhash_signatures": "doc_id",
+    "user_sessions": "user_id",  # the one events query that keeps it
+}
+
+
+@pytest.mark.parametrize("name", sorted(_SPREAD))
+def test_read_spreads_only_keyed_scans(spark, sf_dir, name, monkeypatch):
+    import os
+
+    if not os.path.exists(f"{sf_dir}/documents.parquet"):
+        pytest.skip("driver testdata not present")
+    import __spark_entry__ as entrymod
+
+    # a spread below an eager localCheckpoint (char_jaccard_pairs) is in
+    # the checkpointed plan, not in the one the query returns
+    plans = []
+    frame = type(spark.range(1))
+    checkpoint = frame.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame, "localCheckpoint", spy)
+    df = entrymod.queries()[name](spark, sf_dir)
+    plans.append(df._jdf.queryExecution().executedPlan().toString())
+    plan = "\n".join(plans)
+    # a self-joined scan shows its one spread under both join sides;
+    # expression and plan ids aside they are the same Exchange
+    spreads = {
+        re.sub(r"#\d+L?|\[plan_id=\d+\]", "", line.lstrip(" :|+-"))
+        for line in plan.splitlines()
+        if "Exchange " in line and "REPARTITION_BY" in line
+    }
+    key = _SPREAD[name]
+    if key is None:
+        assert not spreads, plan
+    else:
+        assert len(spreads) == 1, plan
+        (spread,) = spreads
+        assert spread.startswith(f"Exchange hashpartitioning({key}, "), plan
