@@ -1,7 +1,9 @@
-"""Profiling twin of bench.py (bench.py itself is frozen for measurement).
+"""Profiling twin of bench.py: bench.py makes the measurement, this script
+explains it.
 
-Replicates bench.py's session config, warmup and per-query timing loop,
-but additionally:
+Replicates bench.py's session config, warmup and per-query timing loop
+(``count()`` by default; ``BENCH_EXTRA_NOOP=1`` writes every column to the
+no-op sink, as bench.py does), but additionally:
   * labels every query's jobs (setJobDescription) so the event log
     (enable via SPARK_CONF_DIR with spark.eventLog.enabled) attributes
     jobs and planning gaps to queries — tools/joblog.py summarizes;

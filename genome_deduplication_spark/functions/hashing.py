@@ -56,10 +56,5 @@ def hash128(col: Column) -> Column:
     return F.unhex(F.md5(col))
 
 
-def hash31(col: Column) -> Column:
-    """Portable hash reduced mod 2**31-1 (MinHash input domain)."""
-    return hash60(col) % F.lit(MERSENNE31)
-
-
 def hash31_py(s: str) -> int:
     return hash60_py(s) % MERSENNE31

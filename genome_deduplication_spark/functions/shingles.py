@@ -1,13 +1,11 @@
 """Shingle extraction — the reimplementation of the reference k-mer inner
 loop (all overlapping k-substrings, code/dedup2.py:135-139).
 
-Three interchangeable kernels:
+Two interchangeable kernels:
 
 * :func:`char_shingles31` — JVM-side Column expression (portable md5-derived
   hashes mod 2**31-1). O(n*k) but fully inside whole-stage codegen and
   reproducible by the DuckDB oracle + pure-Python oracle. Default.
-* :func:`char_shingles64` — JVM-side xxhash64 variant (scale path when no
-  external oracle must reproduce values; 64-bit space).
 * :func:`char_shingles31_pandas` — Arrow-batched numpy rolling polynomial
   hash, O(n) per document: the kernel for very long documents where O(n*k)
   substring hashing dominates. Uses its own deterministic polynomial family
@@ -49,24 +47,6 @@ def char_shingles31(col: Column, k: int) -> Column:
         lambda i: F.conv(F.substring(F.md5(F.substring(col, i, k)), 1, 15), 16, 10)
         .cast("long")
         % F.lit(MERSENNE31),
-    )
-    return F.array_distinct(sh)
-
-
-def char_shingles64(col: Column, k: int) -> Column:
-    """array<long> of distinct xxhash64 shingle hashes (scale path)."""
-    sh = F.transform(_positions(col, k), lambda i: F.xxhash64(F.substring(col, i, k)))
-    return F.array_distinct(sh)
-
-
-def word_shingles(col: Column, n: int) -> Column:
-    """array<string> of distinct n-word shingles of normalized text."""
-    words = F.split(col, " ")
-    sh = F.transform(
-        F.when(
-            F.size(words) >= n, F.sequence(F.lit(0), F.size(words) - F.lit(n))
-        ).otherwise(F.array().cast("array<int>")),
-        lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)),
     )
     return F.array_distinct(sh)
 
@@ -268,8 +248,6 @@ def poly_shingles31_py(text: str, k: int) -> set[int]:
 
 __all__ = [
     "char_shingles31",
-    "char_shingles64",
-    "word_shingles",
     "make_char_shingles31_pandas",
     "poly_window_hashes_np",
     "poly_shingles31_py",

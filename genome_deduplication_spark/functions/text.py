@@ -52,53 +52,6 @@ def extract_text_from_html(html: Column) -> Column:
 
 EXTRACTOR_VERSION = "regex-v1"
 
-# --- token counting --------------------------------------------------------
-
-
-def token_count(col: Column) -> Column:
-    """Whitespace token count of normalized text (0 for empty)."""
-    norm = normalize_text(col)
-    return F.when(F.length(norm) == 0, F.lit(0)).otherwise(
-        F.size(F.split(norm, " "))
-    )
-
-
-# BPE-ish subword proxy: count maximal runs of word chars + single non-space
-# non-word chars (a cheap, deterministic token estimate).
-def bpe_ish_token_count(col: Column) -> Column:
-    arr = F.regexp_extract_all(col, F.lit(r"[A-Za-z0-9]+|[^A-Za-z0-9\s]"), 0)
-    return F.size(arr)
-
-
-# --- quality scoring -------------------------------------------------------
-
-STOPWORDS = (
-    "the a an and or of to in is are was were be been for on with as at by "
-    "it this that from"
-).split()
-
-
-def quality_features(col: Column) -> dict[str, Column]:
-    """Length / punctuation / stopword-ratio features for quality filtering."""
-    norm = normalize_text(col)
-    n_chars = F.length(norm)
-    toks = F.when(F.length(norm) == 0, F.array()).otherwise(F.split(norm, " "))
-    n_tokens = F.size(toks)
-    n_punct = n_chars - F.length(F.regexp_replace(norm, r"[^\w\s]", ""))
-    stop_arr = F.array(*[F.lit(w) for w in STOPWORDS])
-    n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stop_arr, t)))
-    return {
-        "n_chars": n_chars,
-        "n_tokens": n_tokens,
-        "punct_ratio": F.when(n_chars > 0, n_punct / n_chars).otherwise(F.lit(0.0)),
-        "stopword_ratio": F.when(n_tokens > 0, n_stop / n_tokens).otherwise(
-            F.lit(0.0)
-        ),
-        "mean_token_len": F.when(n_tokens > 0, (n_chars - (n_tokens - 1)) / n_tokens)
-        .otherwise(F.lit(0.0)),
-    }
-
-
 # --- language-ID heuristic --------------------------------------------------
 
 # marker words per language; scored by distinct-marker hits on token set

@@ -27,11 +27,6 @@ def keyed_uniform(seed: int, *cols) -> F.Column:
     )
 
 
-def seeded_shuffle(df: DataFrame, seed: int, *key_cols: str) -> DataFrame:
-    """Deterministic permutation: order by keyed hash (R1)."""
-    return df.orderBy(keyed_uniform(seed, *[F.col(c) for c in key_cols]), *key_cols)
-
-
 _SPLIT_BUCKETS = 8192
 
 

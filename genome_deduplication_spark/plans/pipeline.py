@@ -32,8 +32,6 @@ returned ``dup_edges``) goes back to urls.
 
 from __future__ import annotations
 
-import os
-
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -238,13 +236,6 @@ def dedup_pipeline(
             )
         )
 
-    # exact_edges is multi-consumer only when the substring pass (known-
-    # pairs anti-join) or a recording run context reads it besides the
-    # final edge union; otherwise the eager cut is a pure barrier + job
-    # with no reuse to pay for it (r6 event-log profile).
-    exact_edges_reused = enable_substring_pass or ctx is not None
-    exact_edges = None  # materialized below, overlapped when possible
-
     def _reps():
         # exact-group representatives: one signature per content hash, so a
         # 10^6-copy mega-duplicate costs one signature in every band bucket.
@@ -287,17 +278,24 @@ def dedup_pipeline(
     # actions are only sequential because driver code calls them
     # sequentially; the second job's tasks back-fill executors freed by
     # the first job's tail, and its Catalyst/AQE planning overlaps the
-    # first job's execution). Restricted to ctx=None runs: RunContext's
-    # manifest bookkeeping is not audited for concurrent writers.
+    # first job's execution). Unrecorded runs only: overlapped, the CPU of
+    # a recorded run depends on how the two stages' jobs interleave (the
+    # perfbench mirror_crawl op's CPU then spread from run to run past the
+    # benchmark's bound), so a recorded run writes them in turn. RunContext
+    # itself would allow the overlap: a stage's write touches only its own
+    # stage's files.
+    # exact_edges is multi-consumer only when the substring pass (known-
+    # pairs anti-join) reads it besides the final edge union; otherwise an
+    # unrecorded run's eager cut is a pure barrier + job with no reuse to
+    # pay for it (r6 event-log profile). A recorded stage is always written.
+    calls = (
+        (stage, "exact_edges", _exact_edges, enable_substring_pass),
+        (stage, "lsh_pairs", _lsh_pairs, False),
+    )
     if ctx is None:
-        exact_edges, lsh_pairs = _concurrently(
-            spark,
-            (stage, "exact_edges", _exact_edges, exact_edges_reused),
-            (stage, "lsh_pairs", _lsh_pairs, False),
-        )
+        exact_edges, lsh_pairs = _concurrently(spark, *calls)
     else:
-        exact_edges = stage("exact_edges", _exact_edges, exact_edges_reused)
-        lsh_pairs = stage("lsh_pairs", _lsh_pairs, reused=False)
+        exact_edges, lsh_pairs = (fn(*args) for fn, *args in calls)
 
     if ctx is not None and "lsh_pairs" not in resumed:
         ctx.record_metrics(

@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import types as T
 
 _PART_FILE = re.compile(r"part-(\d+)-.*\.parquet$")
+_MANIFEST = re.compile(r"_STAGE_(.+)\.json$")
 
 
 def _part_file_rows(path: str) -> dict[int, int]:
@@ -110,6 +111,9 @@ class RunContext:
         the reference's per-file accounting that downstream scripts re-read
         (code/dedup2.py:534-539). partition_id is the part number in the
         file name. No Spark job: the manifest's rows is the footers' sum.
+        The list lands in the manifest itself, so one atomic rename records
+        the stage, its counts and its partitions, and a write touches no
+        file of another stage.
 
         The re-read takes the written DataFrame's schema (as a parquet
         read would report it, recorded in the manifest), so Spark runs no
@@ -121,18 +125,6 @@ class RunContext:
             df = df.observe(obs, *[c.alias(k) for k, c in observe.items()])
         df.write.mode("overwrite").parquet(path)
         per_part = _part_file_rows(path)
-        self._replace_stage_counters(
-            stage,
-            (
-                {
-                    "stage": stage,
-                    "kind": "partition_rows",
-                    "partition_id": pid,
-                    "rows": rows,
-                }
-                for pid, rows in sorted(per_part.items())
-            ),
-        )
         schema = _nullable(df.schema)
         out = self.spark.read.schema(schema).parquet(path)
         manifest = {
@@ -140,6 +132,10 @@ class RunContext:
             "path": path,
             "rows": sum(per_part.values()),
             "n_partitions": len(per_part),
+            "partitions": [
+                {"partition_id": pid, "rows": rows}
+                for pid, rows in sorted(per_part.items())
+            ],
             "observed": obs.get if obs is not None else {},
             "schema": schema.json(),
             "completed_at_unix": time.time(),
@@ -156,7 +152,8 @@ class RunContext:
         return self.spark.read.schema(schema).parquet(self._data_path(stage))
 
     def manifest(self, stage: str) -> dict:
-        """A completed stage's manifest: rows, observed values, schema."""
+        """A completed stage's manifest: rows, partitions, observed values,
+        schema."""
         with open(self._manifest_path(stage)) as f:
             return json.load(f)
 
@@ -173,8 +170,8 @@ class RunContext:
     def record_metrics(self, stage: str, metrics: dict[str, int | float]) -> None:
         """Record a stage's lineage metrics, replacing any earlier row for
         the same stage (atomic rewrite) so a redone stage cannot leave
-        duplicate rows — the metrics.jsonl twin of _replace_stage_counters'
-        exactly-once invariant."""
+        duplicate rows. An unlocked read-modify-write: call it from one
+        thread at a time."""
         path = os.path.join(self.run_dir, "metrics.jsonl")
         kept: list[str] = []
         if os.path.exists(path):
@@ -199,51 +196,17 @@ class RunContext:
 
     # -- per-partition counters ------------------------------------------------
 
-    def _counters_path(self) -> str:
-        return os.path.join(self.run_dir, "counters.jsonl")
-
-    def _replace_stage_counters(self, stage: str, rows) -> None:
-        """Atomically replace this stage's counter rows (keep other stages').
-
-        Counters land BEFORE the stage manifest; a crash between the two
-        makes the resumed run redo the stage — a plain append would then
-        leave two sets of rows and break the exactly-once invariant (sum ==
-        manifest rows). Dropping the stage's old rows first makes the redo
-        idempotent.
-
-        Single-writer contract: a run_dir belongs to exactly one RunContext
-        at a time (the config guard enforces same-config, not mutual
-        exclusion) — this read-modify-write is unlocked by design, matching
-        the reference's one-process-per-run checkpoint files
-        (code/dedup2.py:290-296)."""
-        path = self._counters_path()
-        kept: list[str] = []
-        if os.path.exists(path):
-            with open(path) as f:
-                kept = [
-                    line
-                    for line in f
-                    if line.strip() and json.loads(line).get("stage") != stage
-                ]
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            f.writelines(kept)
-            for row in rows:
-                f.write(json.dumps(row) + "\n")
-        os.replace(tmp, path)
-
     def read_counters(self, stage: str | None = None) -> list[dict]:
-        """Per-partition (stage, partition_id, rows) lineage rows; resumed
-        runs skip completed stages so counters are written exactly once.
-        Defensively dedupes by (stage, kind, partition_id), last write
-        wins, in case an old-format file carries duplicates."""
-        if not os.path.exists(self._counters_path()):
-            return []
-        with open(self._counters_path()) as f:
-            out = [json.loads(line) for line in f if line.strip()]
-        if stage is not None:
-            out = [r for r in out if r["stage"] == stage]
-        dedup: dict[tuple, dict] = {}
-        for r in out:
-            dedup[(r["stage"], r.get("kind"), r.get("partition_id"))] = r
-        return list(dedup.values())
+        """Per-partition (stage, partition_id, rows) lineage rows of every
+        completed stage, or of ``stage`` only, from the stage manifests."""
+        stages = [stage] if stage is not None else sorted(
+            m.group(1)
+            for m in map(_MANIFEST.match, os.listdir(self.run_dir))
+            if m
+        )
+        return [
+            {"stage": name, **part}
+            for name in stages
+            if self.is_complete(name)
+            for part in self.manifest(name)["partitions"]
+        ]

@@ -4,7 +4,9 @@ kill after stage N, resume from checkpoint, identical final table."""
 from __future__ import annotations
 
 import os
-import shutil
+import sys
+import threading
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 
@@ -124,8 +126,8 @@ def test_per_partition_lineage_counters(spark, tmp_path):
     n_before = len(counters)
     dedup_pipeline(df, CFG, run_dir=run_dir, enable_substring_pass=False)
     assert len(ctx.read_counters()) == n_before
-    # crash between counter-append and manifest write: the stage is redone
-    # on resume and its counters REPLACED, not appended (exactly-once)
+    # a stage whose manifest is gone is redone on resume: its counters are
+    # the redone manifest's, not added to the old ones (exactly-once)
     os.remove(os.path.join(run_dir, "_STAGE_exact_edges.json"))
     dedup_pipeline(df, CFG, run_dir=run_dir, enable_substring_pass=False)
     redone = ctx.read_counters("exact_edges")
@@ -144,3 +146,42 @@ def test_per_partition_lineage_counters(spark, tmp_path):
         "lsh_docs_in_dropped",
     ):
         assert key in cand[-1], key
+
+
+def test_concurrent_stage_writes_keep_own_manifests(spark, tmp_path):
+    """Two stages written from two threads at once: each manifest
+    completes with its own partition list summing to its rows, and the
+    run dir holds nothing but the config, the manifests and the tables."""
+    run_dir = str(tmp_path / "run")
+    ctx = RunContext(spark, run_dir, CFG.to_json())
+    want = {"a": (100, 3), "b": (57, 2)}
+    start = threading.Barrier(len(want))
+
+    def write(name):
+        n, parts = want[name]
+        df = spark.range(n).repartition(parts)
+        start.wait(timeout=60)
+        return ctx.write_stage(name, df).count()
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=len(want)) as pool:
+            futures = {name: pool.submit(write, name) for name in want}
+            got = {name: f.result(timeout=300) for name, f in futures.items()}
+    finally:
+        sys.setswitchinterval(interval)
+    assert got == {name: n for name, (n, _) in want.items()}
+    for name, (n, parts) in want.items():
+        m = ctx.manifest(name)
+        assert m["rows"] == n, name
+        assert sum(p["rows"] for p in m["partitions"]) == n, name
+        assert m["n_partitions"] == len(m["partitions"]) == parts, name
+        assert sum(c["rows"] for c in ctx.read_counters(name)) == n, name
+    assert sorted(os.listdir(run_dir)) == [
+        "_STAGE_a.json",
+        "_STAGE_b.json",
+        "config.json",
+        "stage_a",
+        "stage_b",
+    ]

@@ -1,8 +1,8 @@
 """Pipeline lineage at zero extra Spark jobs: a recorded run's stage counts
 come from the jobs that write the stages (observed aggregates + parquet
 footers), connected components runs one job per round (two jobs in all
-on the driver path), and the overlapped pool jobs of an unrecorded run
-keep the caller's job group."""
+on the driver path), and the jobs of a run, the overlapped pool jobs of
+an unrecorded one too, keep the caller's job group."""
 
 from __future__ import annotations
 
@@ -165,6 +165,11 @@ def test_recorded_pipeline_job_budget(spark, tmp_path):
     # CC's labels are written as one part file (the driver path's
     # coalesce(1); AQE's coalescing on the loop side), as the loop did
     assert ctx.manifest("components")["n_partitions"] == 1
+    # each stage's lineage lives in its own manifest; nothing else is shared
+    others = {
+        n for n in os.listdir(run_dir) if not n.startswith(("_STAGE_", "stage_"))
+    }
+    assert others == {"config.json", "metrics.jsonl"}, others
 
 
 def test_core_stages_run_on_doc_key(spark, tmp_path, monkeypatch):
@@ -185,22 +190,27 @@ def test_core_stages_run_on_doc_key(spark, tmp_path, monkeypatch):
     assert "md5(" in plans["normalize"]  # the guard sees a url hash
 
 
-def test_unrecorded_pipeline_pool_jobs_keep_caller_group(spark):
-    """run_dir=None overlaps independent stages on a thread pool; those
-    jobs must carry the caller's job group and their stage:<name> label,
-    and the path runs no count job either."""
+@pytest.mark.parametrize("recorded", [False, True], ids=["unrecorded", "recorded"])
+def test_pipeline_pool_jobs_keep_caller_group(spark, tmp_path, recorded):
+    """An unrecorded run overlaps exact_edges with lsh_pairs and
+    substr_cand with verified on a thread pool; a recorded one writes its
+    stages in turn. In both modes every job must carry the caller's job
+    group and its stage:<name> label, and neither mode runs a count job."""
     sc = spark.sparkContext
     pages = pages_df(spark, _small_corpus()).localCheckpoint(eager=True)
+    run_dir = str(tmp_path / "run") if recorded else None
     ungrouped_before = set(sc.statusTracker().getJobIdsForGroup(None))
     with _job_group(spark) as jobs:
-        dedup_pipeline(pages, CFG, run_dir=None)
+        dedup_pipeline(pages, CFG, run_dir=run_dir)
     ungrouped_new = set(sc.statusTracker().getJobIdsForGroup(None)) - ungrouped_before
     assert not ungrouped_new, f"jobs outside the caller's group: {ungrouped_new}"
     labels = {desc for _, desc, _, _ in jobs}
-    for name in ("exact_edges", "lsh_pairs", "verified", "substr_cand"):
+    for name in ("exact_edges", "lsh_pairs", "verified"):
         assert f"stage:{name}" in labels, (name, labels)
+    assert ("stage:substr_cand" in labels) is not recorded, labels
     assert not _count_or_checkpoint_collect(jobs)
-    assert len(jobs) <= UNRECORDED_JOB_CEILING, len(jobs)
+    ceiling = JOB_CEILING if recorded else UNRECORDED_JOB_CEILING
+    assert len(jobs) <= ceiling, len(jobs)
 
 
 @pytest.mark.parametrize(
