@@ -2,8 +2,8 @@
 explains it.
 
 Replicates bench.py's session config, warmup and per-query timing loop
-(``count()`` by default; ``BENCH_EXTRA_NOOP=1`` writes every column to the
-no-op sink, as bench.py does), but additionally:
+(every column of each query written to the no-op sink, as bench.py does),
+but additionally:
   * labels every query's jobs (setJobDescription) so the event log
     (enable via SPARK_CONF_DIR with spark.eventLog.enabled) attributes
     jobs and planning gaps to queries — tools/joblog.py summarizes;
@@ -76,11 +76,6 @@ def main() -> None:
         keep = only.split(",")
         headline = [q for q in headline if q in keep]
     qs = entrymod.queries()
-    # BENCH_EXTRA_NOOP=1: materialize through the built-in no-op sink
-    # instead of count() (guide §1.4) — computes EVERY column of every
-    # row and discards it, so the number is the computation, without
-    # count()'s column pruning or a real sink's write cost.
-    use_noop = os.environ.get("BENCH_EXTRA_NOOP", "0") == "1"
     timings: dict[str, list] = {}
     for name in headline:
         timings[name] = []
@@ -88,10 +83,7 @@ def main() -> None:
             sc.setJobDescription(f"q:{name}:rep{rep}")
             t0 = time.time()
             df = qs[name](spark, sf_dir)
-            if use_noop:
-                df.write.format("noop").mode("overwrite").save()
-            else:
-                df.count()
+            df.write.format("noop").mode("overwrite").save()
             timings[name].append(round(time.time() - t0, 3))
             if rep == 0 and tag:
                 os.makedirs("plans/r06", exist_ok=True)

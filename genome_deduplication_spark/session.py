@@ -2,7 +2,8 @@
 
 Local mode is the test harness; the conf defaults are chosen to also be the
 right starting point on a real multi-executor cluster (AQE on, skew-join
-splitting on, Arrow for the pandas-UDF kernels).
+splitting on, Arrow for the pandas-UDF kernels, Python workers under the
+engine's ``worker_daemon``, so executors must be able to import this package).
 """
 
 from __future__ import annotations
@@ -40,6 +41,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        .config("spark.python.daemon.module", "genome_deduplication_spark.worker_daemon")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
