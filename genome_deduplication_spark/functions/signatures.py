@@ -1,4 +1,6 @@
-"""Fused signature kernel: one Arrow pass computing MinHash + SimHash.
+"""Fused signature kernel: one Arrow pass computing MinHash + SimHash, and
+the one normalize -> signature builder every caller of it goes through
+(``normalize_pages`` then ``sign_normalized``).
 
 Running MinHash and SimHash as separate pandas UDFs deserializes the (large)
 shingle column twice and boxes every output value into Python ints via
@@ -10,14 +12,20 @@ functions.simhash.simhash_py (tests/test_kernels.py checks them equal).
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from genome_deduplication_spark.config import MERSENNE31, DedupConfig
+from genome_deduplication_spark.functions.hashing import hash128
+from genome_deduplication_spark.functions.text import (
+    extract_text_from_html,
+    normalize_text,
+)
 
 _MASK = np.uint64((1 << 64) - 1)
 _M31 = np.uint64(MERSENNE31)
@@ -206,3 +214,47 @@ def make_doc_signature_udf(cfg: DedupConfig):
             )
 
     return doc_signature_udf
+
+
+def normalize_pages(pages: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """pages -> (doc_key, url, warc_ts, text, lang, is_ambiguous): the
+    pipeline's stage-1 normalize (reference parse+clean entry,
+    code/dedup2.py:461-468).
+
+    ``doc_key`` = hash128(url) is the document key of the near-dup core.
+    When a page carries raw ``html`` and no text, the deterministic
+    extractor produces it (same html bytes => same text for every url;
+    functions/text.py EXTRACTOR_VERSION). ``is_ambiguous`` marks docs
+    shorter than one shingle, the reference's N-region analogue."""
+    text = normalize_text(F.col("text"))
+    if "html" in pages.columns:
+        text = F.coalesce(text, extract_text_from_html(F.col("html")))
+    return pages.select(
+        hash128(F.col("url")).alias("doc_key"),
+        "url",
+        "warc_ts",
+        text.alias("text"),
+        "lang",
+    ).withColumn(
+        "is_ambiguous",
+        F.col("text").isNull() | (F.length("text") < cfg.shingle_k),
+    )
+
+
+def sign_normalized(
+    docs: DataFrame, cfg: DedupConfig, keep: Sequence[str]
+) -> DataFrame:
+    """Rows whose ``text`` column is already normalized -> the ``keep``
+    columns + content_hash, n_shingles, minhash, simhash, anchors.
+
+    ``content_hash`` is hash128 of the normalized text: the value
+    operators/exact_dedup.content_key gives for the raw text (normalize is
+    idempotent), without running the normalize regexes a second time. The
+    kernel's struct is unpacked right above the UDF (checkpointing a raw
+    struct column is pathologically slow in the serializer)."""
+    doc_signature_udf = make_doc_signature_udf(cfg)
+    return docs.select(
+        *keep,
+        hash128(F.col("text")).alias("content_hash"),
+        doc_signature_udf("text").alias("sig"),
+    ).select(*keep, "content_hash", "sig.*")

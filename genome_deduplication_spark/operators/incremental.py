@@ -57,10 +57,9 @@ from pyspark.sql import functions as F
 
 from ..config import DedupConfig
 from ..functions.hashing import hash128
-from ..functions.signatures import make_doc_signature_udf
+from ..functions.signatures import sign_normalized
 from ..functions.text import normalize_text
 from .connected_components import connected_components
-from .exact_dedup import content_key
 from .lsh import band_buckets, candidate_pairs
 from .verify import verify_pairs
 
@@ -91,31 +90,22 @@ def _batch_signatures(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
     # normalize rewrites `text` before the signature UDF runs). Signing raw
     # text here would make incremental near-dup clusters diverge from the
     # one-shot pipeline on any corpus with case/whitespace variance, while
-    # content_key (which normalizes internally) would still agree — the
-    # exact and near tiers would disagree about what the document is.
-    sig_udf = make_doc_signature_udf(cfg)
-    norm = normalize_text(F.col("text"))
-    return (
-        docs.select(
-            hash128(F.col("url")).alias("doc_key"),
-            "url",
-            content_key(norm).alias("content_hash"),
-            sig_udf(norm).alias("sig"),
-        )
-        .select(
-            "doc_key",
-            "url",
-            "content_hash",
-            F.col("sig.minhash").alias("minhash"),
-            F.col("sig.simhash").alias("simhash"),
-        )
+    # the content hash (of the same normalized text) would still agree —
+    # the exact and near tiers would disagree about what the document is.
+    norm = docs.select(
+        hash128(F.col("url")).alias("doc_key"),
+        "url",
+        normalize_text(F.col("text")).alias("text"),
+    )
+    return sign_normalized(norm, cfg, ("doc_key", "url")).select(
+        "doc_key", "url", "content_hash", "minhash", "simhash"
     )
 
 
 def dedup_increment(docs: DataFrame, cfg: DedupConfig, state_dir: str) -> dict:
     """Ingest one batch of ``docs(url, text)``; returns
-    ``{"clusters": DataFrame, "version": int, "n_docs": int,
-    "n_edges": int}`` where clusters covers EVERY doc seen so far.
+    ``{"clusters": DataFrame, "version": int, "n_docs": int}`` where
+    clusters covers EVERY doc seen so far.
 
     Refuses to resume over a state written with a different config
     (same guard as sources/checkpoint.py).
@@ -195,9 +185,4 @@ def dedup_increment(docs: DataFrame, cfg: DedupConfig, state_dir: str) -> dict:
         )
     os.replace(tmp, _manifest_path(state_dir))
 
-    return {
-        "clusters": clusters,
-        "version": version,
-        "n_docs": n_docs,
-        "n_edges": edges.count(),
-    }
+    return {"clusters": clusters, "version": version, "n_docs": n_docs}

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DedupConfig
-from ..functions.signatures import make_doc_signature_udf
+from ..functions.signatures import sign_normalized
 from ..functions.text import normalize_text
 from ..functions.urls import canonicalize_url
 from .connected_components import connected_components
@@ -124,25 +124,20 @@ def tier_dedup_report(
     # buckets -> verify -> CC); survivors have pairwise-distinct text, so
     # no exact short-circuit stage is needed here
     eligible = F.length("s") >= F.lit(cfg.shingle_k)  # NULL-safe: NULL -> filtered
-    sig_udf = make_doc_signature_udf(cfg)
     # NUMERIC ids end to end (r6): the tier report's ids are int64, so
     # the near stack runs on them directly — a bigint id IS a fixed-width
     # shuffle key, with zero collision risk at any scale — and
     # connected_components runs on int64 nodes, where the component label
     # it returns (min node id) IS the numeric-min representative, so no
     # separate rep election (groupBy + join) is needed.
+    survivors = reps.where(
+        url_survivor
+        & (F.coalesce("exact_rep", "doc_id") == F.col("doc_id"))
+        & eligible
+    ).select("doc_id", F.col("s").alias("text"))
     sigs = (
-        reps.where(
-            url_survivor
-            & (F.coalesce("exact_rep", "doc_id") == F.col("doc_id"))
-            & eligible
-        )
-        .select("doc_id", sig_udf(F.col("s")).alias("sig"))
-        .select(
-            "doc_id",
-            F.col("sig.minhash").alias("minhash"),
-            F.col("sig.simhash").alias("simhash"),
-        )
+        sign_normalized(survivors, cfg, ("doc_id",))
+        .select("doc_id", "minhash", "simhash")
         # the Arrow signature kernel has ~4 downstream consumers (bucket
         # counts, pairs, verify a/b) — run it exactly once
         .localCheckpoint(eager=True)

@@ -37,16 +37,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from genome_deduplication_spark.config import DedupConfig
-from genome_deduplication_spark.functions.hashing import hash128
-from genome_deduplication_spark.functions.signatures import make_doc_signature_udf
-from genome_deduplication_spark.functions.text import (
-    extract_text_from_html,
-    normalize_text,
+from genome_deduplication_spark.functions.signatures import (
+    normalize_pages,
+    sign_normalized,
 )
 from genome_deduplication_spark.operators.connected_components import (
     connected_components,
 )
-from genome_deduplication_spark.operators.exact_dedup import content_key
 from genome_deduplication_spark.operators.lsh import candidate_pairs
 from genome_deduplication_spark.operators.suffix_array import (
     exact_substring_pairs,
@@ -146,32 +143,11 @@ def dedup_pipeline(
         ctx.record_metrics(name, values(m["rows"], m["observed"]))
 
     # -- 1 normalize ----------------------------------------------------------
-    # the reference's parse+clean entry (code/dedup2.py:461-468): when the
-    # page carries raw html and no pre-extracted text, the deterministic
-    # extractor produces it — same html bytes => same text for every url
-    # (the input_hint's byte-identical-extraction invariant; the extractor
-    # is versioned pure string algebra, functions/text.py EXTRACTOR_VERSION)
-    def _normalize():
-        text_expr = normalize_text(F.col("text"))
-        if "html" in pages.columns:
-            text_expr = F.coalesce(
-                text_expr, extract_text_from_html(F.col("html"))
-            )
-        norm = pages.select(
-            hash128(F.col("url")).alias("doc_key"),
-            "url",
-            "warc_ts",
-            text_expr.alias("text"),
-            "lang",
-        )
-        return norm.withColumn(
-            "is_ambiguous",
-            F.col("text").isNull() | (F.length("text") < cfg.shingle_k),
-        )
-
+    # doc_key, html extraction and the ambiguous flag (functions/signatures.py,
+    # shared with streaming/ingest.py)
     normalized = stage(
         "normalize",
-        _normalize,
+        lambda: normalize_pages(pages, cfg),
         observe={"ambiguous": F.count_if(F.col("is_ambiguous"))},
     )
     docs = normalized.where(~F.col("is_ambiguous")).drop("is_ambiguous")
@@ -189,30 +165,12 @@ def dedup_pipeline(
 
     # -- 2 signatures ----------------------------------------------------------
     # one Arrow pass per document computes shingles (O(n) rolling hash),
-    # MinHash, SimHash AND the exact-substring anchor index; struct fields
-    # are extracted immediately (checkpointing a raw struct column is
-    # pathologically slow in the serializer)
-    doc_signature_udf = make_doc_signature_udf(cfg)
-
-    def _signatures():
-        return docs.select(
-            "doc_key",
-            "url",
-            "warc_ts",
-            content_key(F.col("text")).alias("content_hash"),
-            doc_signature_udf("text").alias("sig"),
-        ).select(
-            "doc_key",
-            "url",
-            "warc_ts",
-            "content_hash",
-            F.col("sig.n_shingles").alias("n_shingles"),
-            F.col("sig.minhash").alias("minhash"),
-            F.col("sig.simhash").alias("simhash"),
-            F.col("sig.anchors").alias("anchors"),
-        )
-
-    signatures = stage("signatures", _signatures)
+    # MinHash, SimHash AND the exact-substring anchor index
+    # (functions/signatures.py, the one builder every caller shares)
+    signatures = stage(
+        "signatures",
+        lambda: sign_normalized(docs, cfg, ("doc_key", "url", "warc_ts")),
+    )
     metrics("signatures", "signatures", lambda n, o: {"signatures_out": n})
 
     # -- 3 candidates ----------------------------------------------------------

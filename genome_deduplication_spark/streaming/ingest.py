@@ -22,35 +22,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from genome_deduplication_spark.config import DedupConfig
-from genome_deduplication_spark.functions.signatures import make_doc_signature_udf
-from genome_deduplication_spark.functions.text import normalize_text
-from genome_deduplication_spark.operators.exact_dedup import content_key
+from genome_deduplication_spark.functions.signatures import (
+    normalize_pages,
+    sign_normalized,
+)
 
 
 def streaming_signatures(pages_stream: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """pages stream -> signature stream (same one-pass kernel as batch
-    stage 2, so streamed and batch signature tables are interchangeable)."""
-    doc_signature_udf = make_doc_signature_udf(cfg)
-    norm = pages_stream.select(
-        "url",
-        "warc_ts",
-        normalize_text(F.col("text")).alias("text"),
-        "lang",
-    ).where(F.col("text").isNotNull() & (F.length("text") >= cfg.shingle_k))
-    return norm.select(
-        "url",
-        "warc_ts",
-        content_key(F.col("text")).alias("content_hash"),
-        doc_signature_udf("text").alias("sig"),
-    ).select(
-        "url",
-        "warc_ts",
-        "content_hash",
-        F.col("sig.n_shingles").alias("n_shingles"),
-        F.col("sig.minhash").alias("minhash"),
-        F.col("sig.simhash").alias("simhash"),
-        F.col("sig.anchors").alias("anchors"),
-    )
+    """pages stream -> signature stream: the pipeline's own stage-1
+    normalize and stage-2 builder, so a streamed row equals the pipeline's
+    ``signatures`` row for the same page (doc_key and html extraction
+    included). Ambiguous pages are dropped where the pipeline splits them
+    off."""
+    docs = normalize_pages(pages_stream, cfg).where(~F.col("is_ambiguous"))
+    return sign_normalized(docs, cfg, ("doc_key", "url", "warc_ts"))
 
 
 def run_ingest(

@@ -68,8 +68,9 @@ def test_signs_normalized_text_like_pipeline(spark, tmp_path):
 
     Raw-text signing made the near tier diverge from the one-shot pipeline
     (and the driver oracle) on any corpus with case/whitespace variance:
-    content_key normalizes internally, so within one dedup_increment call the
-    exact and near tiers would disagree about what the document is. Plant a
+    the content hash is of the normalized text, so within one
+    dedup_increment call the exact and near tiers would disagree about
+    what the document is. Plant a
     pair that is a near-dup ONLY after normalization (one doc is the other
     uppercased with a word swapped, so raw-case shingle sets are disjoint)
     and assert it clusters.

@@ -56,12 +56,15 @@ def test_streaming_ingest_dedups_exact(spark, tmp_path):
 
 
 def test_streaming_batch_equivalence_sf001(spark, tmp_path):
-    """Differential batch-vs-availableNow check over real testdata (sf0.01
-    documents): the streamed signature table must equal the batch stage-2
-    table row for row, and the exact-dup cluster table derived from each
+    """Differential pipeline-vs-availableNow check over real testdata
+    (sf0.01 documents): the streamed signature table must equal the batch
+    stage-2 table (the pipeline's ``signatures`` stage over the same
+    pages) row for row, and the exact-dup cluster table derived from each
     must be identical (streaming's interchangeability contract — the
     pair/cluster stages run batch over either snapshot; reference resume
     semantics, code/dedup2.py:546,553)."""
+    from genome_deduplication_spark.plans.pipeline import dedup_pipeline
+
     sf_dir = "/root/testdata/sf0.01"
     if not os.path.exists(f"{sf_dir}/documents.parquet"):  # driver testdata
         import pytest
@@ -93,20 +96,14 @@ def test_streaming_batch_equivalence_sf001(spark, tmp_path):
     q.awaitTermination(300)
 
     streamed = spark.read.parquet(out)
-    batch = streaming_signatures(spark.read.parquet(src), CFG)
+    batch = dedup_pipeline(
+        spark.read.parquet(src), CFG, enable_substring_pass=False
+    )["signatures"]
 
     def rows(df):
         return sorted(
-            (
-                r["url"],
-                r["content_hash"],
-                tuple(r["minhash"]),
-                r["simhash"],
-                r["n_shingles"],
-            )
-            for r in df.select(
-                "url", "content_hash", "minhash", "simhash", "n_shingles"
-            ).collect()
+            tuple(tuple(v) if isinstance(v, list) else v for v in r)
+            for r in df.select(*batch.columns).collect()
         )
 
     assert rows(streamed) == rows(batch)
