@@ -11,7 +11,9 @@ but additionally:
     plans/r06/<query>_<tag>.txt  (EXPLAIN_TAG=before|after env);
   * optionally repeats each query (BENCH_EXTRA_REPS) for warm floors.
 
-Output: one JSON line, same shape as bench.py's `queries` dict.
+Output: one JSON line, same shape as bench.py's `queries` dict; with
+BENCH_EXTRA_PIPELINE=1 it also holds the pipeline run's report (the
+metrics rows, see plans/pipeline.py) under ``pipeline_report``.
 """
 
 from __future__ import annotations
@@ -77,6 +79,7 @@ def main() -> None:
         headline = [q for q in headline if q in keep]
     qs = entrymod.queries()
     timings: dict[str, list] = {}
+    out: dict = {"queries": timings, "app_id": sc.applicationId}
     for name in headline:
         timings[name] = []
         for rep in range(reps):
@@ -115,9 +118,8 @@ def main() -> None:
             timings["dedup_pipeline_bench"].append(
                 round(time.time() - t0, 3)
             )
+            out["pipeline_report"] = tables["report"]
         sc.setJobDescription(None)
-
-    out: dict = {"queries": timings, "app_id": sc.applicationId}
 
     if os.environ.get("BENCH_EXTRA_SKEW", "0") == "1":
         out["lsh_skew_stress"] = _skew_stress(spark)

@@ -51,7 +51,7 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -61,6 +61,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from genome_deduplication_spark.sources.checkpoint import observed_checkpoint
 
 # Largest initial edge count finished on the driver (see module docstring).
 DRIVER_EDGES = 1_000_000
@@ -108,16 +110,10 @@ def _checkpoint(edges: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
     pmod keeps each summand < 1e9 so the sum stays in int64 under ANSI
     mode up to ~9e9 edges; xxhash64 hashes struct columns natively, so
     this works for int64, BINARY(16) and struct node ids."""
-    obs = Observation()
-    cut = edges.observe(
-        obs,
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(
-            F.sum(F.pmod(F.xxhash64("src", "dst"), F.lit(1_000_000_007))),
-            F.lit(0),
-        ).alias("h"),
-    ).localCheckpoint(eager=True)
-    fp = obs.get
+    h = F.sum(F.pmod(F.xxhash64("src", "dst"), F.lit(1_000_000_007)))
+    cut, fp = observed_checkpoint(
+        edges, {"n": F.count(F.lit(1)), "h": F.coalesce(h, F.lit(0))}
+    )
     return cut, (int(fp["n"]), int(fp["h"]))
 
 

@@ -61,7 +61,7 @@ from ..functions.signatures import sign_normalized
 from ..functions.text import normalize_text
 from .connected_components import connected_components
 from .lsh import band_buckets, candidate_pairs
-from .verify import verify_pairs
+from .verify import dup_edges, verify_pairs
 
 __all__ = ["dedup_increment"]
 
@@ -139,11 +139,7 @@ def dedup_increment(docs: DataFrame, cfg: DedupConfig, state_dir: str) -> dict:
         "band_id", "band_hash"
     )
     cand = candidate_pairs(all_sigs, cfg, id_col="doc_key", restrict_to=touched)
-    near = (
-        verify_pairs(cand, all_sigs, cfg, id_col="doc_key")
-        .where(F.col("is_dup"))
-        .select("id_a", "id_b")
-    )
+    near = dup_edges(verify_pairs(cand, all_sigs, cfg, id_col="doc_key"))
 
     # exact edges: hash groups containing >= 1 new doc, star around the
     # group's min key

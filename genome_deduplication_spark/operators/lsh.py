@@ -28,11 +28,12 @@ Scale design (north_star requirements):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from genome_deduplication_spark.config import DedupConfig
+from genome_deduplication_spark.sources.checkpoint import observed_checkpoint
 
 
 def band_buckets(signatures: DataFrame, cfg: DedupConfig,
@@ -96,8 +97,8 @@ def candidate_pairs(signatures: DataFrame, cfg: DedupConfig,
     (max_bucket_size < size <= DROP_CAP: the star keeps the smallest
     max_bucket_size members) and docs_in_dropped. The reference never
     silently drops data (every region lands in an accounting file,
-    code/dedup2.py:480-493); the pipeline records these counts in
-    metrics.jsonl.
+    code/dedup2.py:480-493); a recorded pipeline run keeps these counts in
+    its lsh_pairs manifest (metrics.jsonl's candidates row: lsh_<name>).
     """
     buckets = band_buckets(signatures, cfg, id_col, sig_col)
     if restrict_to is not None:
@@ -114,14 +115,8 @@ def candidate_pairs(signatures: DataFrame, cfg: DedupConfig,
         F.count(F.lit(1)).alias("_n")
     )
     if with_stats:
-        # eager: the observed stats arrive with this job, and the pairs
-        # plan reads the persisted counts (a lazy mark is not persisted
-        # under AQE, PLANS.md round 4)
-        obs = Observation()
-        counts = counts.observe(obs, *_truncation_aggs(cfg)).localCheckpoint(
-            eager=True
-        )
-        stats = {k: int(v) for k, v in obs.get.items()}
+        # the stats arrive with the counts checkpoint the pairs plan reads
+        counts, stats = observed_checkpoint(counts, _truncation_aggs(cfg))
     # _n >= 2: singleton buckets (97% of all buckets on web-scale corpora —
     # measured at bench sf0.1) cannot emit a pair; pruning them HERE means
     # the member join + window rank + collect_list see ~3% of the explode
@@ -170,19 +165,19 @@ def candidate_pairs(signatures: DataFrame, cfg: DedupConfig,
     return (pairs, stats) if with_stats else pairs
 
 
-def _truncation_aggs(cfg: DedupConfig) -> list:
+def _truncation_aggs(cfg: DedupConfig) -> dict:
     """The truncation accounting over a (band_id, band_hash, _n) counts
-    table, as aggregate columns (see candidate_pairs' ``with_stats``)."""
+    table, as named aggregate columns (see candidate_pairs' ``with_stats``)."""
     dropped = F.col("_n") > DROP_CAP
     capped = (F.col("_n") > cfg.max_bucket_size) & ~dropped
-    return [
-        F.count(F.lit(1)).alias("buckets_total"),
-        F.count(F.when(dropped, 1)).alias("buckets_dropped"),
-        F.count(F.when(capped, 1)).alias("buckets_capped"),
-        F.coalesce(F.sum(F.when(dropped, F.col("_n"))), F.lit(0)).alias(
-            "docs_in_dropped"
+    return {
+        "buckets_total": F.count(F.lit(1)),
+        "buckets_dropped": F.count(F.when(dropped, 1)),
+        "buckets_capped": F.count(F.when(capped, 1)),
+        "docs_in_dropped": F.coalesce(
+            F.sum(F.when(dropped, F.col("_n"))), F.lit(0)
         ),
-    ]
+    }
 
 
 def bucket_stats(signatures: DataFrame, cfg: DedupConfig,

@@ -90,4 +90,5 @@ def verify_pairs(
 
 
 def dup_edges(verified: DataFrame) -> DataFrame:
+    """The (id_a, id_b) edges of the pairs verify_pairs judged duplicates."""
     return verified.where("is_dup").select("id_a", "id_b")

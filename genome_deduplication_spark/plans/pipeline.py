@@ -49,21 +49,23 @@ from genome_deduplication_spark.operators.suffix_array import (
     exact_substring_pairs,
     pairs_from_anchor_rows,
 )
-from genome_deduplication_spark.operators.verify import verify_pairs
-from genome_deduplication_spark.sources.checkpoint import RunContext
+from genome_deduplication_spark.operators.verify import dup_edges, verify_pairs
+from genome_deduplication_spark.sources.checkpoint import (
+    RunContext,
+    observed_checkpoint,
+)
 
 
-def _concurrently(spark, *calls):
-    """Run independent ``(fn, *args)`` materializations on a thread pool.
-    Each call carries the caller's Spark local properties (job group,
-    description) and job tags into its thread, so its jobs stay
-    attributed to the caller; a plain pool thread would start with none."""
+def _concurrently(spark, *thunks):
+    """Run independent materializations on a thread pool. Each thunk
+    carries the caller's Spark local properties (job group, description)
+    and job tags into its thread, so its jobs stay attributed to the
+    caller; a plain pool thread would start with none."""
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=len(calls)) as pool:
+    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
         futures = [
-            pool.submit(inheritable_thread_target(spark)(fn), *args)
-            for fn, *args in calls
+            pool.submit(inheritable_thread_target(spark)(t)) for t in thunks
         ]
         return [f.result() for f in futures]
 
@@ -76,24 +78,60 @@ def _canonical_keys(signatures: DataFrame) -> DataFrame:
     ).select("content_hash", F.col("_c.doc_key").alias("doc_key"))
 
 
+# stage -> (its metrics row, the row's names for the stage's record); other
+# record values keep their names (the lsh_<name> truncation counts)
+_METRICS = {
+    "normalize": ("normalize", {"rows": "docs_in", "ambiguous": "docs_ambiguous"}),
+    "signatures": ("signatures", {"rows": "signatures_out"}),
+    "exact_edges": ("candidates", {"rows": "exact_edges"}),
+    "lsh_pairs": ("candidates", {"rows": "lsh_candidate_pairs"}),
+    "verified": ("verify", {"rows": "pairs_in", "dup": "pairs_dup"}),
+    "substring": ("substring", {"rows": "pairs_checked", "dup": "pairs_substring_dup"}),
+    "clusters": ("clusters", {"rows": "docs_clustered", "canonical": "n_clusters"}),
+}
+
+
+def _report(lineage: dict[str, dict], fused: dict[str, str]) -> list[dict]:
+    """The metrics rows of ``_METRICS`` from the stages' lineage records. A
+    value whose stage an unrecorded run fused into its consumer is absent;
+    the row's ``fused`` names that consumer instead."""
+    report: dict[str, dict] = {}
+    for stage, (name, names) in _METRICS.items():
+        row = report.setdefault(name, {"stage": name})
+        if stage in lineage:
+            row.update({names.get(k, k): v for k, v in lineage[stage].items()})
+        elif stage in fused:
+            row.setdefault("fused", {})[stage] = fused[stage]
+    # normalize is a 1:1 projection of pages: its rows are docs_in
+    norm = report["normalize"]
+    norm["docs_ok"] = norm["docs_in"] - norm["docs_ambiguous"]
+    # a stage the run skipped (the substring pass, when off) has no row
+    return [row for row in report.values() if len(row) > 1]
+
+
 def dedup_pipeline(
     pages: DataFrame,
     cfg: DedupConfig,
     run_dir: str | None = None,
     enable_substring_pass: bool = True,
-) -> dict[str, DataFrame]:
-    """Run the full plan; returns the stage tables.
+) -> dict:
+    """Run the full plan; returns the stage tables and, under ``report``,
+    the run report (``_report``).
 
     ``run_dir=None`` runs without checkpointing (tests/small inputs);
-    otherwise every stage is materialized + resumable.
+    otherwise every stage is materialized + resumable, and the report is
+    also written to ``metrics.jsonl``.
     """
     spark = pages.sparkSession
     ctx = (
         RunContext(spark, run_dir, cfg.to_json()) if run_dir is not None else None
     )
 
-    resumed: set[str] = set()
     sc = spark.sparkContext
+    # stage -> {rows, **observed}, taken from the job that materialized the
+    # stage; fused: stage -> the consumer whose jobs compute it (unrecorded)
+    lineage: dict[str, dict] = {}
+    fused: dict[str, str] = {}
 
     def described(name: str, thunk):
         # tag the jobs this stage materializes ("stage:<name>" in the Spark
@@ -107,40 +145,32 @@ def dedup_pipeline(
         finally:
             sc.setJobDescription(prev)
 
-    def stage(name: str, build, reused: bool = True, observe=None):
-        # observe: named aggregate columns a recorded run attaches to the
-        # stage's own write (RunContext.write_stage)
-        if ctx is None:
-            # No durable checkpoint requested: multi-consumer stages are
-            # EAGERLY localCheckpointed. Lazy marking looked cheaper (no
-            # barrier job) but does not persist under AQE — the adaptive
-            # plan computes a different RDD than the marked one, so every
-            # downstream consumer silently recomputed the stage (for the
-            # signatures stage that means re-running the pandas-UDF kernel
-            # per consumer). Interleaved A/B comparison at 160k docs:
-            # eager 79/105/43 s vs lazy 146/229/61 s — eager wins every
-            # adjacent pair (BENCH.md round 4). Single-consumer stages
-            # (reused=False) stay unmaterialized so Catalyst fuses them.
-            def _cut():
-                df = build()
-                return df.localCheckpoint(eager=True) if reused else df
-
-            return described(name, _cut)
-        if ctx.is_complete(name):
-            resumed.add(name)
-        return described(name, lambda: ctx.stage(name, build, observe))
-
-    def metrics(name: str, guard_stage: str, values):
-        # values(rows, observed) -> the metrics row, from guard_stage's
-        # manifest: rows from its parquet footers, observed from the
-        # aggregates attached to its write — no Spark job. guard_stage
-        # keeps the block exactly-once across resumes: a stage reused from
-        # its checkpoint already wrote its metrics in the run that built it
-        # (record_metrics also replaces per-stage, as defense in depth).
-        if ctx is None or guard_stage in resumed:
-            return
-        m = ctx.manifest(guard_stage)
-        ctx.record_metrics(name, values(m["rows"], m["observed"]))
+    def stage(name: str, build, observe=None, fused_into: str | None = None):
+        # observe: named aggregate columns attached to the job that
+        # materializes the stage (its write or its eager cut), beside its
+        # rows. fused_into: the consumer an unrecorded run fuses it into.
+        if ctx is not None:  # the record of a fresh or a resumed stage
+            df, lineage[name] = described(name, lambda: ctx.stage(name, build, observe))
+            return df
+        if fused_into is not None:
+            # a single-consumer stage stays lazy so Catalyst fuses it into
+            # its consumer: no number of its own. Never observe a lazy
+            # subtree: on one AQE prunes (an empty join side) the
+            # Observation completes with an empty row.
+            fused[name] = fused_into
+            return described(name, build)
+        # No durable checkpoint requested: multi-consumer stages are EAGERLY
+        # localCheckpointed. Lazy marking looked cheaper (no barrier job)
+        # but does not persist under AQE — the adaptive plan computes a
+        # different RDD than the marked one, so every downstream consumer
+        # silently recomputed the stage (for the signatures stage that means
+        # re-running the pandas-UDF kernel per consumer). Interleaved A/B
+        # comparison at 160k docs: eager 79/105/43 s vs lazy 146/229/61 s —
+        # eager wins every adjacent pair (BENCH.md round 4). The record is
+        # observed on that same job, as in CC's rounds.
+        cols = {"rows": F.count(F.lit(1)), **(observe or {})}
+        df, lineage[name] = described(name, lambda: observed_checkpoint(build(), cols))
+        return df
 
     # -- 1 normalize ----------------------------------------------------------
     # doc_key, html extraction and the ambiguous flag (functions/signatures.py,
@@ -152,16 +182,6 @@ def dedup_pipeline(
     )
     docs = normalized.where(~F.col("is_ambiguous")).drop("is_ambiguous")
     ambiguous = normalized.where(F.col("is_ambiguous"))
-    # normalize is a 1:1 projection of pages, so its rows are docs_in
-    metrics(
-        "normalize",
-        "normalize",
-        lambda n, o: {
-            "docs_in": n,
-            "docs_ok": n - o["ambiguous"],
-            "docs_ambiguous": o["ambiguous"],
-        },
-    )
 
     # -- 2 signatures ----------------------------------------------------------
     # one Arrow pass per document computes shingles (O(n) rolling hash),
@@ -171,7 +191,6 @@ def dedup_pipeline(
         "signatures",
         lambda: sign_normalized(docs, cfg, ("doc_key", "url", "warc_ts")),
     )
-    metrics("signatures", "signatures", lambda n, o: {"signatures_out": n})
 
     # -- 3 candidates ----------------------------------------------------------
     # exact-duplicate short-circuit: identical content hash is a sure edge —
@@ -208,62 +227,49 @@ def dedup_pipeline(
             "doc_key", "minhash"
         )
 
-    # truncation accounting (lsh.py's docstring promise: buckets the
-    # candidate stage dropped/capped are accounted, never silent — reference
-    # analogue code/dedup2.py:480-493) is observed on the bucket-counts
-    # checkpoint candidate_pairs() runs anyway: no job of its own.
-    trunc_holder: dict = {}
-
     def _lsh_pairs():
         # reps feed the counts and members sides of the bucket machinery —
         # materialize once, eagerly (lazy marks are not persisted under
         # AQE, PLANS.md round 4). Before this, the reps election and the
         # band explode each ran twice (640k profile: two ~360-CPU-s
         # SortAggregate stages over the full signature table).
+        # pairs already known exact dups need no subtraction: reps are
+        # one-per-content-hash, so same-hash pairs cannot appear
         reps = _reps().localCheckpoint(eager=True)
         if ctx is None:
+            # no truncation counts: taking the counts checkpoint here
+            # measured 39 jobs on tests/test_lineage.py's _small_corpus()
+            # against 37, exactly UNRECORDED_JOB_CEILING
             return candidate_pairs(reps, cfg, id_col="doc_key")
+        # truncation accounting (lsh.py's no-silent-truncation promise,
+        # reference analogue code/dedup2.py:480-493), observed on the
+        # bucket-counts checkpoint candidate_pairs() runs anyway, lands in
+        # this stage's manifest beside its rows
         pairs, stats = candidate_pairs(
             reps, cfg, id_col="doc_key", with_stats=True
         )
-        trunc_holder["stats"] = stats
-        return pairs
-        # pairs already known exact dups need no subtraction: reps are
-        # one-per-content-hash, so same-hash pairs cannot appear
+        return pairs, {f"lsh_{k}": v for k, v in stats.items()}
 
     # exact_edges and the reps/LSH chain are independent given the
-    # signatures checkpoint — materialize them concurrently (guide §2.6:
-    # actions are only sequential because driver code calls them
-    # sequentially; the second job's tasks back-fill executors freed by
-    # the first job's tail, and its Catalyst/AQE planning overlaps the
-    # first job's execution). Unrecorded runs only: overlapped, the CPU of
-    # a recorded run depends on how the two stages' jobs interleave (the
-    # perfbench mirror_crawl op's CPU then spread from run to run past the
-    # benchmark's bound), so a recorded run writes them in turn. RunContext
-    # itself would allow the overlap: a stage's write touches only its own
-    # stage's files.
+    # signatures checkpoint: an unrecorded run materializes them
+    # concurrently (guide §2.6: the second job's tasks back-fill executors
+    # freed by the first job's tail, and its planning overlaps the first
+    # job's execution). A recorded run writes them in turn: overlapped, its
+    # CPU depends on how the two stages' jobs interleave (perfbench
+    # mirror_crawl's op CPU then spread from run to run past the bound).
     # exact_edges is multi-consumer only when the substring pass (known-
     # pairs anti-join) reads it besides the final edge union; otherwise an
     # unrecorded run's eager cut is a pure barrier + job with no reuse to
     # pay for it (r6 event-log profile). A recorded stage is always written.
+    exact_fused = None if enable_substring_pass else "components"
     calls = (
-        (stage, "exact_edges", _exact_edges, enable_substring_pass),
-        (stage, "lsh_pairs", _lsh_pairs, False),
+        lambda: stage("exact_edges", _exact_edges, fused_into=exact_fused),
+        lambda: stage("lsh_pairs", _lsh_pairs, fused_into="verified"),
     )
     if ctx is None:
         exact_edges, lsh_pairs = _concurrently(spark, *calls)
     else:
-        exact_edges, lsh_pairs = (fn(*args) for fn, *args in calls)
-
-    if ctx is not None and "lsh_pairs" not in resumed:
-        ctx.record_metrics(
-            "candidates",
-            {
-                "exact_edges": ctx.manifest("exact_edges")["rows"],
-                "lsh_candidate_pairs": ctx.manifest("lsh_pairs")["rows"],
-                **{f"lsh_{k}": v for k, v in trunc_holder["stats"].items()},
-            },
-        )
+        exact_edges, lsh_pairs = (call() for call in calls)
 
     # -- 4 verify ----------------------------------------------------------------
     def _verified():
@@ -285,6 +291,7 @@ def dedup_pipeline(
             id_col="doc_key",
         )
 
+    verified_dup = {"dup": F.count_if(F.col("is_dup"))}
     substr_cand = None
     if ctx is None and enable_substring_pass:
         # overlap the two independent subtrees (guide §2.6, same pattern
@@ -294,23 +301,15 @@ def dedup_pipeline(
         # candidate set instead of re-deriving it inside its lazy plan.
         verified, substr_cand = _concurrently(
             spark,
-            (stage, "verified", _verified, True),
-            (
-                described,
+            lambda: stage("verified", _verified, verified_dup),
+            lambda: described(
                 "substr_cand",
                 lambda: _substr_cand().localCheckpoint(eager=True),
             ),
         )
     else:
-        verified = stage(
-            "verified", _verified, observe={"dup": F.count_if(F.col("is_dup"))}
-        )
-    dup_edges = verified.where("is_dup").select("id_a", "id_b")
-    metrics(
-        "verify",
-        "verified",
-        lambda n, o: {"pairs_in": n, "pairs_dup": o["dup"]},
-    )
+        verified = stage("verified", _verified, verified_dup)
+    near_edges = dup_edges(verified)
 
     # -- 5 substring pass ---------------------------------------------------------
     if enable_substring_pass:
@@ -319,7 +318,7 @@ def dedup_pipeline(
             # through the suffix-array LCS kernel; every edge set is
             # key-oriented (id_a < id_b), so the anti-join is exact
             cand = substr_cand if substr_cand is not None else _substr_cand()
-            known = exact_edges.union(dup_edges)
+            known = exact_edges.union(near_edges)
             todo = cand.join(known, ["id_a", "id_b"], "left_anti")
             return exact_substring_pairs(
                 todo, docs, cfg.min_common_substring, id_col="doc_key"
@@ -328,21 +327,16 @@ def dedup_pipeline(
         substr = stage(
             "substring",
             _substr,
-            reused=False,
-            observe={"dup": F.count_if(F.col("is_substring_dup"))},
+            {"dup": F.count_if(F.col("is_substring_dup"))},
+            fused_into="components",
         )
         substr_edges = substr.where("is_substring_dup").select("id_a", "id_b")
-        metrics(
-            "substring",
-            "substring",
-            lambda n, o: {"pairs_checked": n, "pairs_substring_dup": o["dup"]},
-        )
     else:
         substr = None
         substr_edges = spark.createDataFrame([], "id_a binary, id_b binary")
 
     # -- 6 components ----------------------------------------------------------
-    all_edges = exact_edges.union(dup_edges).union(substr_edges)
+    all_edges = exact_edges.union(near_edges).union(substr_edges)
 
     def _components():
         # (node, component) for every key on an edge; docs on no edge are
@@ -351,7 +345,7 @@ def dedup_pipeline(
             all_edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         )
 
-    components = stage("components", _components, reused=False)
+    components = stage("components", _components, fused_into="clusters")
 
     # -- 7 clusters: canonical = min(warc_ts, url) within each component ---------
     def _clusters():
@@ -377,13 +371,11 @@ def dedup_pipeline(
     clusters = stage(
         "clusters",
         _clusters,
-        observe={"canonical": F.count_if(F.col("url") == F.col("cluster_id"))},
+        {"canonical": F.count_if(F.col("url") == F.col("cluster_id"))},
     )
-    metrics(
-        "clusters",
-        "clusters",
-        lambda n, o: {"docs_clustered": n, "n_clusters": o["canonical"]},
-    )
+    report = _report(lineage, fused)
+    if ctx is not None:
+        ctx.write_metrics(report)
 
     # the edges in url space, for callers that read them (lazy: only a
     # caller that reads dup_edges pays for the two key->url joins)
@@ -405,4 +397,5 @@ def dedup_pipeline(
         "components": components,
         "clusters": clusters,
         "ambiguous": ambiguous,
+        "report": report,
     }

@@ -44,6 +44,18 @@ def _part_file_rows(path: str) -> dict[int, int]:
     return rows
 
 
+def observed_checkpoint(
+    df: DataFrame, observe: dict[str, Column]
+) -> tuple[DataFrame, dict]:
+    """Eager ``localCheckpoint`` of ``df`` (a lazy mark is not persisted
+    under AQE, PLANS.md round 4) and the named aggregate columns, observed
+    on that checkpoint job itself: no job of their own. The values arrive,
+    never block, on an empty ``df`` too."""
+    obs = Observation()
+    cut = df.observe(obs, *[c.alias(k) for k, c in observe.items()])
+    return cut.localCheckpoint(eager=True), obs.get
+
+
 def _nullable(t: T.DataType) -> T.DataType:
     """``t`` as a parquet read reports it: Spark reads every field, array
     element and map value back as nullable (Scala's asNullable)."""
@@ -96,15 +108,16 @@ class RunContext:
         return os.path.exists(self._manifest_path(stage))
 
     def write_stage(
-        self, stage: str, df: DataFrame, observe: dict[str, Column] | None = None
+        self, stage: str, df: DataFrame, observe: dict | None = None
     ) -> DataFrame:
         """Materialize a stage: parquet write + completion manifest, then
         return the re-read DataFrame (cuts lineage like an Iceberg snapshot).
 
-        ``observe`` maps names to aggregate columns. They are attached with
-        ``DataFrame.observe`` directly above the write, so their values
-        arrive with the write job itself and land in the manifest under
-        ``observed``.
+        ``observe`` maps names to aggregate columns, attached with
+        ``DataFrame.observe`` directly above the write so their values
+        arrive with the write job itself, or to plain values the stage's
+        build already measured on a job of its own. Both land in the
+        manifest under ``observed``.
 
         Per-partition lineage: (partition_id, rows) for every written part
         file, read from the parquet footers on the driver — the analogue of
@@ -119,10 +132,13 @@ class RunContext:
         read would report it, recorded in the manifest), so Spark runs no
         schema-inference job over the part files."""
         path = self._data_path(stage)
+        observe = observe or {}
+        cols = {k: c for k, c in observe.items() if isinstance(c, Column)}
+        observed = {k: v for k, v in observe.items() if k not in cols}
         obs = None
-        if observe:
+        if cols:
             obs = Observation()
-            df = df.observe(obs, *[c.alias(k) for k, c in observe.items()])
+            df = df.observe(obs, *[c.alias(k) for k, c in cols.items()])
         df.write.mode("overwrite").parquet(path)
         per_part = _part_file_rows(path)
         schema = _nullable(df.schema)
@@ -136,7 +152,7 @@ class RunContext:
                 {"partition_id": pid, "rows": rows}
                 for pid, rows in sorted(per_part.items())
             ],
-            "observed": obs.get if obs is not None else {},
+            "observed": {**observed, **(obs.get if obs is not None else {})},
             "schema": schema.json(),
             "completed_at_unix": time.time(),
         }
@@ -159,32 +175,32 @@ class RunContext:
 
     def stage(
         self, name: str, build, observe: dict[str, Column] | None = None
-    ) -> DataFrame:
-        """Run ``build()`` unless the stage is already complete (resume)."""
+    ) -> tuple[DataFrame, dict]:
+        """Run ``build()`` unless the stage is already complete (resume);
+        returns the stage's table and its lineage record, ``{rows,
+        **observed}`` from its manifest. ``build()`` returns the table, or
+        ``(table, measured)`` with values it measured on a job of its own,
+        recorded with the observed ones."""
         if self.is_complete(name):
-            return self.read_stage(name)
-        return self.write_stage(name, build(), observe)
+            df = self.read_stage(name)
+        else:
+            df = build()
+            if isinstance(df, tuple):
+                df, measured = df
+                observe = {**(observe or {}), **measured}
+            df = self.write_stage(name, df, observe)
+        m = self.manifest(name)
+        return df, {"rows": m["rows"], **m["observed"]}
 
     # -- lineage metrics -----------------------------------------------------
 
-    def record_metrics(self, stage: str, metrics: dict[str, int | float]) -> None:
-        """Record a stage's lineage metrics, replacing any earlier row for
-        the same stage (atomic rewrite) so a redone stage cannot leave
-        duplicate rows. An unlocked read-modify-write: call it from one
-        thread at a time."""
+    def write_metrics(self, report: list[dict]) -> None:
+        """Write the run report (one row per metrics stage, built from the
+        stage manifests) to metrics.jsonl in one atomic replace."""
         path = os.path.join(self.run_dir, "metrics.jsonl")
-        kept: list[str] = []
-        if os.path.exists(path):
-            with open(path) as f:
-                kept = [
-                    line
-                    for line in f
-                    if line.strip() and json.loads(line).get("stage") != stage
-                ]
         tmp = path + ".tmp"
         with open(tmp, "w") as f:
-            f.writelines(kept)
-            f.write(json.dumps({"stage": stage, **metrics}) + "\n")
+            f.writelines(json.dumps(row) + "\n" for row in report)
         os.replace(tmp, path)
 
     def read_metrics(self) -> list[dict]:

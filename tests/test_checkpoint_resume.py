@@ -103,6 +103,62 @@ def test_metrics_exactly_once_on_resume(spark, tmp_path):
     assert len(names) == len(set(names)), f"duplicate metric rows: {names}"
 
 
+_TRUNCATION = (
+    "lsh_buckets_total",
+    "lsh_buckets_dropped",
+    "lsh_buckets_capped",
+    "lsh_docs_in_dropped",
+)
+
+
+@pytest.fixture(scope="module")
+def uninterrupted_metrics(spark, tmp_path_factory):
+    run_dir = str(tmp_path_factory.mktemp("uninterrupted"))
+    dedup_pipeline(pages_df(spark, _corpus()), CFG, run_dir=run_dir)
+    return RunContext(spark, run_dir, CFG.to_json()).read_metrics()
+
+
+class _Killed(Exception):
+    pass
+
+
+@pytest.mark.parametrize(
+    "killed_after, row",
+    [("verified", "verify"), ("lsh_pairs", "candidates")],
+    ids=["verified", "lsh_pairs"],
+)
+def test_killed_after_manifest_keeps_metrics(
+    spark, tmp_path, monkeypatch, uninterrupted_metrics, killed_after, row
+):
+    """A run killed right after a stage's manifest rename reuses that stage
+    on resume; the stage's metrics row (for lsh_pairs: the candidates row
+    with its truncation counts) must still be reported, equal to an
+    uninterrupted run's, and so must the whole of metrics.jsonl."""
+    run_dir = str(tmp_path / "run")
+    df = pages_df(spark, _corpus())
+    write_stage = RunContext.write_stage
+
+    def killed(self, stage, data, observe=None):
+        out = write_stage(self, stage, data, observe)
+        if stage == killed_after:
+            raise _Killed(stage)
+        return out
+
+    with monkeypatch.context() as m:
+        m.setattr(RunContext, "write_stage", killed)
+        with pytest.raises(_Killed):
+            dedup_pipeline(df, CFG, run_dir=run_dir)
+    dedup_pipeline(df, CFG, run_dir=run_dir)
+    ctx = RunContext(spark, run_dir, CFG.to_json())
+    got = {r["stage"]: r for r in ctx.read_metrics()}
+    want = {r["stage"]: r for r in uninterrupted_metrics}
+    assert row in got, sorted(got)
+    assert got[row] == want[row]
+    for key in _TRUNCATION:
+        assert key in got["candidates"], key
+    assert got == want
+
+
 def test_per_partition_lineage_counters(spark, tmp_path):
     """Every checkpointed stage records (partition_id, rows) lineage whose
     sum equals the stage manifest's row count, written exactly once even
@@ -139,12 +195,7 @@ def test_per_partition_lineage_counters(spark, tmp_path):
     # dropped/capped buckets (lsh.py's no-silent-truncation promise)
     cand = [m for m in ctx.read_metrics() if m["stage"] == "candidates"]
     assert cand, "no candidates metrics recorded"
-    for key in (
-        "lsh_buckets_total",
-        "lsh_buckets_dropped",
-        "lsh_buckets_capped",
-        "lsh_docs_in_dropped",
-    ):
+    for key in _TRUNCATION:
         assert key in cand[-1], key
 
 

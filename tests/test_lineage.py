@@ -213,6 +213,14 @@ def test_pipeline_pool_jobs_keep_caller_group(spark, tmp_path, recorded):
     assert len(jobs) <= ceiling, len(jobs)
 
 
+_TRUNCATION = {
+    "lsh_buckets_total",
+    "lsh_buckets_dropped",
+    "lsh_buckets_capped",
+    "lsh_docs_in_dropped",
+}
+
+
 @pytest.mark.parametrize(
     "corpus",
     [
@@ -222,15 +230,41 @@ def test_pipeline_pool_jobs_keep_caller_group(spark, tmp_path, recorded):
     ],
 )
 def test_recorded_metrics_equal_count_based(spark, tmp_path, corpus):
-    """metrics.jsonl values equal count()-based ones, also when a stage is
-    empty (no edges at all; no unambiguous docs at all) — the observed
-    aggregates must arrive, never block, on an empty write."""
+    """In both modes, every value the run report holds equals the
+    count()-based one, also when a stage is empty (no edges at all; no
+    unambiguous docs at all) — the observed aggregates must arrive, never
+    block, on an empty write or cut. A recorded run reports every value
+    plus the LSH truncation counts, and its metrics.jsonl is the report.
+    An unrecorded run leaves out exactly the values of the stages it fuses
+    into a consumer (lsh_pairs into verified, substring into components)
+    and the truncation counts. (The modes are a loop, not a
+    parametrization, so the test keeps its ids.)"""
     pages = pages_df(spark, corpus())
-    run_dir = str(tmp_path / "run")
-    tables = dedup_pipeline(pages, CFG, run_dir=run_dir)
-    got = _recorded_metrics(run_dir, spark)
-    for stage, want in _count_based_metrics(pages, tables).items():
-        assert {k: got[stage][k] for k in want} == want, stage
+    for run_dir in (str(tmp_path / "run"), None):
+        tables = dedup_pipeline(pages, CFG, run_dir=run_dir)
+        report = tables["report"]
+        got = {r["stage"]: r for r in report}
+        absent = set()
+        for stage, want in _count_based_metrics(pages, tables).items():
+            held = {k: got[stage][k] for k in want if k in got[stage]}
+            assert held == {k: want[k] for k in held}, (run_dir, stage)
+            absent |= {(stage, k) for k in want if k not in held}
+        fused = {s: r["fused"] for s, r in got.items() if "fused" in r}
+        if run_dir is not None:
+            assert report == RunContext(spark, run_dir, CFG.to_json()).read_metrics()
+            assert not absent and not fused, (absent, fused)
+            assert _TRUNCATION <= set(got["candidates"]), got["candidates"]
+            continue
+        assert absent == {
+            ("candidates", "lsh_candidate_pairs"),
+            ("substring", "pairs_checked"),
+            ("substring", "pairs_substring_dup"),
+        }, absent
+        assert fused == {
+            "candidates": {"lsh_pairs": "verified"},
+            "substring": {"substring": "components"},
+        }, fused
+        assert not _TRUNCATION & set(got["candidates"]), got["candidates"]
 
 
 def test_resumed_stages_keep_metrics_and_counters(spark, tmp_path):
