@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import dataclasses
 import json
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 # Prime modulus for the universal-hash MinHash family. 2**31 - 1 keeps every
@@ -97,9 +97,6 @@ class DedupConfig:
     @staticmethod
     def from_json(s: str) -> "DedupConfig":
         return DedupConfig(**json.loads(s))
-
-
-DEFAULT_CONFIG = DedupConfig()
 
 
 def lsh_threshold_curve(cfg: DedupConfig, jaccard: float) -> float:

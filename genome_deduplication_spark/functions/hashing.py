@@ -21,17 +21,10 @@ import hashlib
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from genome_deduplication_spark.config import MERSENNE31
-
 
 def hash60(col: Column) -> Column:
     """Portable 60-bit hash of a string column (Spark side)."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
-def hash60_sql(expr: str) -> str:
-    """Spark-SQL text form of :func:`hash60` for use inside spark.sql()."""
-    return f"CAST(conv(substr(md5({expr}), 1, 15), 16, 10) AS BIGINT)"
 
 
 def hash60_duckdb_sql(expr: str) -> str:
@@ -54,7 +47,3 @@ def hash128(col: Column) -> Column:
     <hi,lo> keys fall off it (measured ~18-170% slowdowns depending on
     the operator)."""
     return F.unhex(F.md5(col))
-
-
-def hash31_py(s: str) -> int:
-    return hash60_py(s) % MERSENNE31

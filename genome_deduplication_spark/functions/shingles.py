@@ -1,17 +1,21 @@
 """Shingle extraction — the reimplementation of the reference k-mer inner
 loop (all overlapping k-substrings, code/dedup2.py:135-139).
 
-Two interchangeable kernels:
+One shingle family: a polynomial rolling hash over the UTF-8 bytes of each
+k-byte window, mod 2**31-1 (the MinHash domain). The pipeline's signature
+UDF (functions/signatures.py), the entry queries (whose DuckDB oracle
+recomputes it in SQL) and the Python oracle all share it:
 
-* :func:`char_shingles31` — JVM-side Column expression (portable md5-derived
-  hashes mod 2**31-1). O(n*k) but fully inside whole-stage codegen and
-  reproducible by the DuckDB oracle + pure-Python oracle. Default.
-* :func:`char_shingles31_pandas` — Arrow-batched numpy rolling polynomial
-  hash, O(n) per document: the kernel for very long documents where O(n*k)
-  substring hashing dominates. Uses its own deterministic polynomial family
-  (mirrored by the Python oracle) — do not mix families within one run.
+* :func:`poly_window_hashes_np` — per-document numpy kernel, k vector
+  passes; the baseline every faster kernel is property-tested against.
+* :func:`poly_window_hashes_multi` / :func:`poly_window_hashes_batched` —
+  one shared modular prefix sum for several widths, over L2-sized groups
+  of a batch's documents: the hot path.
+* :func:`make_char_shingles31_pandas` — the Arrow-batched pandas UDF over
+  the batched kernel.
+* :func:`poly_shingles31_py` — the pure-Python twin (Horner per window).
 
-All kernels emit the *distinct* shingle set (set semantics, matching the
+Every kernel emits the *distinct* shingle set (set semantics, matching the
 reference's set membership model, code/dedup2.py:142).
 """
 
@@ -21,42 +25,18 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from genome_deduplication_spark.config import MERSENNE31
 
-_M61 = (1 << 61) - 1
 _POLY_BASE = 1315423911  # deterministic polynomial base for the numpy kernel
 
 
-def _positions(col: Column, k: int) -> Column:
-    # 1-based start positions of every k-window; empty when len(text) < k.
-    # NB: F.sequence(1, 0) yields a DESCENDING [1, 0] in Spark, so the
-    # short-text case must be handled explicitly, not via greatest().
-    return F.when(
-        F.length(col) >= k, F.sequence(F.lit(1), F.length(col) - F.lit(k - 1))
-    ).otherwise(F.array().cast("array<int>"))
-
-
-def char_shingles31(col: Column, k: int) -> Column:
-    """array<long> of distinct md5-derived shingle hashes mod 2**31-1."""
-    sh = F.transform(
-        _positions(col, k),
-        lambda i: F.conv(F.substring(F.md5(F.substring(col, i, k)), 1, 15), 16, 10)
-        .cast("long")
-        % F.lit(MERSENNE31),
-    )
-    return F.array_distinct(sh)
-
-
 def make_char_shingles31_pandas(k: int):
-    """Arrow-batched O(n) rolling-hash shingle kernel.
-
-    Polynomial rolling hash over UTF-8 bytes in the 2**61-1 Mersenne field,
-    reduced to 2**31-1 at the end. Matches
-    :func:`genome_deduplication_spark.oracle.poly_shingles_py`.
+    """Arrow-batched O(n) rolling-hash shingle kernel: the distinct
+    polynomial window hashes mod 2**31-1 of each document's UTF-8 bytes.
+    Matches :func:`poly_shingles31_py`.
     """
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
@@ -247,7 +227,6 @@ def poly_shingles31_py(text: str, k: int) -> set[int]:
 
 
 __all__ = [
-    "char_shingles31",
     "make_char_shingles31_pandas",
     "poly_window_hashes_np",
     "poly_shingles31_py",

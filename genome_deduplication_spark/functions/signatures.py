@@ -247,9 +247,8 @@ def sign_normalized(
     """Rows whose ``text`` column is already normalized -> the ``keep``
     columns + content_hash, n_shingles, minhash, simhash, anchors.
 
-    ``content_hash`` is hash128 of the normalized text: the value
-    operators/exact_dedup.content_key gives for the raw text (normalize is
-    idempotent), without running the normalize regexes a second time. The
+    ``content_hash`` is hash128 of the normalized text, hashed here without
+    running the normalize regexes a second time. The
     kernel's struct is unpacked right above the UDF (checkpointing a raw
     struct column is pathologically slow in the serializer)."""
     doc_signature_udf = make_doc_signature_udf(cfg)

@@ -59,6 +59,7 @@ from ..config import DedupConfig
 from ..functions.hashing import hash128
 from ..functions.signatures import sign_normalized
 from ..functions.text import normalize_text
+from ..sources.checkpoint import observed_checkpoint
 from .connected_components import connected_components
 from .lsh import band_buckets, candidate_pairs
 from .verify import dup_edges, verify_pairs
@@ -118,8 +119,10 @@ def dedup_increment(docs: DataFrame, cfg: DedupConfig, state_dir: str) -> dict:
         )
     version = 0 if man is None else man["version"] + 1
 
-    new_sigs = _batch_signatures(docs, cfg).localCheckpoint(eager=True)
-    n_new = new_sigs.count()
+    # the batch's row count is observed on its eager cut: no count job
+    new_sigs, seen = observed_checkpoint(
+        _batch_signatures(docs, cfg), {"n": F.count(F.lit(1))}
+    )
     if man is None:
         all_sigs = new_sigs
         prior_edges = None
@@ -173,7 +176,7 @@ def dedup_increment(docs: DataFrame, cfg: DedupConfig, state_dir: str) -> dict:
     vdir = os.path.join(state_dir, f"v{version}")
     new_sigs.write.mode("overwrite").parquet(os.path.join(vdir, "signatures"))
     new_edges.write.mode("overwrite").parquet(os.path.join(vdir, "edges"))
-    n_docs = n_prior + n_new
+    n_docs = n_prior + seen["n"]
     tmp = _manifest_path(state_dir) + ".tmp"
     with open(tmp, "w") as f:
         json.dump(

@@ -33,8 +33,8 @@ def self_repeat_spans_py(text: str, min_len: int) -> list[tuple[int, int]]:
 
     UNIT CONTRACT: all span offsets and min_len are UTF-8 BYTE offsets
     (octets), end-exclusive — matching the suffix-array kernel, the
-    lcs_len/min_common_substring columns, coverage_gaps (octet_length) and
-    extract_span_text (byte slicing). On pure-ASCII text bytes == chars.
+    lcs_len/min_common_substring columns and coverage_gaps (octet_length).
+    On pure-ASCII text bytes == chars.
     Sequential kernel — runs inside the vectorized map UDF."""
     if not text:
         return []

@@ -85,15 +85,6 @@ def train_dev_split(
     return below.unionByName(border).drop("_u", "_b")
 
 
-def sample_exact_n(df: DataFrame, n: int, seed: int, key_col: str = "url") -> DataFrame:
-    """Sample-without-replacement of exactly n rows (R3): seeded shuffle +
-    limit. (Global window ordering is acceptable because n is small in the
-    control-corpus use case; for huge n use df.sample + exact top-up.)"""
-    return (
-        df.orderBy(keyed_uniform(seed, F.col(key_col)), F.col(key_col)).limit(n)
-    )
-
-
 def stratified_sample_exact(
     df: DataFrame,
     n_per: int,

@@ -135,15 +135,6 @@ def longest_common_substring_len(a: str, b: str) -> int:
     return int(lcp[1:][cross].max()) if cross.any() else 0
 
 
-def longest_self_repeat_len(a: str) -> int:
-    """Longest substring occurring >= twice within one document (max LCP)."""
-    if not a:
-        return 0
-    data = np.frombuffer(a.encode("utf-8"), dtype=np.uint8).astype(np.int64)
-    _, lcp = suffix_array_and_lcp(data)
-    return int(lcp.max()) if len(lcp) else 0
-
-
 def pairs_from_anchor_rows(
     anchors: DataFrame,
     max_bucket_size: int,

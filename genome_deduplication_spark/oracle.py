@@ -21,8 +21,7 @@ from __future__ import annotations
 import hashlib
 from collections import defaultdict
 
-from genome_deduplication_spark.config import MERSENNE31, DedupConfig
-from genome_deduplication_spark.functions.hashing import hash31_py
+from genome_deduplication_spark.config import DedupConfig
 from genome_deduplication_spark.functions.minhash import minhash_py
 from genome_deduplication_spark.functions.simhash import simhash_py
 
@@ -32,14 +31,6 @@ def normalize_py(text: str) -> str:
     import re
 
     return re.sub(r"\s+", " ", text).strip().lower()
-
-
-def shingles31_py(text: str, k: int) -> set[int]:
-    """Twin of functions.shingles.char_shingles31 (md5 portable family,
-    distinct set) — the DuckDB-facing shingle family."""
-    if len(text) < k:
-        return set()
-    return {hash31_py(text[i : i + k]) for i in range(len(text) - k + 1)}
 
 
 def pipeline_shingles_py(text: str, k: int) -> set[int]:

@@ -173,8 +173,7 @@ def dedup_pipeline(
         return df
 
     # -- 1 normalize ----------------------------------------------------------
-    # doc_key, html extraction and the ambiguous flag (functions/signatures.py,
-    # shared with streaming/ingest.py)
+    # doc_key, html extraction and the ambiguous flag (functions/signatures.py)
     normalized = stage(
         "normalize",
         lambda: normalize_pages(pages, cfg),

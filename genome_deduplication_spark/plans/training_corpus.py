@@ -14,9 +14,8 @@ Stages (each an already-tested operator, composed first-match-wins):
      sharing any word n-gram (GPT-3's n=13 convention) with the
      benchmark collection, and drop the benchmark docs themselves.
   4. deterministic shard assignment: key-derived uniform bucketed into
-     ceil(n / rows_per_shard) shards — the write_training_shards rule
-     (sources/sinks.py) surfaced as a column, so the export is pure
-     partitionBy.
+     ceil(n / rows_per_shard) shards, carried as a column so the export
+     is pure partitionBy.
 
 Scale shape (100 TB): stage 1 carries the whole dedup stack's caps and
 star joins; stage 2 is zero-shuffle codegen; stage 3 broadcasts the

@@ -55,6 +55,27 @@ def test_two_batches_equal_one_shot(spark, corpus, tmp_path):
     assert r2["n_docs"] == corpus.count()
 
 
+def test_increment_runs_no_count_job(spark, corpus, tmp_path, monkeypatch):
+    """Each batch's row count is observed on the eager cut of its
+    signatures, so a two-batch run never calls DataFrame.count, and the
+    manifest's n_docs still adds up."""
+    a = corpus.where(F.crc32("url") % 2 == 0)
+    b = corpus.where(F.crc32("url") % 2 == 1)
+    n_a, n = a.count(), corpus.count()
+
+    def count(self):
+        raise AssertionError("dedup_increment ran a count job")
+
+    d = str(tmp_path / "state")
+    with monkeypatch.context() as m:
+        # the session's concrete DataFrame class (pyspark.sql.DataFrame
+        # is its base, whose count the subclass overrides)
+        m.setattr(type(corpus), "count", count)
+        r1 = dedup_increment(a, DedupConfig(), d)
+        r2 = dedup_increment(b, DedupConfig(), d)
+    assert (r1["n_docs"], r2["n_docs"]) == (n_a, n)
+
+
 def test_config_mismatch_refuses(spark, corpus, tmp_path):
     d = str(tmp_path / "state")
     dedup_increment(corpus.limit(20), DedupConfig(), d)

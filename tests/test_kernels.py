@@ -8,19 +8,10 @@ from pyspark.sql import functions as F
 
 from genome_deduplication_spark.config import DedupConfig, lsh_threshold_curve
 from genome_deduplication_spark.functions.minhash import minhash_py
-from genome_deduplication_spark.functions.shingles import char_shingles31
 from genome_deduplication_spark.functions.simhash import simhash_py
-from genome_deduplication_spark.oracle import normalize_py, shingles31_py
+from genome_deduplication_spark.oracle import normalize_py
 
 CFG = DedupConfig()
-
-
-def test_shingles_spark_matches_python(spark):
-    texts = ["hello world this is a test", "aaaaaaaaaaaa", "short", ""]
-    df = spark.createDataFrame([(t,) for t in texts], "text string")
-    rows = df.select(char_shingles31(F.col("text"), CFG.shingle_k).alias("s")).collect()
-    for t, r in zip(texts, rows):
-        assert set(r["s"]) == shingles31_py(t, CFG.shingle_k), t
 
 
 def _blocked(sets):

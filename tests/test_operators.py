@@ -14,13 +14,9 @@ from genome_deduplication_spark.operators.condense import (
 from genome_deduplication_spark.operators.connected_components import (
     connected_components,
 )
-from genome_deduplication_spark.operators.split import (
-    sample_exact_n,
-    train_dev_split,
-)
+from genome_deduplication_spark.operators.split import train_dev_split
 from genome_deduplication_spark.operators.suffix_array import (
     longest_common_substring_len,
-    longest_self_repeat_len,
 )
 
 
@@ -254,8 +250,6 @@ def test_suffix_array_lcs():
     a = "AAA " + shared + " BBB"
     b = "CCC " + shared + " DDD"
     assert longest_common_substring_len(a, b) == len(" " + shared + " ")
-    assert longest_self_repeat_len("abcabc") == 3
-    assert longest_self_repeat_len("abcd") == 0
 
 
 def test_train_dev_split_deterministic(spark):
@@ -310,14 +304,6 @@ def test_train_dev_split_has_no_global_window(spark):
         # ordering cols; an un-partitioned one starts with an order col
         first = args.split(",")[0].strip()
         assert not first.endswith(("ASC NULLS FIRST", "DESC NULLS LAST")), plan
-
-
-def test_sample_exact_n_repartition_invariant(spark):
-    df = spark.createDataFrame([(f"u{i}",) for i in range(200)], "url string")
-    a = {r["url"] for r in sample_exact_n(df, 25, seed=5).collect()}
-    b = {r["url"] for r in sample_exact_n(df.repartition(13), 25, seed=5).collect()}
-    assert len(a) == 25
-    assert a == b
 
 
 def test_unused_token_spans_maximal_merge(spark):

@@ -1,8 +1,7 @@
 """One normalize -> signature builder (functions/signatures.py).
 
-Every caller of the signature kernel — incremental's batch signatures,
-the tier report's near tier and the streaming ingest — must give the rows
-the pipeline's ``signatures`` stage gives for the same docs, and that
+Every caller of the signature kernel — incremental's batch signatures
+and the tier report's near tier — must give the rows the pipeline's ``signatures`` stage gives for the same docs, and that
 stage must run the kernel once per doc over text normalized once, in
 stage 1."""
 
@@ -15,11 +14,11 @@ from pyspark.sql import functions as F
 
 from genome_deduplication_spark.config import DedupConfig
 from genome_deduplication_spark.fixtures.pages import PAGES_SCHEMA, fx_mixed
+from genome_deduplication_spark.functions.hashing import hash128
+from genome_deduplication_spark.functions.text import normalize_text
 from genome_deduplication_spark.operators import tiers
-from genome_deduplication_spark.operators.exact_dedup import content_key
 from genome_deduplication_spark.operators.incremental import dedup_increment
 from genome_deduplication_spark.plans.pipeline import dedup_pipeline
-from genome_deduplication_spark.streaming.ingest import run_ingest
 
 CFG = DedupConfig()
 HTML_URL = "https://html.example/0"  # text only in its html
@@ -68,15 +67,17 @@ def _pick(rows, urls, cols):
     return {u: tuple(rows[u][c] for c in cols) if u in rows else None for u in urls}
 
 
-@pytest.mark.parametrize("caller", ["incremental", "tier_report", "streaming"])
+@pytest.mark.parametrize("caller", ["incremental", "tier_report"])
 def test_signature_callers_equal_pipeline(spark, tmp_path, monkeypatch,
                                           pipeline_run, caller):
     pages, want, _ = pipeline_run
     assert HTML_URL in want and SHORT_URL not in want
-    # the hash of normalized text is content_key of the raw text
+    # content_hash is the hash of the raw text, normalized once
     raw = {
         r["url"]: r["h"]
-        for r in pages.select("url", content_key(F.col("text")).alias("h")).collect()
+        for r in pages.select(
+            "url", hash128(normalize_text(F.col("text"))).alias("h")
+        ).collect()
     }
     with_text = sorted(u for u in want if u != HTML_URL)
     assert all(want[u]["content_hash"] == raw[u] for u in with_text)
@@ -92,7 +93,7 @@ def test_signature_callers_equal_pipeline(spark, tmp_path, monkeypatch,
         }
         cols = ("doc_key", "url", "content_hash", "minhash", "simhash")
         assert _pick(got, with_text, cols) == _pick(want, with_text, cols)
-    elif caller == "tier_report":
+    else:
         signed = []
         pairs = tiers.candidate_pairs
 
@@ -117,14 +118,6 @@ def test_signature_callers_equal_pipeline(spark, tmp_path, monkeypatch,
         assert len(got) == len({want[u]["content_hash"] for u in with_text})
         cols = ("minhash", "simhash")
         assert _pick(got, got, cols) == _pick(want, got, cols)
-    else:
-        src, out = str(tmp_path / "incoming"), str(tmp_path / "sigs")
-        pages.write.parquet(src)
-        stream = spark.readStream.schema(PAGES_SCHEMA).parquet(src)
-        q = run_ingest(stream, CFG, out, str(tmp_path / "ckpt"), dedup_exact=False)
-        q.awaitTermination(300)
-        got = {r["url"]: r.asDict() for r in spark.read.parquet(out).collect()}
-        assert got == want
 
 
 def test_signatures_stage_signs_once_over_normalized_text(pipeline_run):

@@ -4,7 +4,6 @@ from pyspark.sql import functions as F
 
 from genome_deduplication_spark.config import DedupConfig
 from genome_deduplication_spark.fixtures.pages import (
-    fx_exact,
     fx_internal_repeat,
     pages_df,
 )
@@ -12,10 +11,6 @@ from genome_deduplication_spark.operators.spans import (
     coverage_gaps,
     self_repeat_spans,
     self_repeat_spans_py,
-)
-from genome_deduplication_spark.plans.dataset_build import (
-    build_training_corpus,
-    extract_span_text,
 )
 from genome_deduplication_spark.plans.pipeline import dedup_pipeline
 
@@ -53,38 +48,6 @@ def test_coverage_gaps(spark):
     assert gaps == {("b", 0, 10), ("b", 20, 50)}  # 'a' fully tiled
 
 
-def test_extract_span_text(spark):
-    docs = spark.createDataFrame([("a", "hello world")], "url string, text string")
-    spans = spark.createDataFrame([("a", 6, 11)], "url string, start bigint, end bigint")
-    rows = extract_span_text(docs, spans).collect()
-    assert rows[0]["span_text"] == "world"
-
-
-def test_extract_span_text_continuation_byte_boundary(spark):
-    """Regression (round-3 ADVICE): maximal byte repeats CAN start on a
-    UTF-8 continuation byte — 'Ұ' (D2 B0) and 'а' (D0 B0) share their
-    second byte, so the repeated block is b'\\xb0' + b'Z'*200, starting
-    mid-character. Strict F.decode threw under ANSI and killed the job;
-    the lenient path must yield U+FFFD instead of crashing."""
-    text = "XҰ" + "Z" * 200 + " middle filler " + "Yа" + "Z" * 200
-    spans = self_repeat_spans_py(text, min_len=50)
-    assert spans
-    raw = text.encode("utf-8")
-    # the advisor's premise: at least one span boundary splits a character
-    assert any(
-        (raw[s] & 0xC0) == 0x80 or (e < len(raw) and (raw[e] & 0xC0) == 0x80)
-        for s, e in spans
-    )
-    df = spark.createDataFrame([("a", text)], "url string, text string")
-    sdf = spark.createDataFrame(
-        [("a", s, e) for s, e in spans], "url string, start bigint, end bigint"
-    )
-    rows = extract_span_text(df, sdf).collect()  # must not throw
-    for r in rows:
-        expect = raw[r["start"]:r["end"]].decode("utf-8", errors="replace")
-        assert r["span_text"] == expect
-
-
 def test_span_byte_contract_non_ascii(spark):
     """Span offsets are UTF-8 byte offsets end-to-end: spans found on
     multi-byte text slice back to the exact repeated block, and
@@ -98,9 +61,9 @@ def test_span_byte_contract_non_ascii(spark):
         [("a", s, e) for s, e in spans], "url string, start bigint, end bigint"
     )
     raw = text.encode("utf-8")
-    for r in extract_span_text(df, sdf).collect():
-        assert r["span_text"] == raw[r["start"]:r["end"]].decode("utf-8")
-        assert block.strip() in r["span_text"]
+    for s, e in spans:
+        # strict decode: the offsets land on character boundaries
+        assert block.strip() in raw[s:e].decode("utf-8")
     # gaps + spans must tile [0, octet_length)
     gaps = coverage_gaps(sdf, df).collect()
     covered = sum(e - s for s, e in spans) + sum(
@@ -108,21 +71,6 @@ def test_span_byte_contract_non_ascii(spark):
     )
     assert covered == len(raw)
 
-
-def test_build_training_corpus(spark):
-    corpus = fx_exact(seed=42, groups=10, copies=3)
-    df = pages_df(spark, corpus)
-    tables = dedup_pipeline(df, DedupConfig(), run_dir=None,
-                            enable_substring_pass=False)
-    out = build_training_corpus(df, tables["clusters"], dev_pct=0.2, max_dev=3)
-    rows = out.collect()
-    assert len(rows) == 10  # one canonical per cluster
-    assert sum(1 for r in rows if r["split"] == "dev") == 2  # 20% of 10
-    # deterministic shuffle key
-    out2 = build_training_corpus(df, tables["clusters"], dev_pct=0.2, max_dev=3)
-    assert {(r["url"], r["shuffle_key"]) for r in rows} == {
-        (r["url"], r["shuffle_key"]) for r in out2.collect()
-    }
 
 def test_four_way_spans_tile_corpus(spark):
     """Reference 4-way output parity (code/dedup2.py:17-31): sample/masked/
@@ -165,63 +113,3 @@ def test_four_way_spans_tile_corpus(spark):
     # every kind present on this fixture
     kinds = {r["kind"] for r in spans.select("kind").distinct().collect()}
     assert kinds == {"sample", "masked", "ignored", "ambiguous"}
-
-
-def test_write_training_shards_roundtrip_and_determinism(spark, tmp_path):
-    """Shard export: every row lands in exactly one shard, one file per
-    shard directory, manifest counts match, and the assignment is
-    deterministic across re-exports."""
-    import glob
-    import json
-    import os
-
-    from genome_deduplication_spark.sources.sinks import write_training_shards
-
-    df = spark.createDataFrame(
-        [(i, f"text {i}") for i in range(500)], "doc_id bigint, text string"
-    )
-    out = str(tmp_path / "shards")
-    m = write_training_shards(
-        df, out, rows_per_shard=100, key_col="doc_id", fmt="json", seed=7
-    )
-    assert m["n_shards"] == 5 and m["rows"] == m["rows_read_back"] == 500
-    assert sum(m["per_shard_rows"].values()) == 500
-    for sid in m["per_shard_rows"]:
-        files = [
-            f
-            for f in glob.glob(os.path.join(out, "data", f"shard_id={sid}", "*"))
-            if not os.path.basename(f).startswith(("_", "."))
-        ]
-        assert len(files) == 1, (sid, files)
-    back = spark.read.json(os.path.join(out, "data"))
-    assert back.count() == 500
-    assert back.select("doc_id").distinct().count() == 500
-
-    out2 = str(tmp_path / "shards2")
-    m2 = write_training_shards(
-        df.repartition(13), out2, rows_per_shard=100, key_col="doc_id", fmt="json",
-        seed=7,
-    )
-    assert m2["per_shard_rows"] == m["per_shard_rows"]
-    assign1 = {
-        r["doc_id"]: r["shard_id"] for r in back.select("doc_id", "shard_id").collect()
-    }
-    assign2 = {
-        r["doc_id"]: r["shard_id"]
-        for r in spark.read.json(os.path.join(out2, "data"))
-        .select("doc_id", "shard_id")
-        .collect()
-    }
-    assert assign1 == assign2  # row-level assignment, not just counts
-    with open(os.path.join(out, "shards_manifest.json")) as f:
-        assert json.load(f)["per_shard_rows"] == m["per_shard_rows"]
-
-
-def test_write_training_shards_empty_input(spark, tmp_path):
-    from genome_deduplication_spark.sources.sinks import write_training_shards
-
-    df = spark.createDataFrame([], "doc_id bigint, text string")
-    m = write_training_shards(
-        df, str(tmp_path / "empty"), rows_per_shard=10, key_col="doc_id"
-    )
-    assert m["rows"] == m["n_shards"] == 0 and m["per_shard_rows"] == {}
