@@ -11,7 +11,9 @@ but additionally:
     plans/r06/<query>_<tag>.txt  (EXPLAIN_TAG=before|after env);
   * optionally repeats each query (BENCH_EXTRA_REPS) for warm floors.
 
-Output: one JSON line, same shape as bench.py's `queries` dict; with
+Output: one JSON line, same shape as bench.py's `queries` dict, plus
+``codegen_compiles``: the generated classes each rep of each query
+compiled (a warm rep should compile none; see session.py). With
 BENCH_EXTRA_PIPELINE=1 it also holds the pipeline run's report (the
 metrics rows, see plans/pipeline.py) under ``pipeline_report``.
 """
@@ -45,6 +47,8 @@ def main() -> None:
         shuffle_partitions=max(cpus, 8),
     )
     sc = spark.sparkContext
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiled = codegen.METRIC_COMPILATION_TIME().getCount
 
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     spark.read.parquet(f"{sf_dir}/documents.parquet").count()
@@ -79,15 +83,21 @@ def main() -> None:
         headline = [q for q in headline if q in keep]
     qs = entrymod.queries()
     timings: dict[str, list] = {}
-    out: dict = {"queries": timings, "app_id": sc.applicationId}
+    compiles: dict[str, list] = {}
+    out: dict = {
+        "queries": timings,
+        "codegen_compiles": compiles,
+        "app_id": sc.applicationId,
+    }
     for name in headline:
-        timings[name] = []
+        timings[name], compiles[name] = [], []
         for rep in range(reps):
             sc.setJobDescription(f"q:{name}:rep{rep}")
-            t0 = time.time()
+            c0, t0 = compiled(), time.time()
             df = qs[name](spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             timings[name].append(round(time.time() - t0, 3))
+            compiles[name].append(compiled() - c0)
             if rep == 0 and tag:
                 os.makedirs("plans/r06", exist_ok=True)
                 buf = io.StringIO()
@@ -108,9 +118,10 @@ def main() -> None:
         pages.count()
         cfg = DedupConfig()
         timings["dedup_pipeline_bench"] = []
+        compiles["dedup_pipeline_bench"] = []
         for rep in range(reps):
             sc.setJobDescription(f"q:dedup_pipeline_bench:rep{rep}")
-            t0 = time.time()
+            c0, t0 = compiled(), time.time()
             tables = dedup_pipeline(
                 pages, cfg, run_dir=None, enable_substring_pass=True
             )
@@ -118,6 +129,7 @@ def main() -> None:
             timings["dedup_pipeline_bench"].append(
                 round(time.time() - t0, 3)
             )
+            compiles["dedup_pipeline_bench"].append(compiled() - c0)
             out["pipeline_report"] = tables["report"]
         sc.setJobDescription(None)
 

@@ -3,7 +3,8 @@
 Local mode is the test harness; the conf defaults are chosen to also be the
 right starting point on a real multi-executor cluster (AQE on, skew-join
 splitting on, Arrow for the pandas-UDF kernels, Python workers under the
-engine's ``worker_daemon``, so executors must be able to import this package).
+engine's ``worker_daemon``, so executors must be able to import this package,
+and a codegen cache that holds the engine's generated classes).
 """
 
 from __future__ import annotations
@@ -59,6 +60,15 @@ def get_spark(
             "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
             str(256 * 1024),
         )
+        # Compile each generated class once per session. One mirror_crawl op
+        # needs about 165 distinct classes, as does one pass of the ten
+        # benchmark queries, so the default 100-entry LRU cache never hit
+        # on a warm rerun. Without the stage id in class names, identical
+        # code keeps its cache key when AQE re-plans stages in another
+        # order. Cost: stack traces and profiles show `GeneratedIterator`
+        # without its stage suffix (`explain` still shows `*(n)`).
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
