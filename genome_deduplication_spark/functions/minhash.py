@@ -11,7 +11,10 @@ so the identical arithmetic runs in four places: the cache-blocked numpy
 kernel (functions/signatures.minhash_simhash_blocked) inside the one-pass
 document UDF, the min-aggregate expressions of the ``minhash_signatures``
 entry query, the DuckDB oracle SQL, and :func:`minhash_py` here, the
-pure-Python twin every other form is tested against.
+pure-Python twin every other form is tested against. The kernel reduces
+mod p with one shift/add fold and one wrap-around minimum instead of a
+division: a, b and every shingle s are at most p-1, so a*s+b <= p*(p-1)
+and the fold leaves a value below 2p.
 
 The coefficient arrays ride into executors via closure capture — the
 pandas-UDF equivalent of broadcasting the permutation matrix

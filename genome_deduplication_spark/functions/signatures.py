@@ -5,9 +5,10 @@ the one normalize -> signature builder every caller of it goes through
 Running MinHash and SimHash as separate pandas UDFs deserializes the (large)
 shingle column twice and boxes every output value into Python ints via
 tolist(); fused, the shingle batch crosses the Arrow boundary once and all
-outputs stay numpy until Arrow serialization. Same arithmetic as the
+outputs stay numpy until Arrow serialization. Same values as the
 pure-Python twins functions.minhash.minhash_py and
-functions.simhash.simhash_py (tests/test_kernels.py checks them equal).
+functions.simhash.simhash_py (tests/test_kernels.py checks them equal):
+MinHash reduces with one fold, SimHash counts two bits per reduceat.
 """
 
 from __future__ import annotations
@@ -27,36 +28,37 @@ from genome_deduplication_spark.functions.text import (
     normalize_text,
 )
 
-_MASK = np.uint64((1 << 64) - 1)
 _M31 = np.uint64(MERSENNE31)
-# rows per cache block: keep a block's flat segment (~row_len*BLOCK_ROWS*8B)
-# plus three work buffers inside L2 so the 128-perm + 64-bit inner loops
+_LANE_BITS = np.uint64(0x0000000100000001)  # bit 0 of each 32-bit lane
+_LANE_MASK = np.uint64(0xFFFFFFFF)
+# shingles per cache block (whole rows): keep a block's flat segment (8 B a
+# shingle) plus two work buffers inside L2 so the 128-perm + 64-bit inner loops
 # read cache, not DRAM (unblocked, the kernel is memory-bandwidth-bound and
 # stops scaling past ~8 cores — measured 3.5s -> 9.1s per task at 32 workers)
 _BLOCK_ELEMS = 32_768
 
 
 def _splitmix64(x: np.ndarray) -> np.ndarray:
-    x = (x + np.uint64(0x9E3779B97F4A7C15)) & _MASK
-    x = ((x ^ (x >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)) & _MASK
-    x = ((x ^ (x >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)) & _MASK
+    # uint64 array arithmetic wraps mod 2**64, so no mask is needed
+    x = x + np.uint64(0x9E3779B97F4A7C15)
+    x = (x ^ (x >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
+    x = (x ^ (x >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
     return x ^ (x >> np.uint64(31))
 
 
-def _mersenne_mod_inplace(x: np.ndarray, out: np.ndarray, tmp: np.ndarray) -> np.ndarray:
-    """out = x mod (2**31-1) for x < 2**62 — two shift/add folds + one
-    branch-free conditional subtract; ~5x cheaper than integer division
-    and bit-exact equal to `%` (property-tested)."""
-    np.bitwise_and(x, _M31, out=out)
-    np.right_shift(x, np.uint64(31), out=tmp)
-    out += tmp
-    np.bitwise_and(out, _M31, out=tmp)
-    out >>= np.uint64(31)
-    tmp += out  # tmp <= p + 1
-    # tmp - p wraps to a huge uint64 when tmp < p, so the minimum is the
+def _mersenne_mod_inplace(y: np.ndarray, out: np.ndarray) -> np.ndarray:
+    """y mod (2**31-1) for y <= p*(p-1), overwriting y: the kernel's range,
+    since a <= p-1, b <= p-1 and every shingle s <= p-1 bound a*s+b by
+    p*(p-1). One shift/add fold leaves z = (y & p) + (y >> 31) <= 2p-2 and
+    congruent to y (2**31 == 1 mod p), so one conditional subtract reduces
+    it; bit-exact equal to `%` on that range (property-tested)."""
+    np.right_shift(y, np.uint64(31), out=out)
+    y &= _M31
+    y += out
+    # z - p wraps to a huge uint64 when z < p, so the minimum is the
     # reduced value either way (no boolean mask, no fancy index)
-    np.subtract(tmp, _M31, out=out)
-    np.minimum(out, tmp, out=out)
+    np.subtract(y, _M31, out=out)
+    np.minimum(out, y, out=out)
     return out
 
 
@@ -72,8 +74,9 @@ def minhash_simhash_blocked(
     """Cache-blocked MinHash + SimHash over batch-flattened shingle sets.
 
     flat: uint64 shingle hashes (< 2**31-1) of all rows concatenated;
-    starts/lengths: per-row offsets. Returns (sigs[n_rows, num_perm] int64,
-    simhash[n_rows] int64). Identical output to the naive per-perm loop.
+    starts/lengths: per-row offsets; bits <= 64. Returns (sigs[n_rows,
+    num_perm] int32, simhash[n_rows] int64). Identical output to the naive
+    per-perm, per-bit loop.
     """
     n_rows = len(starts)
     # int32 output: every value < 2**31-1 fits, and the signature matrix is
@@ -84,7 +87,7 @@ def minhash_simhash_blocked(
     au = a.astype(np.uint64)
     bu = b.astype(np.uint64)
     r0 = 0
-    prod = buf = tmp = None
+    prod = buf = None
     while r0 < n_rows:
         # grow the block until its flat segment exceeds _BLOCK_ELEMS
         r1 = r0
@@ -99,22 +102,26 @@ def minhash_simhash_blocked(
         if prod is None or len(prod) != len(seg):
             prod = np.empty(len(seg), dtype=np.uint64)
             buf = np.empty(len(seg), dtype=np.uint64)
-            tmp = np.empty(len(seg), dtype=np.uint64)
         for j in range(num_perm):
             np.multiply(seg, au[j], out=prod)
             prod += bu[j]
-            m = _mersenne_mod_inplace(prod, buf, tmp)
+            m = _mersenne_mod_inplace(prod, buf)
             sigs[r0:r1, j] = np.minimum.reduceat(m.view(np.int64), segstarts)
-        # SimHash on the same (cache-hot) segment
+        # SimHash on the same (cache-hot) segment, bits `bit` and `bit+32`
+        # summed in the two 32-bit lanes of one uint64 (a row has < 2**32
+        # shingles, so a lane cannot carry into the other)
         fu = _splitmix64(seg)
-        counts = lengths[r0:r1]
+        half = lengths[r0:r1].astype(np.uint64) >> np.uint64(1)
         sim = np.zeros(r1 - r0, dtype=np.uint64)
-        for bit in range(bits):
-            ones = np.add.reduceat(
-                ((fu >> np.uint64(bit)) & np.uint64(1)).astype(np.int64),
-                segstarts,
-            )
-            sim |= (ones * 2 > counts).astype(np.uint64) << np.uint64(bit)
+        for bit in range(min(bits, 32)):
+            np.right_shift(fu, np.uint64(bit), out=prod)
+            prod &= _LANE_BITS
+            ones = np.add.reduceat(prod, segstarts)
+            # ones * 2 > n  <=>  ones > n // 2
+            sim |= ((ones & _LANE_MASK) > half).astype(np.uint64) << np.uint64(bit)
+            if bit + 32 < bits:
+                hi = (ones >> np.uint64(32)) > half
+                sim |= hi.astype(np.uint64) << np.uint64(bit + 32)
         sims[r0:r1] = sim
         r0 = r1
     return sigs, sims.astype(np.int64)

@@ -7,8 +7,9 @@ to cheaply confirm LSH candidate pairs before any text is re-read.
 
 The engine computes it in the cache-blocked numpy kernel
 (functions/signatures.minhash_simhash_blocked: one ``add.reduceat`` pass
-per bit over the batch-flattened shingle array); :func:`simhash_py` is its
-pure-Python twin.
+per bit pair over the batch-flattened shingle array, bits ``i`` and
+``i+32`` counted in the two 32-bit lanes of one uint64);
+:func:`simhash_py` is its pure-Python twin.
 """
 
 from __future__ import annotations

@@ -7,9 +7,9 @@ every downstream shingle/signature stage consumes. The per-row invariant of
 BASELINE.json:input_hint (byte-identical extracted text per url) holds
 because the transform is pure string algebra — no locale, no rand.
 
-Each Spark expression has a DuckDB-SQL twin (``*_duckdb_sql``) so the
-driver's oracle recomputes the identical value. DuckDB's ``regexp_replace``
-is first-match-only by default, hence the explicit ``'g'`` flag there.
+The driver's oracle recomputes the normalize in DuckDB SQL
+(``__spark_entry__._NORM_DUCK``). DuckDB's ``regexp_replace`` is
+first-match-only by default, hence the explicit ``'g'`` flag there.
 """
 
 from __future__ import annotations
@@ -18,10 +18,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # --- normalization (P1) ----------------------------------------------------
-
-NORMALIZE_SPARK_SQL = "lower(trim(regexp_replace({c}, '\\\\s+', ' ')))"
-NORMALIZE_DUCKDB_SQL = "lower(trim(regexp_replace({c}, '\\s+', ' ', 'g')))"
-
 
 def normalize_text(col: Column) -> Column:
     """Collapse whitespace runs, trim, lowercase."""

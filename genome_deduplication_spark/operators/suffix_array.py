@@ -5,12 +5,11 @@ masked spans, code/dedup2.py:18,235-246): two documents that share one long
 verbatim substring are duplicates-in-part even when whole-document Jaccard
 is below threshold (a press release quoted inside distinct articles).
 
-Physical shape: the candidate pair list joins back to text ONCE
-(sort-merge join on id), then ``applyInPandas`` per bounded group runs an
-O(n log n) suffix-array (prefix-doubling, pure numpy) over the concatenation
-of the two docs and scans adjacent suffix pairs from different docs for the
-longest cross-document LCP. Group sizes are bounded by the LSH bucket caps,
-so no group explodes an executor.
+Physical shape: the candidate pair list joins back to text ONCE, then
+``mapInPandas`` runs, per pair, an O(n log^2 n) suffix array
+(prefix-doubling, pure numpy) over the concatenation of the two docs and
+walks only the SA-adjacent suffix pairs from different docs for the
+longest cross-document LCP.
 
 The same kernel, run on a single document against itself, finds internal
 repeats — the reference's internal-vs-global repeat discrimination
@@ -26,37 +25,42 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
+def _dense_ranks(s: np.ndarray) -> np.ndarray:
+    """0-based dense ranks of a sorted array (equal values, equal rank)."""
+    out = np.zeros(len(s), dtype=np.int64)
+    np.cumsum(s[1:] != s[:-1], out=out[1:])
+    return out
+
+
 def _suffix_array_ranks(
     data: np.ndarray,
 ) -> tuple[np.ndarray, list[tuple[int, np.ndarray]]]:
     """Prefix-doubling suffix array (O(n log^2 n)) + rank history.
 
-    Returns (sa, ranks) where ranks is [(width, r)] and r[i] == r[j] iff
-    data[i:i+width] == data[j:j+width] — the sparse table the vectorized
-    LCP walk consumes (no per-character Python loop anywhere).
+    Returns (sa, ranks) where ranks is [(width, r)], r has n + 1 entries and
+    r[i] == r[j] for i != j iff data[i:i+width] == data[j:j+width] with both
+    windows inside the data: a window that runs past the end ranks alone,
+    and r[n] = -1 equals no rank. That is the sparse table the vectorized
+    LCP walk consumes (no per-character Python loop anywhere). The sorts
+    need no stability: ranks come from the sorted key values alone.
     """
     n = len(data)
     if n == 0:
         return np.empty(0, dtype=np.int64), []
-    order = np.argsort(data, kind="stable")
+    order = np.argsort(data)
     r = np.empty(n, dtype=np.int64)
-    r[order] = np.cumsum(
-        np.concatenate(([0], (np.diff(data[order]) != 0).astype(np.int64)))
-    )
-    ranks: list[tuple[int, np.ndarray]] = [(1, r.astype(np.int32))]
+    r[order] = _dense_ranks(data[order])
+    ranks: list[tuple[int, np.ndarray]] = [(1, np.append(r, -1).astype(np.int32))]
     k = 1
     while k < n:
-        key2 = np.full(n, -1, dtype=np.int64)
-        key2[: n - k] = r[k:]
-        comp = r * (n + 1) + (key2 + 1)
-        order = np.argsort(comp, kind="stable")
-        newr = np.empty(n, dtype=np.int64)
-        newr[order] = np.cumsum(
-            np.concatenate(([0], (np.diff(comp[order]) != 0).astype(np.int64)))
-        )
-        r = newr
+        # key (r[i], r[i+k]), with r[i+k] = -1 past the end, in one int64
+        comp = r * (n + 1)
+        comp[: n - k] += r[k:] + 1
+        order = np.argsort(comp)
+        r = np.empty(n, dtype=np.int64)
+        r[order] = _dense_ranks(comp[order])
         k *= 2
-        ranks.append((k, r.astype(np.int32)))
+        ranks.append((k, np.append(r, -1).astype(np.int32)))
         if r[order[-1]] == n - 1:
             break
     sa = np.empty(n, dtype=np.int64)
@@ -64,57 +68,34 @@ def _suffix_array_ranks(
     return sa, ranks
 
 
-def suffix_array(data: np.ndarray) -> np.ndarray:
-    """Prefix-doubling suffix array over an int array (O(n log^2 n))."""
-    return _suffix_array_ranks(data)[0]
-
-
-def _lcp_from_ranks(
-    n: int, sa: np.ndarray, ranks: list[tuple[int, np.ndarray]]
+def _lcp_walk(
+    i: np.ndarray, j: np.ndarray, ranks: list[tuple[int, np.ndarray]]
 ) -> np.ndarray:
-    """Vectorized LCP of adjacent SA entries via the doubling rank table.
+    """Longest common prefix of the suffixes at i[t] != j[t], for every t.
 
-    Classic sparse-table walk, batched over all n-1 adjacent pairs at once:
-    descend widths; wherever rank_w[i] == rank_w[j] the pair shares a
-    w-prefix — advance both cursors by w and accumulate. O(n log n) numpy,
-    replacing the one-char-per-Python-iteration Kasai loop that dominated
-    the substring stage at scale.
+    Classic sparse-table walk over the doubling rank table, batched over
+    all pairs at once: descend widths; wherever rank_w[i] == rank_w[j] the
+    pair shares a w-prefix — advance both cursors by w. The rank table's
+    end rules make any bounds mask unnecessary. O(log n) numpy passes over
+    the pairs, replacing the one-char-per-Python-iteration Kasai loop that
+    dominated the substring stage at scale.
     """
-    if n < 2:
-        return np.zeros(n, dtype=np.int64)
-    i = sa[1:].copy()
-    j = sa[:-1].copy()
-    h = np.zeros(n - 1, dtype=np.int64)
+    start = i
+    i, j = i.copy(), j.copy()
     for w, r in reversed(ranks):
-        alive = (i + w <= n) & (j + w <= n)
-        if not alive.any():
-            continue
-        eq = alive.copy()
-        eq[alive] = r[i[alive]] == r[j[alive]]
-        h[eq] += w
-        i[eq] += w
-        j[eq] += w
-    lcp = np.zeros(n, dtype=np.int64)
-    lcp[1:] = h
-    return lcp
-
-
-def lcp_array(data: np.ndarray, sa: np.ndarray) -> np.ndarray:
-    """LCP of adjacent suffixes in SA order (vectorized, see _lcp_from_ranks).
-
-    Recomputes the rank table from `data` (the passed sa is only used for
-    adjacency order) — callers that need both should use
-    suffix_array_and_lcp, which builds the rank table once."""
-    _, ranks = _suffix_array_ranks(data)
-    return _lcp_from_ranks(len(data), sa, ranks)
+        step = (r[i] == r[j]) * w
+        i += step
+        j += step
+    return i - start
 
 
 def suffix_array_and_lcp(data: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """(sa, lcp) from ONE prefix-doubling pass — the suffix_array() +
-    lcp_array() call sequence runs the O(n log^2 n) doubling twice; every
-    hot kernel below uses this combined entry point instead."""
+    """(sa, lcp) from ONE prefix-doubling pass; lcp[t] is the common prefix
+    of the suffixes at sa[t-1] and sa[t] (lcp[0] = 0)."""
     sa, ranks = _suffix_array_ranks(data)
-    return sa, _lcp_from_ranks(len(data), sa, ranks)
+    lcp = np.zeros(len(data), dtype=np.int64)
+    lcp[1:] = _lcp_walk(sa[1:], sa[:-1], ranks)
+    return sa, lcp
 
 
 def longest_common_substring_len(a: str, b: str) -> int:
@@ -127,12 +108,15 @@ def longest_common_substring_len(a: str, b: str) -> int:
     data = np.concatenate([xa, sep, xb])
     na = len(xa)
     sa, ranks = _suffix_array_ranks(data)
-    lcp = _lcp_from_ranks(len(data), sa, ranks)
-    # adjacent suffixes from different docs (separator belongs to neither)
+    # the LCS is the longest LCP of SA-adjacent suffixes from different
+    # docs (the separator belongs to neither): walk only those pairs
     from_a = sa < na
     from_b = sa > na
-    cross = (from_a[1:] & from_b[:-1]) | (from_b[1:] & from_a[:-1])
-    return int(lcp[1:][cross].max()) if cross.any() else 0
+    cross = np.flatnonzero(
+        (from_a[1:] & from_b[:-1]) | (from_b[1:] & from_a[:-1])
+    )
+    h = _lcp_walk(sa[cross + 1], sa[cross], ranks)
+    return int(h.max()) if len(h) else 0
 
 
 def pairs_from_anchor_rows(

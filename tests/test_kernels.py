@@ -123,8 +123,8 @@ def test_doc_signature_udf_matches_python_twins(spark):
 
 
 def test_mersenne_mod_equals_modulo():
-    """The fast-fold reduction must be bit-exact vs `%` over the full
-    (a*h+b) input range, including edge values."""
+    """The one-fold reduction must be bit-exact vs `%` over the kernel's
+    whole (a*s+b) range [0, p*(p-1)], including edge values."""
     import numpy as np
 
     from genome_deduplication_spark.config import MERSENNE31 as P
@@ -133,22 +133,63 @@ def test_mersenne_mod_equals_modulo():
     )
 
     rng = random.Random(31)
-    edge = [0, 1, P - 1, P, P + 1, 2 * P, (1 << 62) - 1, (1 << 61), 1 << 31]
-    # the folds leave values in [0, p]: probe the wrap-around subtract at
-    # neighbours of multiples of p across the range, up to the largest
-    # multiple below 2**62, and the all-ones 31-bit halves
-    top = ((1 << 62) - 1) // P
-    for k in (3, 1 << 20, 1 << 31, top - 1, top):
+    top = P * (P - 1)  # a = p-1, s = p-1, b = p-1 gives exactly this
+    edge = [0, 1, P - 2, P - 1, P, P + 1, 2 * P, 1 << 31, top - 1, top]
+    # the fold leaves z in [0, 2p-2]: probe the wrap-around subtract at
+    # neighbours of multiples of p across the range, up to the top one
+    for k in (2, 3, 1 << 20, 1 << 30, P - 3, P - 2, P - 1):
         edge += [k * P - 1, k * P, k * P + 1]
-    edge += [(P << 31) | P, (P << 31) | (P - 1), ((P - 1) << 31) | P]
-    rand = [rng.randrange(0, 1 << 62) for _ in range(10000)]
+    # largest 31-bit low half (y & p == p) and largest high half
+    edge += [((P - 2) << 31) | P, ((P - 2) << 31) | (P - 1), (1 << 62) - (1 << 33)]
+    edge = [y for y in edge if 0 <= y <= top]
+    rand = [rng.randrange(0, top + 1) for _ in range(10000)]
     x = np.array(edge + rand, dtype=np.uint64)
-    out = np.empty_like(x)
-    tmp = np.empty_like(x)
-    got = _mersenne_mod_inplace(x.copy(), out, tmp)
+    got = _mersenne_mod_inplace(x.copy(), np.empty_like(x))
     want = x % np.uint64(P)
     assert (got == want).all()
     assert (got < P).all()
+
+
+def test_blocked_kernel_at_coefficient_and_shingle_edges():
+    """The one-fold proof's edges: a = p-1, b = p-1 and s in {0, 1, p-2,
+    p-1}, in rows that straddle a cache block, for MinHash and for SimHash
+    at 64 bits and at widths whose high 32-bit lane is partly or wholly
+    unused."""
+    import numpy as np
+
+    from genome_deduplication_spark.config import MERSENNE31 as P
+    from genome_deduplication_spark.functions import signatures as S
+
+    a_cfg, b_cfg = CFG.minhash_coefficients()
+    a_edge = [1, 2, P - 2, P - 1]
+    b_edge = [0, 1, P - 2, P - 1]
+    a_list = [x for x in a_edge for _ in b_edge] + a_cfg[:16]
+    b_list = [y for _ in a_edge for y in b_edge] + b_cfg[:16]
+
+    class EdgeCfg(DedupConfig):
+        def minhash_coefficients(self):
+            return a_list, b_list
+
+    cfg = EdgeCfg(num_perm=32, bands=8, rows_per_band=4)
+    rng = random.Random(37)
+    edge_s = [0, 1, P - 2, P - 1]
+    rows = []
+    for n in (3, S._BLOCK_ELEMS - 5, 10, S._BLOCK_ELEMS + 7, 1):
+        body = rng.sample(range(2, P - 2), max(0, n - len(edge_s)))
+        rows.append(sorted(set(body + edge_s[: min(n, len(edge_s))])))
+    rows.append([P - 1])
+    lengths = np.array([len(r) for r in rows])
+    flat = np.concatenate([np.array(r, dtype=np.uint64) for r in rows])
+    starts = np.concatenate(([0], np.cumsum(lengths)[:-1]))
+    for bits in (64, 40, 16):
+        sigs, sims = S.minhash_simhash_blocked(
+            flat, starts, lengths, np.array(a_list, dtype=np.int64),
+            np.array(b_list, dtype=np.int64), cfg.num_perm, bits,
+        )
+        for i, r in enumerate(rows):
+            if bits == 64:
+                assert sigs[i].tolist() == minhash_py(r, cfg), i
+            assert int(sims[i]) == simhash_py(r, bits), (i, bits)
 
 
 def test_blocked_kernel_matches_python_across_block_boundaries():

@@ -252,6 +252,74 @@ def test_suffix_array_lcs():
     assert longest_common_substring_len(a, b) == len(" " + shared + " ")
 
 
+def _lcs_dp(a: bytes, b: bytes) -> int:
+    """O(n*m) dynamic-programming twin of the longest common substring."""
+    best = 0
+    prev = [0] * (len(b) + 1)
+    for x in a:
+        cur = [0] * (len(b) + 1)
+        for j, y in enumerate(b, 1):
+            if x == y:
+                cur[j] = prev[j - 1] + 1
+                best = max(best, cur[j])
+        prev = cur
+    return best
+
+
+def test_lcs_matches_dp_twin():
+    """Seeded differential test of the suffix-array LCS (UTF-8 bytes)
+    against the DP twin: 2-letter alphabets (long repeats, deep doubling),
+    multibyte text, empty, identical and nested strings."""
+    rng = random.Random(23)
+
+    def rand(alphabet: str, n: int) -> str:
+        return "".join(rng.choice(alphabet) for _ in range(n))
+
+    cases = [("", ""), ("", "ab"), ("ab", ""), ("a", "a"), ("a", "b")]
+    for _ in range(25):
+        cases.append((rand("ab", rng.randint(1, 120)), rand("ab", rng.randint(1, 120))))
+    for _ in range(10):
+        cases.append(
+            (rand("aé€𝄞 ", rng.randint(1, 60)), rand("é€𝄞x ", rng.randint(1, 60)))
+        )
+    for _ in range(5):
+        s = rand("abc", rng.randint(1, 150))
+        i = rng.randrange(len(s))
+        j = rng.randint(i, len(s))
+        cases += [(s, s), (s, s[i:j]), (s[i:j], s), ("ab" * 40, s)]
+    for a, b in cases:
+        want = _lcs_dp(a.encode("utf-8"), b.encode("utf-8"))
+        assert longest_common_substring_len(a, b) == want, (a, b)
+
+
+def test_suffix_array_and_lcp_matches_sorted_suffixes():
+    """(sa, lcp) equals brute force: sorted suffixes and the common prefix
+    of each adjacent pair (the self-repeat spans read both)."""
+    import numpy as np
+
+    from genome_deduplication_spark.operators.suffix_array import (
+        suffix_array_and_lcp,
+    )
+
+    rng = random.Random(29)
+    datas = [[], [5], [1, 1, 1, 1], [256, 0, 256]]
+    for alphabet, count in ((2, 20), (257, 5)):
+        for _ in range(count):
+            datas.append([rng.randrange(alphabet) for _ in range(rng.randint(2, 200))])
+    for d in datas:
+        sa, lcp = suffix_array_and_lcp(np.array(d, dtype=np.int64))
+        want_sa = sorted(range(len(d)), key=lambda i: d[i:])
+        want_lcp = [0] if d else []
+        for t in range(1, len(d)):
+            x, y = d[want_sa[t - 1]:], d[want_sa[t]:]
+            h = 0
+            while h < min(len(x), len(y)) and x[h] == y[h]:
+                h += 1
+            want_lcp.append(h)
+        assert sa.tolist() == want_sa, d
+        assert lcp.tolist() == want_lcp, d
+
+
 def test_train_dev_split_deterministic(spark):
     df = spark.createDataFrame([(f"u{i}",) for i in range(100)], "url string")
     s1 = train_dev_split(df, 0.2, 10, seed=123)
@@ -609,3 +677,50 @@ def test_verify_pairs_plans_shuffled_hash_join(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "ShuffledHashJoin" in plan, plan
     assert "BroadcastExchange" not in plan and "BroadcastHashJoin" not in plan, plan
+
+
+def test_anchor_pairs_prune_singletons_before_member_join(spark):
+    """Plan guard: pairs_from_anchor_rows drops anchors held by fewer than
+    2 (or more than max_bucket_size) documents with a map-side-combined
+    count BEFORE the member join, so singleton anchors, the overwhelming
+    majority, never reach the join or the collect_list above it."""
+    import re
+
+    from genome_deduplication_spark.operators.suffix_array import (
+        pairs_from_anchor_rows,
+    )
+
+    anchors = spark.createDataFrame(
+        [(f"d{i % 7}", i % 5) for i in range(40)], "url string, anchor long"
+    )
+    plan = (
+        pairs_from_anchor_rows(anchors, 50, 2)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    joins = [
+        op
+        for op in ("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin")
+        if _plan_subtree(plan, op)
+    ]
+    assert joins, plan
+    below = _plan_subtree(plan, joins[0])
+    prune = [
+        i
+        for i, line in enumerate(below)
+        if re.search(r"Filter \(\(df#\d+L >= 2\) AND \(df#\d+L <= 50\)\)", line)
+    ]
+    assert prune, plan
+    # the prune filters the per-anchor count itself ...
+    assert re.search(
+        r"HashAggregate\(keys=\[anchor#\d+L\], functions=\[count\(1\)\]",
+        below[prune[0] + 1],
+    ), plan
+    # ... which is combined map-side, ahead of its exchange
+    assert any("partial_count(1)" in line for line in below[prune[0] + 1 :]), plan
+    assert not any("collect_list" in line for line in below), plan
+    # the member arrays are collected above the join (a tree string lists
+    # a parent before its children)
+    assert "collect_list" in plan, plan
+    assert plan.index("collect_list") < plan.index(joins[0]), plan
